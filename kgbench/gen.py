@@ -1,4 +1,4 @@
-"""Seeded input generators for the three benchmark workloads.
+"""Seeded input generators for the two benchmark workloads.
 
 Every generator is a pure function of ``seed``: the same seed gives
 byte-identical parquet files, and a different seed changes content (which
@@ -408,6 +408,15 @@ def _corpus_kg(seed: int) -> tuple[dict[str, pa.Table], dict]:
 GENERATORS = {"kg_build": _kg_build, "corpus_kg": _corpus_kg}
 
 
+def inputs_dir(root: str, workload: str, seed: int) -> str:
+    """The cache directory of one workload's inputs for one seed under
+    ``root``. Its name holds a digest of this module's source, so a changed
+    generator writes fresh inputs instead of reusing old ones."""
+    with open(__file__, "rb") as f:
+        tag = hashlib.sha256(f.read()).hexdigest()[:12]
+    return os.path.join(root, f"{workload}-s{seed}-{tag}")
+
+
 def generate(workload: str, seed: int, out_dir: str) -> dict:
     """Write the workload's inputs under ``out_dir`` (one parquet file per
     table, plus ``expect.json``) and return the expectations. Idempotent:
@@ -433,7 +442,7 @@ def generate(workload: str, seed: int, out_dir: str) -> dict:
 def digest(out_dir: str) -> str:
     """sha256 over every generated file, in name order."""
     h = hashlib.sha256()
-    for name in sorted(n for n in os.listdir(out_dir) if n != "reference.json"):
+    for name in sorted(n for n in os.listdir(out_dir) if not n.startswith("reference")):
         h.update(name.encode())
         with open(os.path.join(out_dir, name), "rb") as f:
             h.update(f.read())

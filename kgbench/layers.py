@@ -55,8 +55,6 @@ UNITS.update({
     "trace.overhead_s": "s",
     "trace.span_coverage": "ratio",
 })
-# the metrics where a larger value is the better one; all others: lower
-HIGHER_IS_BETTER = {"full_build.pool_parallelism", "trace.span_coverage"}
 
 
 def _critical_path(op_spans) -> float:

@@ -1,13 +1,14 @@
 """Benchmark entry point.
 
-    python3 kgbench/run.py --workload kg_build --seed 1 --seconds 25 --trace 0
+    python3 kgbench/run.py --workload kg_build --seed 1 --seconds 20 --trace 0
 
 Run from the repository root. One invocation generates (or reuses) the
 seeded inputs of one workload, starts one ``local[<nproc>]`` session, runs
-one cold op and then the warm ops that fit in ``--seconds`` (at least one),
-checks every op's output, and prints one JSON object as its last line of
-standard output. ``--trace 1`` instead runs one traced op after the cold
-one and prints the per-layer metrics.
+one cold op and then as many warm ops as fill ``--seconds`` at the
+workload's typical warm-op time (at least one), checks every op's output,
+and prints one JSON object as its last line of standard output.
+``--trace 1`` instead runs, after the cold op, one traced op between two
+untraced ones and prints the per-layer metrics.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import time
 T_START = time.perf_counter()
 
 import argparse  # noqa: E402
+import hashlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import platform  # noqa: E402
@@ -28,7 +30,12 @@ import tempfile  # noqa: E402
 import traceback  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOADS = ("kg_build", "corpus_kg")
+# a warm op's typical time on a 4-core VM: ``--seconds`` divided by it is
+# the number of warm ops a run times. The count depends on nothing
+# measured, so every run of a workload times the same ops (a loop on the
+# clock would time one op in a slow run and two in a fast one).
+WARM_OP_S = {"kg_build": 15.0, "corpus_kg": 9.0}
+WORKLOADS = tuple(WARM_OP_S)
 DRIVER_MEM_GB = 2
 
 
@@ -135,6 +142,26 @@ def _java_version() -> str:
         return "unknown"
 
 
+def _package_digest() -> str:
+    """Digest of the package's Python sources. The corpus_kg output
+    reference is kept per digest, so it pins one version's output."""
+    h = hashlib.sha256()
+    pkg = os.path.join(ROOT, "pheknowlator_spark")
+    for r, dirs, files in os.walk(pkg):
+        dirs.sort()
+        for name in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(r, name)
+            h.update(os.path.relpath(path, pkg).encode())
+            with open(path, "rb") as f:
+                h.update(f.read())
+    return h.hexdigest()[:12]
+
+
+def _cpu_ticks() -> list[int]:
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
+
+
 def _loadavg() -> str:
     with open("/proc/loadavg") as f:
         return " ".join(f.read().split()[:3])
@@ -156,7 +183,8 @@ def _pin_env(run_dir: str) -> dict:
     })
     tempfile.tempdir = tmp
     return {"master": f"local[{ncpu}]", "nproc": ncpu, "SPARK_GRAFT_CPUS": ncpu,
-            "SPARK_DRIVER_MEM": f"{driver_gb}g", "mem_total_gb": round(mem_gb, 1)}
+            "SPARK_DRIVER_MEM": f"{driver_gb}g", "driver_heap": f"-Xms{driver_gb}g -Xmx{driver_gb}g",
+            "mem_total_gb": round(mem_gb, 1)}
 
 
 # ---------------------------------------------------------------------------
@@ -185,8 +213,9 @@ def main(argv=None) -> int:
 
     from pheknowlator_spark import get_spark
 
-    load_before = _loadavg()
-    cache = os.path.join(ROOT, ".kgbench", "cache", f"{args.workload}-s{args.seed}")
+    load_before, ticks_before = _loadavg(), _cpu_ticks()
+    cache = gen.inputs_dir(os.path.join(ROOT, ".kgbench", "cache"), args.workload, args.seed)
+    reference = os.path.join(cache, f"reference-{_package_digest()}.json")
     run_dir = os.path.join(ROOT, ".kgbench", f"run-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
@@ -203,14 +232,15 @@ def main(argv=None) -> int:
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(run_dir, "warehouse"),
         "spark.eventLog.enabled": "false",
+        # the driver heap starts at its maximum: left to grow, G1 sized it
+        # differently in every run, and peak_rss_mb spread by up to a fifth
+        "spark.driver.extraJavaOptions": f"-Xms{env['SPARK_DRIVER_MEM']}",
     }
     log_dir = os.path.join(run_dir, "eventlog")
     if args.trace:
         os.makedirs(log_dir)
         conf.update({"spark.eventLog.enabled": "true", "spark.eventLog.dir": log_dir,
                      "spark.eventLog.compress": "false"})
-    # the last untraced op_s of this workload: the traced run's overhead base
-    op_s_file = os.path.join(ROOT, ".kgbench", f"op_s-{args.workload}.json")
 
     op = workloads.OPS[args.workload]
     samples, jobs, store_bytes, facts, problems = [], [], [], {}, []
@@ -218,13 +248,14 @@ def main(argv=None) -> int:
 
     def run_checked(name, tracer=None, after=None):
         """One op and its output check; returns (seconds or None, bytes
-        written). ``after(output)`` runs before the output is deleted."""
+        written). ``after(output)`` runs before the output is deleted and
+        returns more problems."""
         nonlocal attempted, failed
         attempted += 1
         out_dir = os.path.join(run_dir, name)
         try:
             output, secs = _timed_op(op, spark, inputs, out_dir, tracer)
-            bad, got = workloads.check(args.workload, output, expect, cache)
+            bad, got = workloads.check(args.workload, output, expect, reference)
             if after is not None:
                 bad = bad + after(output)
         except Exception:
@@ -247,40 +278,38 @@ def main(argv=None) -> int:
     first_op_s, size = run_checked("op-cold")
     store_bytes.append(size)
     if not args.trace:
-        # warm ops while the next one is expected to end within
-        # --seconds (at least one)
-        t_warm, last = time.perf_counter(), 0.0
-        while not jobs or time.perf_counter() - t_warm + last <= args.seconds:
-            before, t0 = _max_job_id(sc), time.perf_counter()
-            secs, size = run_checked(f"op-{len(jobs)}")
-            last = time.perf_counter() - t0
+        for i in range(max(1, round(args.seconds / WARM_OP_S[args.workload]))):
+            before = _max_job_id(sc)
+            secs, size = run_checked(f"op-{i}")
             jobs.append(_max_job_id(sc) - before)
             store_bytes.append(size)
             if secs is not None:
                 samples.append(secs)
     else:
-        try:
-            with open(op_s_file) as f:
-                plain_s, plain_from = json.load(f)["op_s"], "last untraced run"
-        except (OSError, ValueError, KeyError):
-            plain_s, _ = run_checked("op-plain")
-            plain_from = "plain op in this run"
         tracer = trace.Tracer(spark)
-        op_spans: list = []
 
-        def after_traced(output):
-            op_spans.extend(tracer.spans)
-            bad = []
-            if args.workload == "kg_build":
-                workloads.owlnets_steps(spark, output, tracer)
-                bad = workloads.deep_list_probe(spark, args.seed, tracer)
-            tracer.finish_counts()
-            return bad
+        def owlnets_steps(output):
+            workloads.owlnets_steps(spark, output, tracer)
+            return workloads.deep_list_probe(spark, args.seed, tracer)
 
+        # the overhead base: untraced warm ops just before and just after
+        # the traced one, whose mean cancels the warm-up still under way
+        plain_a, _ = run_checked("op-plain-a")
         sc.setJobGroup(trace.OP_GROUP, trace.OP_GROUP)
-        traced_s, _ = run_checked("op-traced", tracer, after_traced)
+        traced_s, _ = run_checked("op-traced", tracer)
+        op_spans = list(tracer.spans)
+        sc.setJobGroup("untraced", "untraced")
+        # the OWL-NETS sub-steps and the deep-list probe come after every
+        # timed op, on the full_graph the last one committed
+        plain_b, _ = run_checked("op-plain-b",
+                                 after=owlnets_steps if args.workload == "kg_build" else None)
+        tracer.finish_counts()
+        plain_s = None if None in (plain_a, plain_b) else (plain_a + plain_b) / 2
     pids = _tree(os.getpid())
     peak_rss_mb = _peak_rss_mb(pids)
+    # the share of CPU time the hypervisor gave to other guests
+    ticks = [b - a for a, b in zip(ticks_before, _cpu_ticks())]
+    steal_pct = 100 * ticks[7] / max(1, sum(ticks))
     _stop_spark(spark)
     leftover = _wait_gone(set(pids))
 
@@ -288,7 +317,8 @@ def main(argv=None) -> int:
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "env": {**env, "pyspark": pyspark.__version__, "java": _java_version(),
                 "python": platform.python_version(),
-                "loadavg_before": load_before, "loadavg_after": _loadavg()},
+                "loadavg_before": load_before, "loadavg_after": _loadavg(),
+                "cpu_steal_pct": steal_pct},
         "input_rows": input_rows, "gen_s": gen_s, "get_spark_s": get_spark_s,
         "op_samples_s": samples, "op_count": len(samples), "jobs_per_op": jobs,
         "store_bytes_per_op": store_bytes, "facts": facts,
@@ -301,7 +331,7 @@ def main(argv=None) -> int:
             values = layers.per_layer(args.workload, tracer, trace.fold_event_log(log_dir),
                                       op_spans, get_spark_s, traced_s, plain_s)
             detail["layer_report"] = {**layers.report(op_spans, traced_s, plain_s),
-                                      "plain_op_from": plain_from}
+                                      "plain_ops_s": [plain_a, plain_b]}
         else:
             values = {name: 0.0 for name in layers.UNITS}
         metrics = {name: {"value": v, "unit": layers.UNITS[name]} for name, v in values.items()}
@@ -314,9 +344,6 @@ def main(argv=None) -> int:
             "store_mb": {"value": statistics.median(store_bytes) / 1e6, "unit": "MB"},
             "peak_rss_mb": {"value": peak_rss_mb, "unit": "MB"},
         }
-        if samples and not failed:
-            with open(op_s_file, "w") as f:
-                json.dump({"op_s": op_s, "seed": args.seed}, f)
     shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps(detail, sort_keys=True))
     correct = failed == 0 and not leftover

@@ -1,4 +1,4 @@
-"""The three workloads: how each reads its inputs, what one op is, and how
+"""The two workloads: how each reads its inputs, what one op is, and how
 the traced run splits that op into layer spans.
 
 An op calls only the public functions of ``pheknowlator_spark``, the way
@@ -39,7 +39,6 @@ TABLES = {
 }
 QUALITY_THRESHOLD = 0.4
 MIN_PAGES = 2
-VECTOR_DIM = 64
 
 
 def load(spark: SparkSession, workload: str, input_dir: str) -> tuple[dict[str, DataFrame], int]:
@@ -142,7 +141,7 @@ def vector_dedup(spark, inp, out_dir, tracer: Tracer | None = None) -> None:
     vectors = inp["vectors"]
     pairs_dir = os.path.join(out_dir, "vec_pairs")
     with tracer.span("dedup.embedding_near_duplicates") if tracer else nullcontext():
-        embedding_near_duplicates(vectors, dim=VECTOR_DIM).write.parquet(pairs_dir)
+        embedding_near_duplicates(vectors, dim=gen.CD_DIM).write.parquet(pairs_dir)
     with tracer.span("similarity.semantic_dedup") if tracer else nullcontext():
         semantic_dedup(vectors).write.parquet(os.path.join(out_dir, "semantic_dedup"))
     if tracer:
@@ -152,10 +151,11 @@ def vector_dedup(spark, inp, out_dir, tracer: Tracer | None = None) -> None:
 OPS = {"kg_build": kg_build, "corpus_kg": corpus_kg}
 
 
-def check(workload: str, output: str, expect: dict, input_dir: str) -> tuple[list[str], dict]:
+def check(workload: str, output: str, expect: dict, reference: str) -> tuple[list[str], dict]:
+    """``reference`` is the file that pins this seed's corpus_kg output."""
     if workload == "kg_build":
         return checks.check_kg_build(output, expect)
     problems, facts = checks.check_webtext_kg(
-        os.path.join(output, "triples.nt"), expect, os.path.join(input_dir, "reference.json"))
+        os.path.join(output, "triples.nt"), expect, reference)
     more, more_facts = checks.check_vector_dedup(output, expect)
     return problems + more, {**facts, **more_facts}
