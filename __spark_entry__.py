@@ -3202,7 +3202,7 @@ def oracle_sql() -> dict[str, str]:
                   '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
                 regexp_extract(url,
                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS rawpath,
-                regexp_extract(url, '\?([^#]*)', 1) AS query
+                regexp_extract(url, '\\?([^#]*)', 1) AS query
               FROM raw
             ),
             built AS (

@@ -182,13 +182,6 @@ def remove_bnode_namespace(col: Column | str, ns: str = PKT_BNODE) -> Column:
     ).otherwise(c)
 
 
-def strip_namespace(col: Column | str) -> Column:
-    """CURIE extraction: last path segment (owlnets.py:164-166 pattern)."""
-    c = _c(col)
-    no_frag = F.element_at(F.split(c, "#"), -1)
-    return F.element_at(F.split(no_frag, "/"), -1)
-
-
 def uri_triple(s: Column, p: Column | str, o: Column | str) -> Column:
     """Struct literal for an all-URI triple (non-literal object)."""
     p_c = F.lit(p) if isinstance(p, str) else p

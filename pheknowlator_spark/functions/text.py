@@ -26,18 +26,6 @@ def _word_set(col: Column) -> Column:
     return F.array_distinct(F.split(F.lower(col), r"\s+"))
 
 
-def lang_id_scores(col: Column) -> Column:
-    """Map of language → marker-hit count (pick argmax downstream)."""
-    words = _word_set(col)
-    entries = []
-    for lang, markers in _LANG_MARKERS.items():
-        hits = F.size(
-            F.array_intersect(words, F.array(*[F.lit(m) for m in markers]))
-        )
-        entries.extend([F.lit(lang), hits])
-    return F.create_map(*entries)
-
-
 def lang_id(col: Column) -> Column:
     """Best-guess language code ('und' when no markers hit).
 

@@ -1,7 +1,7 @@
 """Iterative graph algorithms as driver-side loops over DataFrame ops.
 
 * ``connected_components`` — A7 (kg_utils.py:402-420 networkx CC) as
-  large-star/small-star min-label propagation; used for same-as
+  min-label propagation plus label-pointer jumping; used for same-as
   canonicalization (north rule).
 * ``transitive_closure`` — J10/N11 ancestor closure
   (kg_utils.py:373-399 recursive walk) as iterative self-join to fixpoint.
@@ -11,8 +11,13 @@
 * ``triangle_stats`` — per-node triangles + local clustering coefficient
   (node-iterator++ oriented wedge join).
 * ``bfs_depths`` — min-hop depth from a root set (frontier BFS).
+* ``k_core`` — k-core decomposition by iterative peeling.
 
-Each iteration cuts lineage (SURVEY §4: checkpoint every iteration).
+Every iterative operator (these five and ``owlnets.assign_forests``)
+runs its rounds through one driver, :func:`_iterate`, which cuts lineage
+every round (SURVEY §4: checkpoint every iteration), commits and resumes
+rounds through an optional StageStore, and stops on the operator's own
+convergence probe — never at a silent cap.
 ``set_reliable_checkpoints(spark, dir)`` switches the cut from
 ``localCheckpoint`` (executor-local blocks — fast, but lost with an
 executor in cluster mode) to RELIABLE ``checkpoint`` writes under a
@@ -69,12 +74,71 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def _iterate(
+    state: DataFrame,
+    step,
+    done=None,
+    rounds: int | None = None,
+    store=None,
+    prefix: str | None = None,
+    on_round=None,
+) -> DataFrame:
+    """Run ``state = cut(step(state))`` round after round; returns the
+    last round's cut frame.
+
+    Stop rule: ``rounds=N`` runs exactly N rounds, resumed ones included;
+    otherwise rounds run until ``done(state)`` holds on the cut frame.
+    There is no cap — every caller's probe watches a quantity that moves
+    monotonically over a finite set (labels only decrease, visited sets
+    and closure paths only grow, peeled edges only shrink), so it fires.
+
+    With a ``plans.checkpoint.StageStore`` as ``store``, each round's cut
+    frame commits as stage ``{prefix}_round_NNNN`` and a rerun resumes
+    after the last committed round. The resumed table is projected onto
+    the initial state's columns, and a column it lacks (a table written
+    by older code) is joined back from the initial state on ``node``.
+
+    ``on_round(it, round_df)`` runs after round ``it`` (0-based) is cut
+    and committed, with the round's uncut frame — fault injection and
+    plan audits in tests.
+    """
+    it = 0
+    if store is not None:
+        committed = sorted(
+            s for s in store.manifest()["stages"]
+            if s.startswith(f"{prefix}_round_")
+        )
+        if committed:
+            last = store.run(committed[-1], lambda: None)
+            missing = [c for c in state.columns if c not in last.columns]
+            if missing:
+                last = last.join(state.select("node", *missing), "node")
+            state = last.select(*state.columns)
+            it = int(committed[-1].rsplit("_", 1)[-1]) + 1
+    while rounds is None or it < rounds:
+        round_df = step(state)
+        state = _cut_lineage(round_df)
+        if store is not None:
+            state = store.run(f"{prefix}_round_{it:04d}", lambda s=state: s)
+        if on_round is not None:
+            on_round(it, round_df)
+        it += 1
+        if rounds is None and done(state):
+            break
+    return state
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
+    return out
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 50,
-    checkpoint_every: int = 1,
     state_store=None,
     stage_prefix: str = "cc",
     on_round=None,
@@ -85,10 +149,12 @@ def connected_components(
     node id of the component (deterministic — replaces the reference's
     order-dependent networkx component numbering, kg_utils.py:402-420).
 
-    Algorithm: alternate small-star / large-star style contraction via
-    grouped min-neighbor joins; converges in O(log d) rounds on real graphs.
-    Per-round cost: one shuffle join + one groupBy — both hash-partitioned
-    on node, so at 10^12 scale rounds reuse the same partitioning.
+    Algorithm: each round lowers every node's label to the min over its
+    own and its neighbors' labels, then jumps each label to its label's
+    label (pointer jumping) to shortcut chains; rounds run until no label
+    changes. Per-round cost: one shuffle join + one groupBy for the
+    neighbor min and one self-join for the jump — all hash-partitioned on
+    node, so at 10^12 scale rounds reuse the same partitioning.
 
     Restart safety: pass a ``plans.checkpoint.StageStore`` as
     ``state_store`` and each round's label table commits as stage
@@ -98,8 +164,8 @@ def connected_components(
     previous labels, so the resumed result is identical; asserted by
     ``tests/test_misc_ops.py``'s kill/resume test). Leave it None for the
     in-memory ``localCheckpoint``/reliable-``checkpoint`` lineage cuts
-    only. ``on_round(it)`` is a post-commit hook (fault injection in
-    tests).
+    only. ``on_round(it, round_df)`` is a post-commit hook (fault
+    injection in tests; see :func:`_iterate`).
     """
     # undirected symmetric closure, self-labels
     e = (
@@ -119,137 +185,86 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
 
-    start_it = 0
-    if state_store is not None:
-        done = sorted(
-            s for s in state_store.manifest()["stages"]
-            if s.startswith(f"{stage_prefix}_round_")
-        )
-        if done:
-            # committed round tables carry the ``__prev`` probe column —
-            # resume with the label columns only
-            labels = state_store.run(done[-1], lambda: labels).select(
-                "node", "component"
-            )
-            start_it = int(done[-1].rsplit("_", 1)[-1]) + 1
-
-    for it in range(start_it, max_iterations):
+    def step(labels):
         # candidate label per node = min(own, min over neighbors' labels)
         neighbor_min = (
-            sym.join(labels.withColumnRenamed("node", "b"), "b")
+            sym.join(
+                labels.select(F.col("node").alias("b"), "component"), "b"
+            )
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_min"))
         )
         # the previous label rides along as ``__prev`` so the convergence
-        # probe below is a plain scan of the checkpointed round table —
-        # the former shape re-joined the round against the previous
-        # labels (one extra shuffle join + exchange per round)
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                F.col("component").alias("__prev"),
-            )
+        # probe is a plain scan of the checkpointed round table, with no
+        # join against the previous labels (a shuffle join per round)
+        new_labels = labels.join(neighbor_min, "node", "left").select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce("nbr_min", F.col("component"))
+            ).alias("component"),
+            F.col("component").alias("__prev"),
         )
         # label-pointer jumping: component ← label(component) to shortcut chains
-        jumped = (
-            new_labels.alias("l")
-            .join(
-                new_labels.select(
-                    F.col("node").alias("component"),
-                    F.col("component").alias("parent"),
-                ).alias("r"),
-                "component",
-                "left",
-            )
-            .select(
-                "node",
-                F.least(F.col("component"), F.coalesce("parent", F.col("component"))).alias(
-                    "component"
-                ),
-                "__prev",
-            )
+        parents = new_labels.select(
+            F.col("node").alias("component"), F.col("component").alias("parent")
         )
-        if checkpoint_every and (it % checkpoint_every == 0):
-            jumped = _cut_lineage(jumped)
-        if state_store is not None:
-            jumped = state_store.run(
-                f"{stage_prefix}_round_{it:04d}", lambda j=jumped: j
-            )
-        changed = (
-            jumped.filter(F.col("component") != F.col("__prev"))
-            .limit(1)
-            .count()
+        return new_labels.join(parents, "component", "left").select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce("parent", F.col("component"))
+            ).alias("component"),
+            "__prev",
         )
-        labels = jumped.drop("__prev")
-        if on_round is not None:
-            on_round(it)
-        if changed == 0:
-            break
-    return labels
+
+    def converged(labels):
+        changed = labels.filter(F.col("component") != F.col("__prev"))
+        return changed.limit(1).count() == 0
+
+    return _iterate(
+        labels, step, converged, store=state_store, prefix=stage_prefix,
+        on_round=on_round,
+    ).select("node", "component")
 
 
 def transitive_closure(
     edges: DataFrame,
     src: str = "child",
     dst: str = "parent",
-    max_iterations: int = 30,
 ) -> DataFrame:
     """All (descendant, ancestor) pairs over a DAG edge set.
 
     Doubling closure: paths ← paths ∪ (paths ⋈ paths) each round, so depth-d
-    hierarchies converge in ⌈log2 d⌉ rounds. Intended for the *ontology*
-    subgraph (≤10^7 edges — SURVEY §7.4 risk 3 bounds the explosion); never
-    run on the full web-derived triple set.
+    hierarchies converge in ⌈log2 d⌉ rounds; rounds run until the path
+    count stops growing. Intended for the *ontology* subgraph (≤10^7
+    edges — SURVEY §7.4 risk 3 bounds the explosion); never run on the
+    full web-derived triple set.
 
     Returns ``[child, parent]`` distinct pairs (excluding reflexive pairs).
     """
-    paths = (
+    paths = _cut_lineage(
         edges.select(F.col(src).alias("child"), F.col(dst).alias("parent"))
         .filter(F.col("child") != F.col("parent"))
         .distinct()
     )
-    paths = _cut_lineage(paths)
-    old_count = paths.count()
-    for _ in range(max_iterations):
+
+    def step(paths):
         hops = (
             paths.alias("x")
-            .join(
-                paths.alias("y"), F.col("x.parent") == F.col("y.child")
-            )
+            .join(paths.alias("y"), F.col("x.parent") == F.col("y.child"))
             .select(F.col("x.child").alias("child"), F.col("y.parent").alias("parent"))
             .filter(F.col("child") != F.col("parent"))
         )
-        new_paths = paths.unionByName(hops).distinct()
-        new_paths = _cut_lineage(new_paths)
-        # carry the previous round's count instead of recounting the
-        # checkpointed frame — one fewer job per round
-        new_count = new_paths.count()
-        paths = new_paths
-        if new_count == old_count:
-            break
-        old_count = new_count
-    return paths
+        return paths.unionByName(hops).distinct()
 
+    # each probe compares with the count carried from the round before,
+    # so a round costs one count, not two
+    counts = [paths.count()]
 
-def entity_ancestors(
-    subclass_edges: DataFrame, entities: DataFrame, entity_col: str = "node"
-) -> DataFrame:
-    """J10: ancestors per entity via the cached closure.
+    def converged(paths):
+        counts.append(paths.count())
+        return counts[-1] == counts[-2]
 
-    ``subclass_edges``: [child, parent] direct edges. Returns
-    [node, ancestor] pairs (kg_utils.py:373-399 semantics, order-free).
-    """
-    closure = transitive_closure(subclass_edges)
-    return (
-        entities.select(F.col(entity_col).alias("node"))
-        .distinct()
-        .join(closure.withColumnRenamed("child", "node"), "node")
-        .select("node", F.col("parent").alias("ancestor"))
-    )
+    return _iterate(paths, step, converged)
 
 
 def assign_integer_ids(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -296,7 +311,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
-    checkpoint_every: int = 1,
     state_store=None,
     stage_prefix: str = "pr",
     on_round=None,
@@ -327,8 +341,10 @@ def pagerank(
     ``plans.checkpoint.StageStore`` as ``state_store`` and each round's
     rank table commits as ``{stage_prefix}_round_NNNN``; a rerun resumes
     from the last committed round (each round is a deterministic function
-    of the previous ranks, so the resumed result is identical).
-    ``on_round(it)`` is a post-commit hook (fault injection in tests).
+    of the previous ranks, so the resumed result is identical; round
+    tables without the ``__has_out`` marker, as older code wrote them,
+    resume too). ``on_round(it, round_df)`` is a post-commit hook (fault
+    injection and plan audits in tests; see :func:`_iterate`).
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -371,16 +387,8 @@ def pagerank(
     )
     ranks = _cut_lineage(ranks)
     d = damping
-    start_it = 0
-    if state_store is not None:
-        done = sorted(
-            s for s in state_store.manifest()["stages"]
-            if s.startswith(f"{stage_prefix}_round_")
-        )
-        if done:
-            ranks = state_store.run(done[-1], lambda: ranks)
-            start_it = int(done[-1].rsplit("_", 1)[-1]) + 1
-    for it in range(start_it, iterations):
+
+    def step(ranks):
         contrib = (
             weighted.join(
                 ranks.select(F.col("node").alias("src"), "rank"), "src"
@@ -392,7 +400,7 @@ def pagerank(
             ranks.filter(~F.col("__has_out"))
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
         )
-        ranks = (
+        return (
             ranks.select("node", "__has_out")
             .join(contrib, "node", "left")
             .crossJoin(F.broadcast(dangling))
@@ -406,15 +414,11 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (it % checkpoint_every == 0):
-            ranks = _cut_lineage(ranks)
-        if state_store is not None:
-            ranks = state_store.run(
-                f"{stage_prefix}_round_{it:04d}", lambda r=ranks: r
-            )
-        if on_round is not None:
-            on_round(it)
-    return ranks.select("node", "rank")
+
+    return _iterate(
+        ranks, step, rounds=iterations, store=state_store,
+        prefix=stage_prefix, on_round=on_round,
+    ).select("node", "rank")
 
 
 def triangle_stats(
@@ -492,7 +496,6 @@ def bfs_depths(
     roots: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 50,
 ) -> DataFrame:
     """Minimum hop count from a root set along directed ``src → dst``
     edges — the "ontology depth below root" statistic (the min-hop
@@ -507,7 +510,7 @@ def bfs_depths(
     reachable) across all rounds, not O(edges × depth). Both per-round
     shuffles (the frontier join, the min-dedup of new nodes) are keyed on
     node ids; lineage is cut per round (reliable checkpoints apply,
-    :func:`set_reliable_checkpoints`); the loop exits on the first empty
+    :func:`set_reliable_checkpoints`); the walk ends on the first empty
     frontier via a ``limit(1).count()`` probe, never collecting state.
     """
     e = (
@@ -516,31 +519,29 @@ def bfs_depths(
         .distinct()
     )
     e = _cut_lineage(e)
-    visited = (
+    roots = _cut_lineage(
         roots.select(F.col(roots.columns[0]).alias("node"))
         .distinct()
         .withColumn("depth", F.lit(0).cast("long"))
     )
-    visited = _cut_lineage(visited)
-    frontier = visited
-    for it in range(1, max_iterations + 1):
-        nxt = (
+    # visited stays a LAZY union of the checkpointed per-level frontiers:
+    # each part is already cut, and cutting the union again every level
+    # would re-materialize the whole visited set per round (O(depth²)
+    # total work and one more eager job per level)
+    levels = []
+
+    def step(frontier):
+        levels.append(frontier)
+        return (
             frontier.join(e, frontier.node == e.src)
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(visited, "node", "anti")
-            .withColumn("depth", F.lit(it).cast("long"))
+            .join(_union(levels), "node", "anti")
+            .withColumn("depth", F.lit(len(levels)).cast("long"))
         )
-        nxt = _cut_lineage(nxt)
-        if nxt.limit(1).count() == 0:
-            break
-        # visited stays a LAZY union of the checkpointed per-level deltas
-        # — re-cutting the whole union every level re-materialized the
-        # full visited set per round (O(depth²) total work and one extra
-        # eager job per level) for frames that are already checkpointed
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+
+    _iterate(roots, step, lambda nxt: nxt.limit(1).count() == 0)
+    return _union(levels)
 
 
 def link_prediction_scores(
@@ -641,13 +642,12 @@ def k_core(
     it. Returns ``[node, degree]`` for the surviving nodes with their
     within-core degree.
 
-    ``rounds=None`` peels to the exact fixed point (the true k-core),
-    using one driver-side count per round as the convergence test — the
-    same bounded pattern as :func:`connected_components`. A fixed
-    ``rounds=N`` runs exactly N peel rounds (a closed-form function of
-    the input that a DuckDB oracle replays as N chained CTEs); once the
-    core is reached further rounds are no-ops, so a fixed N ≥ the peel
-    depth equals the exact core.
+    ``rounds=None`` peels to the exact fixed point (the true k-core): the
+    convergence test is one driver-side edge count per round, compared
+    with the previous round's. A fixed ``rounds=N`` runs exactly N peel
+    rounds (a closed-form function of the input that a DuckDB oracle
+    replays as N chained CTEs); once the core is reached further rounds
+    are no-ops, so a fixed N ≥ the peel depth equals the exact core.
 
     100 TB plan: a round is ONE partially-combined degree aggregation
     keyed on the node + TWO left-semi hash joins (src kept, dst kept) —
@@ -655,8 +655,8 @@ def k_core(
     per round (reliable checkpoints apply, see
     :func:`set_reliable_checkpoints`). Peel depth is bounded by the
     degeneracy ordering, typically tens of rounds on power-law graphs.
-    ``on_round(r, edges_df)`` is a pre-checkpoint hook (plan audits /
-    fault injection in tests, mirroring :func:`connected_components`).
+    ``on_round(it, round_df)`` is a post-cut hook (plan audits / fault
+    injection in tests; see :func:`_iterate`).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -671,28 +671,23 @@ def k_core(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
     und = _cut_lineage(und)
-    prev_edges = None
-    r = 0
-    while True:
-        r += 1
+
+    def step(und):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("__deg"))
         keep = deg.filter(F.col("__deg") >= k).select("a")
-        und = (
+        return (
             und.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
             .select("a", "b")
         )
-        if on_round is not None:
-            on_round(r, und)
-        und = _cut_lineage(und)
-        if rounds is not None:
-            if r >= rounds:
-                break
-        else:
-            n_edges = und.count()
-            if n_edges == prev_edges:
-                break
-            prev_edges = n_edges
-    return und.groupBy(F.col("a").alias("node")).agg(
+
+    counts = [None]
+
+    def converged(und):
+        counts.append(und.count())
+        return counts[-1] == counts[-2]
+
+    core = _iterate(und, step, converged, rounds=rounds, on_round=on_round)
+    return core.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )

@@ -176,11 +176,6 @@ def clean_decoded_graph(triples: DataFrame) -> DataFrame:
     )
 
 
-def self_loops(triples: DataFrame) -> DataFrame:
-    """P7: triples with s == o (kg_utils.py:423-438)."""
-    return triples.filter(F.col("s") == F.col("o"))
-
-
 def remove_self_loops(triples: DataFrame) -> DataFrame:
     return triples.filter(F.col("s") != F.col("o"))
 
@@ -229,13 +224,6 @@ def checks_classes(edges: DataFrame, ontology_classes: DataFrame,
         )
         out = flagged.filter(F.col("__o_ok") | ~obj_is_class).drop("__o_ok")
     return out
-
-
-def remove_triples(triples: DataFrame, to_remove: DataFrame) -> DataFrame:
-    """U3: triple removal via anti-join on (s,p,o) (kg_utils.py:303-318)."""
-    return triples.join(
-        to_remove.select("s", "p", "o"), ["s", "p", "o"], "left_anti"
-    )
 
 
 def graph_difference(all_triples: DataFrame, subset: DataFrame) -> DataFrame:
@@ -426,14 +414,5 @@ def resolve_duplicate_predicates(triples: DataFrame) -> DataFrame:
     )
 
 
-def axiom_nodes(triples: DataFrame) -> DataFrame:
-    """Nodes typed owl:Axiom (N1 candidate set, owlnets.py:793-800)."""
-    return _typed_as(triples, OWL_AXIOM)
-
-
 def class_nodes(triples: DataFrame) -> DataFrame:
     return _typed_as(triples, OWL_CLASS)
-
-
-def object_property_nodes(triples: DataFrame) -> DataFrame:
-    return _typed_as(triples, OWL_OBJECT_PROPERTY)

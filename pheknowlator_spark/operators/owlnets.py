@@ -7,8 +7,9 @@ Re-expresses the reference's OWL-NETS 2.0 algorithm
    subjects plus qualifying owl:Axiom nodes (annotatedSource/Target typed
    as Class, owlnets.py:793-799). Pure filters/joins.
 2. **BNode-forest assignment (J7)** — every anonymous node is attached to
-   the root(s) that reach it, by iterative frontier-expansion joins
-   (bounded by OWL class-expression depth, ≤ ~10 rounds).
+   the root(s) that reach it, by iterative frontier-expansion joins run
+   to a fixpoint (one round per anonymous-node level; an rdf:List takes
+   one round per member).
 3. **Per-root decode (N2-N8)** — each root's forest is a few dozen triples;
    groups are processed with ``applyInPandas`` running the recursive
    decode: subClassOf hops, union/intersection rdf:List walks, restriction
@@ -44,6 +45,8 @@ from pheknowlator_spark.functions.rdf import (
 )
 from pheknowlator_spark.operators.graph_algos import (
     _cut_lineage,
+    _iterate,
+    _union,
     transitive_closure,
 )
 from pheknowlator_spark.operators.owl_filters import (
@@ -140,53 +143,53 @@ def decode_roots(triples: DataFrame) -> DataFrame:
 # J7: BNode-forest assignment
 # ---------------------------------------------------------------------------
 
-def assign_forests(triples: DataFrame, roots: DataFrame, max_depth: int = 12) -> DataFrame:
+def assign_forests(triples: DataFrame, roots: DataFrame) -> DataFrame:
     """Attach to each root every triple reachable from it through anonymous
     nodes (reconciles_classes / recurses_axioms, owlnets.py:227-319).
 
     Returns ``[root, s, p, o, o_is_literal]`` — the per-root forest,
     including the root's own out-edges. Frontier expansion is a join per
-    OWL-expression depth level; forests are tiny (≤ dozens of triples), the
-    number of roots is what parallelizes.
+    level of anonymous nodes, run until no root has an unvisited
+    anonymous node left — an RDF list takes one level per member, so a
+    long ``owl:unionOf`` list is walked to its end. Forests are tiny
+    (≤ dozens of triples); the number of roots is what parallelizes.
     """
     t = triples.select("s", "p", "o", "o_is_literal")
+    out_cols = ["root", "s", "p", "o", "o_is_literal"]
     # cut once: the base feeds both the accumulator and the first frontier
     root_edges = _cut_lineage(
-        roots.join(t, roots.root == t.s, "inner").select(
-            "root", "s", "p", "o", "o_is_literal"
+        roots.join(t, roots.root == t.s, "inner").select(*out_cols)
+    )
+
+    def frontier(level):
+        # anonymous objects a level reached first, per root
+        return (
+            level.filter(F.col("__new"))
+            .select("root", F.col("o").alias("node"))
+            .distinct()
         )
-    )
-    # accumulate LAZY per-level deltas and distinct ONCE at the end — the
-    # old shape re-checkpointed the whole accumulated forest every level
-    # (O(depth²) re-materialization; at tiny forest depth the per-level
-    # job overhead dominated the entire decode)
-    acc_parts = [root_edges]
-    out_cols = ["root", "s", "p", "o", "o_is_literal"]
-    # frontier: anonymous objects not yet expanded per root (lazy — one
-    # filter/distinct over the checkpointed base)
-    frontier = (
-        root_edges.filter(_bnode_col(F.col("o")))
-        .select("root", F.col("o").alias("node"))
-        .distinct()
-    )
-    visited = frontier
-    for _ in range(max_depth):
-        # ONE lineage cut per level (reliable-checkpoint aware — executor
-        # loss mid-walk on a real cluster must not recompute the whole
-        # frontier chain): the checkpointed delta carries the expanded
-        # triples AND a ``__new`` frontier flag (bnode object not yet
-        # visited, via one left join against the union of prior deltas'
-        # frontier rows) — the former second cut per level for the
-        # frontier alone doubled the per-level job count while t was
-        # still scanned exactly once per level either way
-        # visited is exact (disjoint unions of per-level distincts) — no
-        # dedup needed before the flag join
-        seen = visited.select(
+
+    # accumulate LAZY per-level deltas and distinct ONCE at the end: each
+    # delta is already cut, and re-cutting the growing forest every level
+    # would cost O(depth²) re-materialization plus a job per level
+    levels, visited = [], []
+
+    def step(level):
+        # ONE lineage cut per level (by the driver): the cut delta carries
+        # the expanded triples AND the ``__new`` frontier flag (bnode
+        # object not yet visited, via one left join against the union of
+        # prior frontiers). Successive frontiers are disjoint by that
+        # flag, so the plain union keeps the visited set exact with no
+        # distinct shuffle.
+        levels.append(level.select(*out_cols))
+        front = frontier(level)
+        visited.append(front)
+        seen = _union(visited).select(
             "root", F.col("node").alias("o"), F.lit(True).alias("__seen")
         )
-        delta = _cut_lineage(
-            frontier.join(t, frontier.node == t.s, "inner")
-            .select("root", "s", "p", "o", "o_is_literal")
+        return (
+            front.join(t, front.node == t.s, "inner")
+            .select(*out_cols)
             .join(seen, ["root", "o"], "left")
             .select(
                 *out_cols,
@@ -195,25 +198,15 @@ def assign_forests(triples: DataFrame, roots: DataFrame, max_depth: int = 12) ->
                 ).alias("__new"),
             )
         )
-        # ONE emptiness probe per level: no flagged rows covers both the
-        # empty-delta and the exhausted-frontier case (an empty delta
-        # union part downstream is free)
-        acc_parts.append(delta.select(*out_cols))
-        new_frontier = (
-            delta.filter(F.col("__new"))
-            .select("root", F.col("o").alias("node"))
-            .distinct()
-        )
-        if new_frontier.isEmpty():
-            break
-        # successive frontiers are disjoint by the ``__new`` flag — plain
-        # union keeps the visited set exact with no distinct shuffle
-        visited = visited.unionByName(new_frontier)
-        frontier = new_frontier
-    acc = acc_parts[0]
-    for part in acc_parts[1:]:
-        acc = acc.unionByName(part)
-    return acc.distinct()
+
+    # ONE emptiness probe per level: no flagged rows covers both the
+    # empty-delta and the exhausted-frontier case
+    last = _iterate(
+        root_edges.withColumn("__new", _bnode_col(F.col("o"))),
+        step,
+        lambda level: frontier(level).isEmpty(),
+    )
+    return _union(levels + [last.select(*out_cols)]).distinct()
 
 
 # ---------------------------------------------------------------------------

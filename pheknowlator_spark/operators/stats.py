@@ -74,16 +74,6 @@ def top_predicates(triples: DataFrame, k: int = 6) -> DataFrame:
     )
 
 
-def top_degree_nodes(triples: DataFrame, k: int = 6) -> DataFrame:
-    """A4: highest out-degree subjects (kg_utils.py:476-477)."""
-    return (
-        triples.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .orderBy(F.col("degree").desc(), F.col("s").asc())
-        .limit(k)
-    )
-
-
 def edge_type_statistics(triples: DataFrame) -> DataFrame:
     """A3: per-edge-type triple and node counts (knowledge_graph.py:295-314)."""
     return triples.groupBy("edge_type").agg(

@@ -159,10 +159,3 @@ def generate_pages(
             yield _gen_rows(pdf["id"].to_numpy(), size_factor, skew)
 
     return rng.mapInPandas(gen, PAGES_SCHEMA)
-
-
-def same_as_pairs(spark: SparkSession) -> DataFrame:
-    """Identity edges between CURIEs sharing a surface-form cluster (the
-    synonym pairs above) — input for canonicalization tests."""
-    rows = [("DOID_5844", "DOID_5844_alt"), ("CHEBI_15365", "CHEBI_15365_alt")]
-    return spark.createDataFrame(rows, "a string, b string")

@@ -101,14 +101,3 @@ def salted_join(
     )
     out = f.join(d, [key, "__salt"], how)
     return out.drop("__salt")
-
-
-def key_frequency_sketch(df: DataFrame, key: str, top: int = 20) -> DataFrame:
-    """Top-k key frequencies — the prepass that decides whether to salt
-    (SURVEY §4 'S chosen from a frequency sketch')."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col(key).asc())
-        .limit(top)
-    )

@@ -116,6 +116,14 @@ class TestBfsDepths:
         got = {r["node"]: r["depth"] for r in bfs_depths(e, roots).collect()}
         assert got == {"r": 0, "a": 1, "b": 2}
 
+    def test_long_chain_walked_to_its_end(self, spark):
+        # 52 nodes, 51 hops: deeper than any fixed round budget of 50
+        e = _edges(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(51)])
+        roots = spark.createDataFrame([("n00",)], ["node"])
+        got = {r["node"]: r["depth"] for r in bfs_depths(e, roots).collect()}
+        assert got == {f"n{i:02d}": i for i in range(52)}
+        assert got["n51"] == 51
+
 
 def _ts(minute):
     return dt.datetime(2024, 1, 1, 0, minute)

@@ -338,7 +338,7 @@ def test_connected_components_kill_resume(spark, tmp_path):
     class Boom(RuntimeError):
         pass
 
-    def killer(it):
+    def killer(it, _df):
         if it == 1:
             raise Boom("simulated driver loss after round 1 commit")
 
@@ -435,7 +435,7 @@ def test_pagerank_kill_resume(spark, tmp_path):
     class Boom(RuntimeError):
         pass
 
-    def killer(it):
+    def killer(it, _df):
         if it == 1:
             raise Boom("simulated driver loss after round 1 commit")
 
@@ -464,6 +464,40 @@ def test_pagerank_kill_resume(spark, tmp_path):
     assert ts_after == {
         t for t in ts_before if t[0] in ("pr_round_0000", "pr_round_0001")
     }
+
+
+def test_pagerank_resumes_old_round_schema(spark, tmp_path):
+    """Round tables committed by older code hold only (node, rank), with
+    no dangling marker: resume joins the marker back from the edges and
+    finishes exactly like an uninterrupted run."""
+    from pheknowlator_spark.operators.graph_algos import pagerank
+    from pheknowlator_spark.plans.checkpoint import StageStore
+
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{(i * 7 + 1) % 20:02d}") for i in range(20)]
+        + [("n00", "n05"), ("n03", "n05"), ("n05", "dangling")],
+        "src string, dst string",
+    )
+    fresh = {
+        r.node: r.rank for r in pagerank(edges, iterations=4).collect()
+    }
+
+    store = StageStore(spark, str(tmp_path / "pr_old"))
+    for it in range(2):
+        committed = store.run(
+            f"pr_round_{it:04d}",
+            lambda it=it: pagerank(edges, iterations=it + 1),
+        )
+        assert committed.columns == ["node", "rank"]
+
+    resumed = pagerank(edges, iterations=4, state_store=store)
+    got = {r.node: r.rank for r in resumed.collect()}
+    assert set(got) == set(fresh)
+    for v, r in fresh.items():
+        assert abs(got[v] - r) < 1e-15, v
+    assert store.manifest()["stages"] == [
+        f"pr_round_{i:04d}" for i in range(4)
+    ]
 
 
 class TestDomainRangeViolations:

@@ -256,3 +256,24 @@ def test_forest_assignment_depth(spark):
         (r.s, r.p, r.o) for r in forests.filter(F.col("root") == X).collect()
     }
     assert ("bnode:3", RDF_FIRST, B) in x_forest  # depth-3 bnode reached
+
+
+def test_long_union_list_fully_decoded(spark):
+    """A 13-member owl:unionOf list is a chain of 13 blank nodes below the
+    union node: the forest walk must follow it to rdf:nil, so every
+    member yields (member, subClassOf, union)."""
+    members = [OBO + f"M_{i:02d}" for i in range(13)]
+    cells = [f"bnode:l{i:02d}" for i in range(13)]
+    rows = [t(X, RDF_TYPE, OWL_CLASS)]
+    rows += [t(m, RDF_TYPE, OWL_CLASS) for m in members]
+    rows += [
+        t(X, RDFS_SUBCLASSOF, "bnode:u"),
+        t("bnode:u", RDF_TYPE, OWL_CLASS),
+        t("bnode:u", OWL_NS + "unionOf", cells[0]),
+    ]
+    for i, (cell, m) in enumerate(zip(cells, members)):
+        rows.append(t(cell, RDF_FIRST, m))
+        rows.append(t(cell, RDF_REST, cells[i + 1] if i + 1 < 13 else RDF_NIL))
+    got, _ = decoded_set(spark, rows)
+    decoded = {m for m in members if (m, RDFS_SUBCLASSOF, X) in got}
+    assert decoded == set(members)

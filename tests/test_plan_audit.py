@@ -238,18 +238,26 @@ def test_pagerank_broadcasts_dangling_mass(spark):
     """Each power-iteration round joins the one-row dangling aggregate by
     broadcast (no shuffle for the scalar) and sums contributions via a
     partially-combined HashAggregate; no Python evaluation anywhere.
-    checkpoint_every=0 keeps the iterative plan visible (the production
-    per-round lineage cut would truncate it to an ExistingRDD scan)."""
+    The per-round lineage cut truncates the returned frame's plan to an
+    ExistingRDD scan, so the round plan is read from the on_round hook,
+    which receives each round's uncut frame."""
     from pheknowlator_spark.operators.graph_algos import pagerank
 
     edges = spark.createDataFrame(
         [(f"s{i % 7}", f"t{i % 11}") for i in range(40)],
         "src string, dst string",
     )
-    plan = plan_of(pagerank(edges, iterations=2, checkpoint_every=0))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "HashAggregate" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    round_plans = []
+    pagerank(
+        edges,
+        iterations=2,
+        on_round=lambda it, df: round_plans.append(plan_of(df)),
+    )
+    assert len(round_plans) == 2
+    for plan in round_plans:
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+        assert "HashAggregate" in plan
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_semantic_dedup_broadcasts_centroids(spark):

@@ -90,7 +90,8 @@ def test_k_core_rounds_are_semi_joins(spark):
     """Peel rounds are left-semi hash joins + hash aggregations — no
     nested-loop join, no window. The per-round lineage cut truncates the
     final executed plan, so the round plan is captured via the on_round
-    hook (pre-checkpoint), mirroring the CC/pagerank audit pattern."""
+    hook, which receives each round's uncut frame (the same pattern as
+    the pagerank audit)."""
     from pheknowlator_spark.operators.graph_algos import k_core
 
     round_plans = []
@@ -102,7 +103,7 @@ def test_k_core_rounds_are_semi_joins(spark):
         edges,
         k=3,
         rounds=2,
-        on_round=lambda r, df: round_plans.append(
+        on_round=lambda it, df: round_plans.append(
             df._jdf.queryExecution().optimizedPlan().toString()
         ),
     )
