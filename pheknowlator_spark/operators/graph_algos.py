@@ -13,11 +13,15 @@
 * ``bfs_depths`` — min-hop depth from a root set (frontier BFS).
 * ``k_core`` — k-core decomposition by iterative peeling.
 
-Every iterative operator (these five and ``owlnets.assign_forests``)
-runs its rounds through one driver, :func:`_iterate`, which cuts lineage
-every round (SURVEY §4: checkpoint every iteration), commits and resumes
-rounds through an optional StageStore, and stops on the operator's own
-convergence probe — never at a silent cap.
+Every iterative operator (these five, and ``owlnets.assign_forests``
+through ``transitive_closure``) runs its rounds through one driver,
+:func:`_iterate`, which cuts lineage every round (SURVEY §4: checkpoint
+every iteration), commits and resumes rounds through an optional
+StageStore, and stops on the operator's own convergence probe — never at
+a silent cap. The probe is a set of aggregates observed on the cut's own
+job (a ``pyspark.sql.Observation``), so convergence costs no Spark job;
+each round's values are logged at DEBUG on the ``pheknowlator_spark``
+logger.
 ``set_reliable_checkpoints(spark, dir)`` switches the cut from
 ``localCheckpoint`` (executor-local blocks — fast, but lost with an
 executor in cluster mode) to RELIABLE ``checkpoint`` writes under a
@@ -28,10 +32,13 @@ whole chain. Local mode keeps the default: one JVM, no executor loss.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import logging
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 _RELIABLE_CONF = "spark.pheknowlator.reliableCheckpoints"
+_log = logging.getLogger("pheknowlator_spark")
 
 
 def set_reliable_checkpoints(spark, checkpoint_dir: str | None) -> None:
@@ -74,23 +81,36 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def _observed_cut(df: DataFrame, probe: dict) -> tuple[DataFrame, dict]:
+    """Cut ``df``'s lineage and return the cut frame with the ``probe``
+    aggregates (name → Column), read off the cut's own job."""
+    obs = Observation()
+    cut = _cut_lineage(df.observe(obs, *(c.alias(k) for k, c in probe.items())))
+    return cut, obs.get
+
+
 def _iterate(
     state: DataFrame,
     step,
+    probe: dict,
     done=None,
     rounds: int | None = None,
     store=None,
-    prefix: str | None = None,
+    prefix: str = "",
     on_round=None,
 ) -> DataFrame:
-    """Run ``state = cut(step(state))`` round after round; returns the
-    last round's cut frame.
+    """Cut the initial ``state``, then run ``state = cut(step(state))``
+    round after round; returns the last round's cut frame.
 
-    Stop rule: ``rounds=N`` runs exactly N rounds, resumed ones included;
-    otherwise rounds run until ``done(state)`` holds on the cut frame.
-    There is no cap — every caller's probe watches a quantity that moves
-    monotonically over a finite set (labels only decrease, visited sets
-    and closure paths only grow, peeled edges only shrink), so it fires.
+    ``probe`` maps names to aggregate Columns over a state frame; each cut
+    observes them, so a round costs its cut and nothing more. Stop rule:
+    ``rounds=N`` runs exactly N rounds, resumed ones included; otherwise
+    rounds run until ``done(prev, cur)`` holds, where ``cur`` is the
+    round's probe values and ``prev`` those of the state it stepped from
+    (None on the first round after a resume). There is no cap — every
+    caller's probe watches a quantity that moves monotonically over a
+    finite set (labels only decrease, visited sets and closure paths only
+    grow, peeled edges only shrink), so it fires.
 
     With a ``plans.checkpoint.StageStore`` as ``store``, each round's cut
     frame commits as stage ``{prefix}_round_NNNN`` and a rerun resumes
@@ -100,9 +120,10 @@ def _iterate(
 
     ``on_round(it, round_df)`` runs after round ``it`` (0-based) is cut
     and committed, with the round's uncut frame — fault injection and
-    plan audits in tests.
+    plan audits in tests. Each round logs ``prefix``, ``it`` and the probe
+    values at DEBUG, and the loop logs the rounds run when it stops.
     """
-    it = 0
+    it, prev = 0, None
     if store is not None:
         committed = sorted(
             s for s in store.manifest()["stages"]
@@ -115,16 +136,21 @@ def _iterate(
                 last = last.join(state.select("node", *missing), "node")
             state = last.select(*state.columns)
             it = int(committed[-1].rsplit("_", 1)[-1]) + 1
+    if it == 0:
+        state, prev = _observed_cut(state, probe)
     while rounds is None or it < rounds:
         round_df = step(state)
-        state = _cut_lineage(round_df)
+        state, cur = _observed_cut(round_df, probe)
         if store is not None:
             state = store.run(f"{prefix}_round_{it:04d}", lambda s=state: s)
         if on_round is not None:
             on_round(it, round_df)
+        _log.debug("%s round %d: %s", prefix, it, cur)
         it += 1
-        if rounds is None and done(state):
+        if rounds is None and done(prev, cur):
             break
+        prev = cur
+    _log.debug("%s: %d rounds", prefix, it)
     return state
 
 
@@ -152,9 +178,10 @@ def connected_components(
     Algorithm: each round lowers every node's label to the min over its
     own and its neighbors' labels, then jumps each label to its label's
     label (pointer jumping) to shortcut chains; rounds run until no label
-    changes. Per-round cost: one shuffle join + one groupBy for the
-    neighbor min and one self-join for the jump — all hash-partitioned on
-    node, so at 10^12 scale rounds reuse the same partitioning.
+    changes (the count of changed labels is read off the round's cut).
+    Per-round cost: one shuffle join + one groupBy for the neighbor min
+    and one self-join for the jump — all hash-partitioned on node, so at
+    10^12 scale rounds reuse the same partitioning.
 
     Restart safety: pass a ``plans.checkpoint.StageStore`` as
     ``state_store`` and each round's label table commits as stage
@@ -179,10 +206,8 @@ def connected_components(
     sym = _cut_lineage(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
-    labels = _cut_lineage(
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
+    labels = sym.select(F.col("a").alias("node")).distinct().select(
+        "node", F.col("node").alias("component"), F.col("node").alias("__prev")
     )
 
     def step(labels):
@@ -195,8 +220,8 @@ def connected_components(
             .agg(F.min("component").alias("nbr_min"))
         )
         # the previous label rides along as ``__prev`` so the convergence
-        # probe is a plain scan of the checkpointed round table, with no
-        # join against the previous labels (a shuffle join per round)
+        # probe is an aggregate over the round's own rows, with no join
+        # against the previous labels (a shuffle join per round)
         new_labels = labels.join(neighbor_min, "node", "left").select(
             "node",
             F.least(
@@ -216,13 +241,10 @@ def connected_components(
             "__prev",
         )
 
-    def converged(labels):
-        changed = labels.filter(F.col("component") != F.col("__prev"))
-        return changed.limit(1).count() == 0
-
+    changed = F.count(F.when(F.col("component") != F.col("__prev"), 1))
     return _iterate(
-        labels, step, converged, store=state_store, prefix=stage_prefix,
-        on_round=on_round,
+        labels, step, {"changed": changed}, lambda _, cur: cur["changed"] == 0,
+        store=state_store, prefix=stage_prefix, on_round=on_round,
     ).select("node", "component")
 
 
@@ -235,13 +257,13 @@ def transitive_closure(
 
     Doubling closure: paths ← paths ∪ (paths ⋈ paths) each round, so depth-d
     hierarchies converge in ⌈log2 d⌉ rounds; rounds run until the path
-    count stops growing. Intended for the *ontology* subgraph (≤10^7
-    edges — SURVEY §7.4 risk 3 bounds the explosion); never run on the
-    full web-derived triple set.
+    count, read off each round's cut, stops growing. Intended for the
+    *ontology* subgraph (≤10^7 edges — SURVEY §7.4 risk 3 bounds the
+    explosion); never run on the full web-derived triple set.
 
     Returns ``[child, parent]`` distinct pairs (excluding reflexive pairs).
     """
-    paths = _cut_lineage(
+    paths = (
         edges.select(F.col(src).alias("child"), F.col(dst).alias("parent"))
         .filter(F.col("child") != F.col("parent"))
         .distinct()
@@ -256,15 +278,10 @@ def transitive_closure(
         )
         return paths.unionByName(hops).distinct()
 
-    # each probe compares with the count carried from the round before,
-    # so a round costs one count, not two
-    counts = [paths.count()]
-
-    def converged(paths):
-        counts.append(paths.count())
-        return counts[-1] == counts[-2]
-
-    return _iterate(paths, step, converged)
+    return _iterate(
+        paths, step, {"rows": F.count(F.lit(1))}, lambda prev, cur: cur == prev,
+        prefix="transitive_closure",
+    )
 
 
 def assign_integer_ids(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -385,7 +402,6 @@ def pagerank(
             F.lit(1.0 / n).alias("rank"),
         )
     )
-    ranks = _cut_lineage(ranks)
     d = damping
 
     def step(ranks):
@@ -415,9 +431,10 @@ def pagerank(
             )
         )
 
+    # the rank mass (1 up to rounding) is the logged per-round probe
     return _iterate(
-        ranks, step, rounds=iterations, store=state_store,
-        prefix=stage_prefix, on_round=on_round,
+        ranks, step, {"mass": F.sum("rank")}, rounds=iterations,
+        store=state_store, prefix=stage_prefix, on_round=on_round,
     ).select("node", "rank")
 
 
@@ -511,7 +528,8 @@ def bfs_depths(
     shuffles (the frontier join, the min-dedup of new nodes) are keyed on
     node ids; lineage is cut per round (reliable checkpoints apply,
     :func:`set_reliable_checkpoints`); the walk ends on the first empty
-    frontier via a ``limit(1).count()`` probe, never collecting state.
+    frontier, whose row count is read off the round's cut, never
+    collecting state.
     """
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -519,7 +537,7 @@ def bfs_depths(
         .distinct()
     )
     e = _cut_lineage(e)
-    roots = _cut_lineage(
+    roots = (
         roots.select(F.col(roots.columns[0]).alias("node"))
         .distinct()
         .withColumn("depth", F.lit(0).cast("long"))
@@ -540,7 +558,10 @@ def bfs_depths(
             .withColumn("depth", F.lit(len(levels)).cast("long"))
         )
 
-    _iterate(roots, step, lambda nxt: nxt.limit(1).count() == 0)
+    _iterate(
+        roots, step, {"rows": F.count(F.lit(1))}, lambda _, cur: cur["rows"] == 0,
+        prefix="bfs_depths",
+    )
     return _union(levels)
 
 
@@ -643,8 +664,8 @@ def k_core(
     within-core degree.
 
     ``rounds=None`` peels to the exact fixed point (the true k-core): the
-    convergence test is one driver-side edge count per round, compared
-    with the previous round's. A fixed ``rounds=N`` runs exactly N peel
+    round stops when its edge count, read off the round's cut, equals the
+    previous round's. A fixed ``rounds=N`` runs exactly N peel
     rounds (a closed-form function of the input that a DuckDB oracle
     replays as N chained CTEs); once the core is reached further rounds
     are no-ops, so a fixed N ≥ the peel depth equals the exact core.
@@ -670,7 +691,6 @@ def k_core(
     und = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    und = _cut_lineage(und)
 
     def step(und):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("__deg"))
@@ -681,13 +701,10 @@ def k_core(
             .select("a", "b")
         )
 
-    counts = [None]
-
-    def converged(und):
-        counts.append(und.count())
-        return counts[-1] == counts[-2]
-
-    core = _iterate(und, step, converged, rounds=rounds, on_round=on_round)
+    core = _iterate(
+        und, step, {"rows": F.count(F.lit(1))}, lambda prev, cur: cur == prev,
+        rounds=rounds, prefix="k_core", on_round=on_round,
+    )
     return core.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )

@@ -7,11 +7,12 @@ Re-expresses the reference's OWL-NETS 2.0 algorithm
    subjects plus qualifying owl:Axiom nodes (annotatedSource/Target typed
    as Class, owlnets.py:793-799). Pure filters/joins.
 2. **BNode-forest assignment (J7)** — every anonymous node is attached to
-   the root(s) that reach it, by iterative frontier-expansion joins run
-   to a fixpoint (one round per anonymous-node level; an rdf:List takes
-   one round per member).
+   the root(s) that reach it: one doubling transitive closure over the
+   anonymous→anonymous edges (⌈log₂ depth⌉ rounds, so an rdf:List of any
+   length costs a handful of rounds), joined to each root's anonymous
+   objects and then to the triples once.
 3. **Per-root decode (N2-N8)** — each root's forest is a few dozen triples;
-   groups are processed with ``applyInPandas`` running the recursive
+   groups are processed with ``applyInArrow`` running the recursive
    decode: subClassOf hops, union/intersection rdf:List walks, restriction
    decoding, PATO property-selection, negation/complementOf gates,
    cardinality capture, and duplicate-predicate resolution (A10). This is
@@ -30,9 +31,7 @@ BNodes are strings prefixed ``_:`` or ``bnode:``.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,8 +44,6 @@ from pheknowlator_spark.functions.rdf import (
 )
 from pheknowlator_spark.operators.graph_algos import (
     _cut_lineage,
-    _iterate,
-    _union,
     transitive_closure,
 )
 from pheknowlator_spark.operators.owl_filters import (
@@ -62,6 +59,7 @@ BFO_ROOT = OBO + "BFO_0000001"
 
 DECODED_SCHEMA = "root string, s string, p string, o string"
 STATUS_SCHEMA = "root string, status string, detail string"
+_MIXED_COLS = ("root", "a", "b", "c", "kind")
 
 
 def _is_bnode_str(x: str) -> bool:
@@ -148,65 +146,39 @@ def assign_forests(triples: DataFrame, roots: DataFrame) -> DataFrame:
     nodes (reconciles_classes / recurses_axioms, owlnets.py:227-319).
 
     Returns ``[root, s, p, o, o_is_literal]`` — the per-root forest,
-    including the root's own out-edges. Frontier expansion is a join per
-    level of anonymous nodes, run until no root has an unvisited
-    anonymous node left — an RDF list takes one level per member, so a
-    long ``owl:unionOf`` list is walked to its end. Forests are tiny
-    (≤ dozens of triples); the number of roots is what parallelizes.
+    including the root's own out-edges. The anonymous nodes below each
+    anonymous node come from one doubling :func:`transitive_closure` over
+    the anonymous→anonymous edges, so a chain of depth d (an RDF list of d
+    members) takes ⌈log₂ d⌉ + 1 rounds and a long ``owl:unionOf`` list is
+    walked to its end in a few Spark jobs. Each root's anonymous objects
+    join that closure once, and the reached nodes join the triples once.
+    The closure holds every (anonymous node, anonymous descendant) pair,
+    so an L-member list contributes L(L−1)/2 pairs (1 128 at 48 members).
+    Forests are tiny (≤ dozens of triples); the number of roots is what
+    parallelizes.
     """
     t = triples.select("s", "p", "o", "o_is_literal")
-    out_cols = ["root", "s", "p", "o", "o_is_literal"]
-    # cut once: the base feeds both the accumulator and the first frontier
-    root_edges = _cut_lineage(
-        roots.join(t, roots.root == t.s, "inner").select(*out_cols)
+    below = transitive_closure(
+        t.filter(_bnode_col(F.col("s")) & _bnode_col(F.col("o"))), "s", "o"
     )
-
-    def frontier(level):
-        # anonymous objects a level reached first, per root
-        return (
-            level.filter(F.col("__new"))
-            .select("root", F.col("o").alias("node"))
-            .distinct()
-        )
-
-    # accumulate LAZY per-level deltas and distinct ONCE at the end: each
-    # delta is already cut, and re-cutting the growing forest every level
-    # would cost O(depth²) re-materialization plus a job per level
-    levels, visited = [], []
-
-    def step(level):
-        # ONE lineage cut per level (by the driver): the cut delta carries
-        # the expanded triples AND the ``__new`` frontier flag (bnode
-        # object not yet visited, via one left join against the union of
-        # prior frontiers). Successive frontiers are disjoint by that
-        # flag, so the plain union keeps the visited set exact with no
-        # distinct shuffle.
-        levels.append(level.select(*out_cols))
-        front = frontier(level)
-        visited.append(front)
-        seen = _union(visited).select(
-            "root", F.col("node").alias("o"), F.lit(True).alias("__seen")
-        )
-        return (
-            front.join(t, front.node == t.s, "inner")
-            .select(*out_cols)
-            .join(seen, ["root", "o"], "left")
-            .select(
-                *out_cols,
-                (
-                    _bnode_col(F.col("o")) & F.col("__seen").isNull()
-                ).alias("__new"),
-            )
-        )
-
-    # ONE emptiness probe per level: no flagged rows covers both the
-    # empty-delta and the exhausted-frontier case
-    last = _iterate(
-        root_edges.withColumn("__new", _bnode_col(F.col("o"))),
-        step,
-        lambda level: frontier(level).isEmpty(),
+    tops = (
+        roots.join(t, roots.root == t.s)
+        .filter(_bnode_col(F.col("o")))
+        .select("root", F.col("o").alias("node"))
     )
-    return _union(levels + [last.select(*out_cols)]).distinct()
+    members = (
+        roots.select("root", F.col("root").alias("node"))
+        .unionByName(tops)
+        .unionByName(
+            tops.join(below.withColumnRenamed("child", "node"), "node")
+            .select("root", F.col("parent").alias("node"))
+        )
+    )
+    return (
+        members.join(t, members.node == t.s)
+        .select("root", "s", "p", "o", "o_is_literal")
+        .distinct()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -445,22 +417,24 @@ def _decode_forest(root: str, rows: list[tuple[str, str, str, bool]]):
 
 
 def decode_forests(forests: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Run the per-root decode via applyInPandas grouped by root."""
+    """Run the per-root decode via applyInArrow grouped by root."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        root = key[0]
-        rows = list(
-            zip(pdf["s"], pdf["p"], pdf["o"], pdf["o_is_literal"])
-        )
+    # no type hints: pyspark would try to infer the UDF form from them
+    def run(key, table):
+        root = key[0].as_py()
+        rows = list(zip(*(
+            table.column(c).to_pylist() for c in ("s", "p", "o", "o_is_literal")
+        )))
         triples, status = _decode_forest(root, rows)
-        trip_rows = [(root, s, p, o, "triple") for s, p, o in triples]
-        stat_rows = [(root, st, d, "", "status") for st, d in status]
-        return pd.DataFrame(
-            trip_rows + stat_rows, columns=["root", "a", "b", "c", "kind"]
+        out = [(root, s, p, o, "triple") for s, p, o in triples]
+        out += [(root, st, d, "", "status") for st, d in status]
+        cols = list(zip(*out)) or [()] * len(_MIXED_COLS)
+        return pa.table(
+            [pa.array(c, pa.string()) for c in cols], names=list(_MIXED_COLS)
         )
 
-    mixed = forests.groupBy("root").applyInPandas(
-        run, "root string, a string, b string, c string, kind string"
+    mixed = forests.groupBy("root").applyInArrow(
+        run, ", ".join(f"{c} string" for c in _MIXED_COLS)
     )
     decoded = mixed.filter(F.col("kind") == "triple").select(
         "root", F.col("a").alias("s"), F.col("b").alias("p"), F.col("c").alias("o")
@@ -589,7 +563,7 @@ def run_owlnets(
     # cut lineage ONCE on the combined graph: make_graph_connected reads
     # its input from four subtrees (closure base, node set, neighbor set,
     # final union) — without the cut each consumer re-ran the whole
-    # applyInPandas decode + the plain-triples filter tree (~4× the decode
+    # applyInArrow decode + the plain-triples filter tree (~4× the decode
     # cost; at cluster scale 4 redundant scans of the decoded graph)
     combined = _cut_lineage(plain.unionByName(cleaned).distinct())
     connected = make_graph_connected(combined, approach or "subclass")

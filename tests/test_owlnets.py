@@ -277,3 +277,40 @@ def test_long_union_list_fully_decoded(spark):
     got, _ = decoded_set(spark, rows)
     decoded = {m for m in members if (m, RDFS_SUBCLASSOF, X) in got}
     assert decoded == set(members)
+
+
+def _union_rows(n):
+    """X ⊑ (M_000 ⊔ … ⊔ M_{n-1}) as an n-cell rdf:List."""
+    members = [OBO + f"M_{i:03d}" for i in range(n)]
+    cells = [f"bnode:l{i:03d}" for i in range(n)] + [RDF_NIL]
+    rows = [t(X, RDF_TYPE, OWL_CLASS)]
+    rows += [t(m, RDF_TYPE, OWL_CLASS) for m in members]
+    rows += [
+        t(X, RDFS_SUBCLASSOF, "bnode:u"),
+        t("bnode:u", RDF_TYPE, OWL_CLASS),
+        t("bnode:u", OWL_NS + "unionOf", cells[0]),
+    ]
+    for i, m in enumerate(members):
+        rows += [t(cells[i], RDF_FIRST, m), t(cells[i], RDF_REST, cells[i + 1])]
+    return members, rows
+
+
+def _forest_jobs(spark, rows):
+    """Spark jobs one ``assign_forests`` run issues, by statusTracker id."""
+    triples = make_triples(spark, rows).localCheckpoint(eager=True)
+    roots = decode_roots(triples).localCheckpoint(eager=True)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assign_forests(triples, roots).collect()
+    return len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def test_forest_walk_jobs_do_not_grow_with_list_length(spark):
+    """The doubling walk covers a 64-member union in ⌈log₂ 64⌉ + 1 closure
+    rounds: it decodes every member, and costs at most 20 Spark jobs more
+    than an 8-member union (a level-by-level walk costs 56 more rounds)."""
+    members, rows = _union_rows(64)
+    got, _ = decoded_set(spark, rows)
+    assert {m for m in members if (m, RDFS_SUBCLASSOF, X) in got} == set(members)
+    short = _forest_jobs(spark, _union_rows(8)[1])
+    assert _forest_jobs(spark, rows) <= short + 20

@@ -4,7 +4,7 @@ arbitrary small inputs — catches edge cases fixed fixtures miss."""
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _ids = st.text(alphabet="abc", min_size=0, max_size=3)
@@ -186,6 +186,69 @@ def test_stratified_sample_model_and_monotonicity(spark, ids, f1, f2):
     assert k_lo == model
     # monotonicity: a smaller fraction keeps a subset of a larger one
     assert k_lo <= k_hi
+
+
+# named nodes and blank nodes (both spellings the decoder accepts); a
+# small pool so random edges give cycles and in-degree > 1 often
+_NAMED = ["http://x/A", "http://x/B", "http://x/C"]
+_ANON = ["_:b0", "_:b1", "_:b2", "bnode:b3", "bnode:b4", "bnode:b5"]
+_forest_edges = st.lists(
+    st.tuples(
+        st.sampled_from(_NAMED + _ANON),
+        st.sampled_from(["p", "q"]),
+        st.sampled_from(_NAMED + _ANON + ["lit"]),
+    ),
+    min_size=0,
+    max_size=14,
+)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    edges=_forest_edges,
+    roots=st.lists(st.sampled_from(_NAMED + _ANON), min_size=1, max_size=4),
+)
+@example(
+    # a cycle b0 → b1 → b2 → b0 below an anonymous root (as an owl:Axiom
+    # root is), b2 reached from two parents, a named root entering the cycle
+    edges=[
+        ("_:b0", "p", "_:b1"), ("_:b1", "p", "_:b2"), ("_:b2", "q", "_:b0"),
+        ("bnode:b3", "p", "_:b2"), ("_:b2", "p", "http://x/A"),
+        ("http://x/A", "q", "bnode:b3"), ("_:b1", "q", "lit"),
+    ],
+    roots=["_:b0", "http://x/A"],
+)
+def test_assign_forests_matches_python_walk(spark, edges, roots):
+    # reference semantics (reconciles_classes / recurses_axioms): a root's
+    # forest is its own out-edges plus those of every blank node reachable
+    # from it through blank nodes
+    from pheknowlator_spark.operators.owlnets import assign_forests
+
+    rows = [(s, p, o, o == "lit") for s, p, o in set(edges)]
+    triples = spark.createDataFrame(
+        rows, "s string, p string, o string, o_is_literal boolean"
+    )
+    root_df = spark.createDataFrame([(r,) for r in set(roots)], "root string")
+    got = {tuple(r) for r in assign_forests(triples, root_df).collect()}
+
+    expected = set()
+    for root in set(roots):
+        seen, todo = set(), [root]
+        while todo:
+            node = todo.pop()
+            if node in seen:
+                continue
+            seen.add(node)
+            for s, p, o, lit in rows:
+                if s == node:
+                    expected.add((root, s, p, o, lit))
+                    if o in _ANON:
+                        todo.append(o)
+    assert got == expected
 
 
 class TestPartitionInvariance:
