@@ -1728,9 +1728,9 @@ def _annotation_graph(spark, sf_dir):
 
 def q_logic_annotation_split(spark, sf_dir):
     # ONE annotation_flags classification pass with part = CASE over the
-    # flag — set-equal to unioning split_logic_annotation's two sides
-    # (input is distinct, the flag is a deterministic row function) while
-    # evaluating the classification subtree once instead of twice
+    # flag — set-equal to annotation_assertions plus the graph_difference
+    # logic side (input is distinct, the flag is a deterministic row
+    # function) while evaluating the classification subtree once, not twice
     from pheknowlator_spark.operators.owl_filters import annotation_flags
 
     g = _annotation_graph(spark, sf_dir)

@@ -68,6 +68,11 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def is_bnode(col: Column) -> Column:
+    """True for an anonymous-node id: ``_:x`` or ``bnode:x``."""
+    return col.startswith("_:") | col.startswith("bnode:")
+
+
 def n3_uri(col: Column | str) -> Column:
     """``<uri>`` — N-Triples serialization of a URI term (kg_utils.py:714)."""
     return F.concat(F.lit("<"), _c(col), F.lit(">"))

@@ -290,24 +290,3 @@ def construct_edges(
     )
     errors = err1.unionByName(err2).distinct()
     return triples, errors
-
-
-def core_constructor_df(
-    edges: DataFrame, approach: str = "subclass"
-) -> DataFrame:
-    """Bare G1/G2 core expansion for pre-resolved URI edges.
-
-    Input: ``[n1_uri, n2_uri, rel_uri, inv_rel_uri]`` (+passthrough cols).
-    Output: one row per emitted triple, duplicates preserved (the reference
-    returns tuples-with-duplicates; dedup happens at graph-set level).
-    """
-    core_fn = (
-        _subclass_core_triples if approach == "subclass" else _instance_core_triples
-    )
-    arr = core_fn(
-        F.col("n1_uri"), F.col("n2_uri"), F.col("rel_uri"), F.col("inv_rel_uri")
-    )
-    passthrough = [c for c in edges.columns if c not in ("n1_uri", "n2_uri")]
-    return edges.select(*passthrough, F.explode(arr).alias("t")).select(
-        *passthrough, "t.*"
-    )

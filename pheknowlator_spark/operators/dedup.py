@@ -23,18 +23,6 @@ from pyspark.sql import functions as F
 from pheknowlator_spark.functions.text import fingerprint64, shingles
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical (normalized) documents: [fp, doc_ids, n]."""
-    return (
-        docs.select(F.col(id_col), fingerprint64(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-             F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def dedup_exact(docs: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
     """Keep the min-id representative per fingerprint group.

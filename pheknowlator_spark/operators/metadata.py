@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pheknowlator_spark.functions.rdf import (
     OBOINOWL,
     RDFS_LABEL,
+    is_bnode,
     literal_triple,
 )
 
@@ -206,7 +207,7 @@ def extract_metadata(graph: DataFrame, include_builtin_relations: bool = True) -
     )
 
     types = graph.filter(F.col("p") == RDF_TYPE)
-    not_bnode = ~(F.col("s").startswith("_:") | F.col("s").startswith("bnode:"))
+    not_bnode = ~is_bnode(F.col("s"))
     nodes = (
         types.filter(
             (F.col("o").contains(OWL_CLASS) | F.col("o").contains(OWL_NAMED_INDIVIDUAL))

@@ -13,15 +13,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pheknowlator_spark.functions.rdf import (
-    OBO,
+    OWL_ANNOTATED_PROPERTY,
+    OWL_ANNOTATED_SOURCE,
+    OWL_ANNOTATED_TARGET,
+    OWL_ANNOTATION_PROPERTY,
     OWL_AXIOM,
     OWL_CLASS,
     OWL_DEPRECATED,
     OWL_DISJOINT_WITH,
     OWL_NAMED_INDIVIDUAL,
+    OWL_NS,
     OWL_OBJECT_PROPERTY,
     RDF_TYPE,
     RDFS_SUBCLASSOF,
+    is_bnode,
 )
 
 # namespace prefix filters (owlnets.py:92-94)
@@ -55,10 +60,6 @@ def _ns_pred(col, namespaces: tuple[str, ...]):
     return pred
 
 
-def _is_bnode(col):
-    return col.startswith("_:") | col.startswith("bnode:")
-
-
 def _exclusion_ok(triples: DataFrame) -> DataFrame:
     """Namespace-exclusion predicate shared by P5 and the relaxed variant
     (owlnets.py:159,209-212): subject/object may not be in top-level,
@@ -84,10 +85,9 @@ def filter_owl_semantics(triples: DataFrame) -> DataFrame:
     * p is rdfs:subClassOf and o is outside the OWL namespace and is not
       an ObsoleteClass (regardless of s/o typing).
     """
-    owl_ns = "http://www.w3.org/2002/07/owl#"
     uri_triples = _exclusion_ok(
         triples.filter(
-            (~F.col("o_is_literal")) & (~_is_bnode(F.col("s"))) & (~_is_bnode(F.col("o")))
+            (~F.col("o_is_literal")) & (~is_bnode(F.col("s"))) & (~is_bnode(F.col("o")))
         )
     )
     # ONE node-flag dimension from the rdf:type triples (is Class/NI
@@ -151,7 +151,7 @@ def filter_owl_semantics(triples: DataFrame) -> DataFrame:
         | (s_cls & o_cls & ~p_typed & F.col("p").isin([RDFS_SUBCLASSOF, RDF_TYPE]))
         | (
             (F.col("p") == RDFS_SUBCLASSOF)
-            & (~F.col("o").startswith(owl_ns))
+            & (~F.col("o").startswith(OWL_NS))
             & (~F.col("o").contains("ObsoleteClass"))
         )
     )
@@ -162,14 +162,13 @@ def clean_decoded_graph(triples: DataFrame) -> DataFrame:
     """Relaxed post-decode filter (cleans_decoded_graph, owlnets.py:193-225):
     URI-URI-URI triples passing namespace exclusions whose subject and
     object are outside the OWL and XMLSchema namespaces."""
-    owl_ns = "http://www.w3.org/2002/07/owl#"
     return _exclusion_ok(
         triples.filter(
             (~F.col("o_is_literal"))
-            & (~_is_bnode(F.col("s")))
-            & (~_is_bnode(F.col("o")))
-            & (~F.col("s").startswith(owl_ns))
-            & (~F.col("o").startswith(owl_ns))
+            & (~is_bnode(F.col("s")))
+            & (~is_bnode(F.col("o")))
+            & (~F.col("s").startswith(OWL_NS))
+            & (~F.col("o").startswith(OWL_NS))
             & (~F.col("s").contains("XMLSchema"))
             & (~F.col("o").contains("XMLSchema"))
         )
@@ -231,10 +230,6 @@ def graph_difference(all_triples: DataFrame, subset: DataFrame) -> DataFrame:
     return all_triples.join(subset.select("s", "p", "o"), ["s", "p", "o"], "left_anti")
 
 
-OWL_ANNOTATION_PROPERTY = "http://www.w3.org/2002/07/owl#AnnotationProperty"
-OWL_ANNOTATED_SOURCE = "http://www.w3.org/2002/07/owl#annotatedSource"
-OWL_ANNOTATED_PROPERTY = "http://www.w3.org/2002/07/owl#annotatedProperty"
-OWL_ANNOTATED_TARGET = "http://www.w3.org/2002/07/owl#annotatedTarget"
 _CORE_ANNOT = [OWL_ANNOTATED_SOURCE, OWL_ANNOTATED_PROPERTY, OWL_ANNOTATED_TARGET]
 
 
@@ -276,11 +271,16 @@ def annotation_flags(triples: DataFrame) -> DataFrame:
     """The classification pass behind :func:`annotation_assertions`: the
     input triples with one extra boolean ``__annot`` (true iff the row is
     an annotation assertion under the case rules above). Row-level and
-    deterministic — ``filter(__annot)`` is the annotation subset and
-    ``filter(~__annot)`` is set-equal to the anti-join difference, so a
-    caller needing BOTH sides classifies once instead of evaluating the
-    whole subtree per side."""
-    not_bnode_o = ~_is_bnode(F.col("o"))
+    deterministic — ``filter(__annot)`` is the annotation subset and, when
+    (s, p, o) is a key of the input, ``filter(~__annot)`` is set-equal to
+    the :func:`graph_difference` anti-join, so a caller needing BOTH sides
+    classifies once instead of evaluating the whole subtree per side.
+
+    Classification is per row, not per (s, p, o): two rows sharing
+    (s, p, o) but differing in o_is_literal/o_lang/o_datatype can get
+    different flags, and then ``filter(~__annot)`` keeps a row that the
+    (s, p, o)-keyed anti-join drops."""
+    not_bnode_o = ~is_bnode(F.col("o"))
     uri_o = (~F.col("o_is_literal")) & not_bnode_o
 
     annot_props = (
@@ -327,7 +327,7 @@ def annotation_flags(triples: DataFrame) -> DataFrame:
         )
         .filter(
             (F.col("__is_ax") == 1)
-            | ((F.col("__has_decl") == 1) & ~_is_bnode(F.col("ent")))
+            | ((F.col("__has_decl") == 1) & ~is_bnode(F.col("ent")))
         )
         .select(
             "ent",
@@ -376,26 +376,6 @@ def annotation_flags(triples: DataFrame) -> DataFrame:
     return both.select(
         *cols, F.coalesce(contrib_s | contrib_o, F.lit(False)).alias("__annot")
     )
-
-
-def split_logic_annotation(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """N12 + U2: (logic, annotation) graph split (kg_utils.py:600-650).
-
-    ``logic = all − annotation``; the reference's count-parity assertion
-    (kg_utils.py:640) holds by construction for an anti-join difference
-    when the graph is distinct — callers persisting both sides can assert
-    ``logic.count() + annotation.count() == all.distinct().count()``.
-
-    Both sides come from ONE :func:`annotation_flags` classification pass
-    (``__annot`` is a deterministic function of the row, so the negated
-    filter is set-equal to the former ``graph_difference`` anti-join while
-    evaluating the classification subtree once per side instead of twice).
-    """
-    flagged = annotation_flags(triples)
-    cols = [c for c in triples.columns]
-    logic = flagged.filter(~F.col("__annot")).select(*cols)
-    annot = flagged.filter(F.col("__annot")).select(*cols).distinct()
-    return logic, annot
 
 
 def resolve_duplicate_predicates(triples: DataFrame) -> DataFrame:

@@ -37,10 +37,13 @@ from pyspark.sql import functions as F
 
 from pheknowlator_spark.functions.rdf import (
     OBO,
+    OWL_ANNOTATED_SOURCE,
+    OWL_ANNOTATED_TARGET,
     OWL_AXIOM,
     OWL_CLASS,
     RDF_TYPE,
     RDFS_SUBCLASSOF,
+    is_bnode,
 )
 from pheknowlator_spark.operators.graph_algos import (
     _cut_lineage,
@@ -53,7 +56,6 @@ from pheknowlator_spark.operators.owl_filters import (
 )
 from pheknowlator_spark.operators.stats import mode_per_group
 
-OWL_NS = "http://www.w3.org/2002/07/owl#"
 RO_0000086 = OBO + "RO_0000086"
 BFO_ROOT = OBO + "BFO_0000001"
 
@@ -66,10 +68,6 @@ def _is_bnode_str(x: str) -> bool:
     return isinstance(x, str) and (x.startswith("_:") or x.startswith("bnode:"))
 
 
-def _bnode_col(col):
-    return col.startswith("_:") | col.startswith("bnode:")
-
-
 # ---------------------------------------------------------------------------
 # N1: decode roots
 # ---------------------------------------------------------------------------
@@ -80,7 +78,7 @@ def decode_roots(triples: DataFrame) -> DataFrame:
         triples.filter(
             (F.col("p") == RDF_TYPE)
             & (F.col("o") == OWL_CLASS)
-            & (~_bnode_col(F.col("s")))
+            & (~is_bnode(F.col("s")))
         )
         .select(F.col("s").alias("root"))
         .distinct()
@@ -90,10 +88,10 @@ def decode_roots(triples: DataFrame) -> DataFrame:
         .select(F.col("s").alias("axiom"))
         .distinct()
     )
-    src = triples.filter(F.col("p") == OWL_NS + "annotatedSource").select(
+    src = triples.filter(F.col("p") == OWL_ANNOTATED_SOURCE).select(
         F.col("s").alias("axiom"), F.col("o").alias("src")
     )
-    tgt = triples.filter(F.col("p") == OWL_NS + "annotatedTarget").select(
+    tgt = triples.filter(F.col("p") == OWL_ANNOTATED_TARGET).select(
         F.col("s").alias("axiom"), F.col("o").alias("tgt")
     )
     # one aggregated flag dim (node → is-Class, has-any-type) joined on
@@ -159,11 +157,11 @@ def assign_forests(triples: DataFrame, roots: DataFrame) -> DataFrame:
     """
     t = triples.select("s", "p", "o", "o_is_literal")
     below = transitive_closure(
-        t.filter(_bnode_col(F.col("s")) & _bnode_col(F.col("o"))), "s", "o"
+        t.filter(is_bnode(F.col("s")) & is_bnode(F.col("o"))), "s", "o"
     )
     tops = (
         roots.join(t, roots.root == t.s)
-        .filter(_bnode_col(F.col("o")))
+        .filter(is_bnode(F.col("o")))
         .select("root", F.col("o").alias("node"))
     )
     members = (
@@ -207,11 +205,11 @@ def _decode_forest(root: str, rows: list[tuple[str, str, str, bool]]):
 
     # --- axiom reconciliation (owlnets.py:346-352)
     if OWL_AXIOM in root_types:
-        src = [o for p, o, _ in by_subject.get(root, []) if p == OWL_NS + "annotatedSource"]
-        tgt = [o for p, o, _ in by_subject.get(root, []) if p == OWL_NS + "annotatedTarget"]
+        src = [o for p, o, _ in by_subject.get(root, []) if p == OWL_ANNOTATED_SOURCE]
+        tgt = [o for p, o, _ in by_subject.get(root, []) if p == OWL_ANNOTATED_TARGET]
         tgt_lit = [
             lit for p, o, lit in by_subject.get(root, [])
-            if p in (OWL_NS + "annotatedSource", OWL_NS + "annotatedTarget") and lit
+            if p in (OWL_ANNOTATED_SOURCE, OWL_ANNOTATED_TARGET) and lit
         ]
         if not src or not tgt or tgt_lit:
             return out_triples, status

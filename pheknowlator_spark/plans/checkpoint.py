@@ -191,7 +191,7 @@ class StageStore:
         """Small-file compaction: rewrite a committed stage into
         ``ceil(total_bytes / target_file_bytes)`` files (the checkpoint
         analog of Iceberg's ``rewrite_data_files``). Incremental commits
-        (one ``incremental_triples`` batch per crawl drop) accrete many
+        (one ``incremental_build`` stage per crawl drop) accrete many
         small files; at 100 TB the resulting per-file task overhead and
         footer-listing cost dominate downstream scans, so compaction is a
         first-class maintenance op, not an afterthought.

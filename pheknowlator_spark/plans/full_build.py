@@ -7,7 +7,8 @@ pkt_kg/knowledge_graph.py:540-641, SURVEY §3.2):
                                 OWLTools subprocess is out of scope per
                                 SURVEY §2.1 — inputs are parsed triples)
 3. metadata harvest            (metadata.py:101-155 → extract_metadata)
-4. logic/annotation split      (kg_utils.py:600-650 → split_logic_annotation)
+4. logic/annotation split      (kg_utils.py:600-650 → annotation_assertions,
+                                then graph_difference)
 5. edge construction           (G3-G5; class-membership gate P9,
                                 knowledge_graph.py:248-267; ray-actor LPT
                                 sharding replaced by Spark partitioning)
@@ -22,9 +23,15 @@ lineage rows) — the Spark twin of the reference's file-per-stage IR.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pheknowlator_spark.functions.rdf import (
+    FULL_TRIPLE_COLS,
+    remove_bnode_namespace,
+)
 from pheknowlator_spark.operators.constructors import construct_edges
 from pheknowlator_spark.operators.metadata import (
     adds_ontology_annotations,
@@ -40,8 +47,6 @@ from pheknowlator_spark.operators.owl_filters import (
 )
 from pheknowlator_spark.operators.owlnets import run_owlnets
 from pheknowlator_spark.plans.checkpoint import StageStore
-
-TRIPLE_COLS = ["s", "p", "o", "o_is_literal", "o_lang", "o_datatype"]
 
 
 def load_relation_maps(
@@ -83,9 +88,9 @@ def apply_inverse_relations(edges: DataFrame, inverse_map: DataFrame) -> DataFra
 def merge_ontologies(parts: list[DataFrame]) -> DataFrame:
     """Ontology merge (kg_utils.py:226-251): set-union of the parsed
     ontology triple tables (rdflib Graph += semantics)."""
-    out = parts[0].select(*TRIPLE_COLS)
+    out = parts[0].select(*FULL_TRIPLE_COLS)
     for p in parts[1:]:
-        out = out.unionByName(p.select(*TRIPLE_COLS))
+        out = out.unionByName(p.select(*FULL_TRIPLE_COLS))
     return out.distinct()
 
 
@@ -96,8 +101,7 @@ def _construct_gated_edges(
     inverse_relations: DataFrame | None,
     approach: str,
 ) -> DataFrame:
-    """Inverse-relation fill + P9 class-membership gate + G3-G5 construction
-    (shared by full_build / partial_build)."""
+    """Inverse-relation fill + P9 class-membership gate + G3-G5 construction."""
     e = edges
     if inverse_relations is not None:
         e = apply_inverse_relations(e, inverse_relations)
@@ -119,6 +123,55 @@ def _construct_gated_edges(
         F.lit(None).cast("string").alias("o_lang"),
         F.lit(None).cast("string").alias("o_datatype"),
     ).distinct()
+
+
+def _build_prefix(
+    store: StageStore,
+    ontologies: list[DataFrame],
+    edges: DataFrame,
+    subclass_map: DataFrame | None,
+    inverse_relations: DataFrame | None,
+    approach: str,
+) -> dict[str, DataFrame]:
+    """The stages FullBuild and PartialBuild share (knowledge_graph.py:
+    354-442 and 540-641): merged_ontology; then metadata,
+    annotation_subset and constructed_edges; then logic_subset."""
+    merged = store.run("merged_ontology", lambda: merge_ontologies(ontologies))
+
+    # metadata / annotation classification / edge construction depend only
+    # on the COMMITTED merged snapshot — submit them concurrently (guide
+    # §2.6: Spark happily runs several jobs in one application; the next
+    # stage's tasks back-fill executors freed by the current stage's tail).
+    # Each store.run still commits its own directory atomically, so resume
+    # semantics are unchanged whatever order they land in.
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = {
+            "metadata": pool.submit(
+                store.run, "metadata", lambda: extract_metadata(merged)
+            ),
+            # the classification joins run ONCE: commit the annotation
+            # subset, then logic is the anti-join difference against the
+            # COMMITTED parquet (kg_utils.py:640 computes logic = full −
+            # annotations the same way)
+            "annotation_subset": pool.submit(
+                store.run, "annotation_subset",
+                lambda: annotation_assertions(merged),
+            ),
+            "constructed_edges": pool.submit(
+                store.run, "constructed_edges",
+                lambda: _construct_gated_edges(
+                    merged, edges, subclass_map, inverse_relations, approach
+                ),
+            ),
+        }
+        out = {"merged_ontology": merged}
+        out.update((name, f.result()) for name, f in futures.items())
+
+    out["logic_subset"] = store.run(
+        "logic_subset",
+        lambda: graph_difference(merged, out["annotation_subset"]),
+    )
+    return out
 
 
 def partial_build(
@@ -144,44 +197,19 @@ def partial_build(
     the reasoner-closed result afterwards (the 8-flavor build matrix,
     builds/README.md:124-134).
     """
-    from pheknowlator_spark.functions.rdf import remove_bnode_namespace
-
-    merged = store.run("merged_ontology", lambda: merge_ontologies(ontologies))
-    # metadata / annotation classification / edge construction depend only
-    # on the committed merged snapshot — run concurrently (guide §2.6),
-    # same as full_build; per-stage commits stay atomic and resumable
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_meta = pool.submit(
-            store.run, "metadata", lambda: extract_metadata(merged)
-        )
-        f_annot = pool.submit(
-            store.run, "annotation_subset",
-            lambda: annotation_assertions(merged),
-        )
-        f_constructed = pool.submit(
-            store.run, "constructed_edges",
-            lambda: _construct_gated_edges(
-                merged, edges, subclass_map, inverse_relations, approach
-            ),
-        )
-        metadata = f_meta.result()
-        annotations = f_annot.result()
-        constructed = f_constructed.result()
-    logic = store.run(
-        "logic_subset", lambda: graph_difference(merged, annotations)
+    out = _build_prefix(
+        store, ontologies, edges, subclass_map, inverse_relations, approach
     )
     logic_full = store.run(
         "logic_with_edges",
-        lambda: logic.select(*TRIPLE_COLS)
-        .unionByName(constructed.select(*TRIPLE_COLS))
+        lambda: out["logic_subset"].select(*FULL_TRIPLE_COLS)
+        .unionByName(out["constructed_edges"].select(*FULL_TRIPLE_COLS))
         .distinct(),
     )
 
     def merge_partial() -> DataFrame:
-        full = annotations.select(*TRIPLE_COLS).unionByName(
-            logic_full.select(*TRIPLE_COLS)
+        full = out["annotation_subset"].select(*FULL_TRIPLE_COLS).unionByName(
+            logic_full.select(*FULL_TRIPLE_COLS)
         )
         # the merged partial graph strips pkt bnode namespacing; the logic/
         # annotation subsets keep it (knowledge_graph.py:435-438)
@@ -189,17 +217,10 @@ def partial_build(
             "s", remove_bnode_namespace(F.col("s"))
         ).withColumn("o", remove_bnode_namespace(F.col("o"))).distinct()
 
-    partial = store.run("partial_graph", merge_partial)
+    out["logic_with_edges"] = logic_full
+    out["partial_graph"] = store.run("partial_graph", merge_partial)
     store.write_manifest()
-    return {
-        "merged_ontology": merged,
-        "metadata": metadata,
-        "annotation_subset": annotations,
-        "logic_subset": logic,
-        "constructed_edges": constructed,
-        "logic_with_edges": logic_full,
-        "partial_graph": partial,
-    }
+    return out
 
 
 def post_closure_build(
@@ -236,46 +257,13 @@ def full_build(
 ) -> dict[str, DataFrame]:
     """Run the full build through checkpointed stages; returns the named
     stage DataFrames (all committed parquet snapshots)."""
-
-    merged = store.run("merged_ontology", lambda: merge_ontologies(ontologies))
-
-    # metadata / annotation classification / edge construction depend only
-    # on the COMMITTED merged snapshot — submit them concurrently (guide
-    # §2.6: Spark happily runs several jobs in one application; the next
-    # stage's tasks back-fill executors freed by the current stage's tail).
-    # Each store.run still commits its own directory atomically, so resume
-    # semantics are unchanged whatever order they land in.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_meta = pool.submit(
-            store.run, "metadata", lambda: extract_metadata(merged)
-        )
-        # the classification joins run ONCE: commit the annotation subset,
-        # then logic is the anti-join difference against the COMMITTED
-        # parquet (kg_utils.py:640 computes logic = full − annotations the
-        # same way)
-        f_annot = pool.submit(
-            store.run, "annotation_subset",
-            lambda: annotation_assertions(merged),
-        )
-        f_constructed = pool.submit(
-            store.run, "constructed_edges",
-            lambda: _construct_gated_edges(
-                merged, edges, subclass_map, inverse_relations, approach
-            ),
-        )
-        metadata = f_meta.result()
-        annotations = f_annot.result()
-        constructed = f_constructed.result()
-
-    logic = store.run(
-        "logic_subset", lambda: graph_difference(merged, annotations)
+    out = _build_prefix(
+        store, ontologies, edges, subclass_map, inverse_relations, approach
     )
 
     def assemble() -> DataFrame:
-        graph = logic.select(*TRIPLE_COLS).unionByName(
-            constructed.select(*TRIPLE_COLS)
+        graph = out["logic_subset"].select(*FULL_TRIPLE_COLS).unionByName(
+            out["constructed_edges"].select(*FULL_TRIPLE_COLS)
         )
         graph = remove_self_loops(graph).distinct()
         # G6 node-metadata enrichment over nodes actually in the graph
@@ -284,7 +272,7 @@ def full_build(
             .unionByName(graph.select(F.col("o").alias("uri")))
             .distinct()
         )
-        meta_t = metadata_triples(nodes, metadata).select(
+        meta_t = metadata_triples(nodes, out["metadata"]).select(
             "s", "p", "o",
             F.lit(True).alias("o_is_literal"),
             F.lit(None).cast("string").alias("o_lang"),
@@ -296,29 +284,20 @@ def full_build(
         # extract_metadata, so dropping them here would silently lose them
         combined = (
             graph.unionByName(meta_t)
-            .unionByName(annotations.select(*TRIPLE_COLS))
+            .unionByName(out["annotation_subset"].select(*FULL_TRIPLE_COLS))
             .distinct()
         )
         # G7: strip old ontology header(s), add the 7 provenance triples
         return adds_ontology_annotations(combined, filename, kg_version, date_full)
 
-    full_graph = store.run("full_graph", assemble)
-
-    out: dict[str, DataFrame] = {
-        "merged_ontology": merged,
-        "metadata": metadata,
-        "logic_subset": logic,
-        "annotation_subset": annotations,
-        "constructed_edges": constructed,
-        "full_graph": full_graph,
-    }
+    out["full_graph"] = store.run("full_graph", assemble)
     if decode_owl:
-        def decode() -> DataFrame:
-            res = run_owlnets(full_graph, approach=approach, purify=purify)
-            return res["purified" if purify else "owlnets"].select(
-                "s", "p", "o"
-            ).distinct()
-
-        out["owlnets"] = store.run("owlnets", decode)
+        # run_owlnets' graphs already end in a distinct over (s, p, o)
+        out["owlnets"] = store.run(
+            "owlnets",
+            lambda: run_owlnets(
+                out["full_graph"], approach=approach, purify=purify
+            )["purified" if purify else "owlnets"],
+        )
     store.write_manifest()
     return out

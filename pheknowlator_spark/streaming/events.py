@@ -81,38 +81,6 @@ def stream_events_from_parquet(
     return reader.option("maxFilesPerTrigger", 1).parquet(path)
 
 
-def incremental_triples(
-    pages_stream: DataFrame,
-    entity_dictionary: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    min_pages: int = 1,
-):
-    """Incremental webtext→triples: run the batch pipeline per micro-batch
-    via foreachBatch and append to a parquet triple table.
-
-    Co-mention scoring is per-batch (the global n_pages re-score runs in
-    the nightly batch pass — the streaming path optimizes freshness, the
-    batch path optimizes completeness; both share every operator).
-    """
-    from pheknowlator_spark.webtext.pipeline import run_pipeline
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = run_pipeline(batch_df, entity_dictionary, min_pages=min_pages)
-        (
-            out["triples"]
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    return (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-
-
 def incremental_build(
     spark: SparkSession,
     store,
@@ -256,7 +224,7 @@ def streaming_capture_dedup(
     seen per horizon (freshness path, state evicted at the watermark);
     the nightly batch pass re-resolves to the globally LATEST capture via
     ``latest_capture`` (completeness path) — same split as
-    ``incremental_triples`` vs the batch re-score.
+    ``incremental_build`` vs the batch re-score.
 
     State is one row per distinct in-horizon norm_url in the state store,
     not executor memory — bounded at 10^12-doc scale by crawl-rate ×

@@ -24,7 +24,7 @@ from pheknowlator_spark.functions.rdf import (
     RDF_TYPE,
     RDFS_SUBCLASSOF,
 )
-from pheknowlator_spark.operators.constructors import construct_edges, core_constructor_df
+from pheknowlator_spark.operators.constructors import construct_edges
 
 DOID = OBO + "DOID_3075"
 DOID2 = OBO + "DOID_1080"
@@ -210,16 +210,6 @@ def test_entity_entity_both_mapped(spark):
     exp_core = expected_subclass_core(g2, g3, OBO + "RO_0002435", OBO + "RO_0002435")
     got = set(rows_to_triples(triples))
     assert set(exp_core) <= got
-
-
-def test_core_constructor_df_passthrough(spark):
-    df = spark.createDataFrame(
-        [(DOID, DOID2, REL, None, "e1")],
-        "n1_uri string, n2_uri string, rel_uri string, inv_rel_uri string, tag string",
-    )
-    out = core_constructor_df(df, approach="subclass")
-    assert out.count() == 9
-    assert out.select("tag").distinct().collect()[0].tag == "e1"
 
 
 def test_plan_has_no_python_udf(spark):

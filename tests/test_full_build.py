@@ -1,7 +1,9 @@
 """Full-build driver test (FullBuild.construct_knowledge_graph parity,
 knowledge_graph.py:540-641): reference OWL fixture in → staged, resumable
 build out, with the class-membership gate, metadata enrichment, header
-replacement, and OWL-NETS decode all exercised end-to-end."""
+replacement, and OWL-NETS decode all exercised end-to-end. Tests that need
+the reference checkout skip without it; the partial and post-closure
+builds also run on a small in-memory ontology."""
 
 import os
 
@@ -17,10 +19,6 @@ from pheknowlator_spark.plans.full_build import (
 )
 
 REF = "/root/reference/tests/data"
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(f"{REF}/PheKnowLator_Closed.owl"),
-    reason="reference fixtures not present",
-)
 
 RDF_T = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 OWL = "http://www.w3.org/2002/07/owl#"
@@ -28,13 +26,67 @@ OBO = "http://purl.obolibrary.org/obo/"
 
 
 @pytest.fixture(scope="module")
-def ontology(spark):
+def ref_dir():
+    if not os.path.exists(f"{REF}/PheKnowLator_Closed.owl"):
+        pytest.skip(f"reference fixtures not present in {REF}")
+    return REF
+
+
+@pytest.fixture(scope="module")
+def ontology(spark, ref_dir):
     from pheknowlator_spark.sources.rdfxml import read_rdfxml
 
-    return read_rdfxml(spark, f"{REF}/PheKnowLator_Closed.owl")
+    return read_rdfxml(spark, f"{ref_dir}/PheKnowLator_Closed.owl")
 
 
-def test_load_relation_maps(spark):
+@pytest.fixture(scope="module")
+def small_ontology(spark):
+    """Five SO classes in a subClassOf chain, an owl:Axiom reification of
+    one chain link with a dbXref payload, a declared annotation property
+    with a direct assertion, and a 3-member owl:unionOf."""
+    rdfs = "http://www.w3.org/2000/01/rdf-schema#"
+    rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    xref = "http://www.geneontology.org/formats/oboInOwl#hasDbXref"
+    sco = rdfs + "subClassOf"
+    so = [f"{OBO}SO_000000{i}" for i in range(1, 6)]
+    uri = [
+        *[(c, RDF_T, OWL + "Class") for c in so],
+        (so[1], sco, so[0]), (so[2], sco, so[1]), (so[3], sco, so[2]),
+        (xref, RDF_T, OWL + "AnnotationProperty"),
+        (OBO + "RO_0004004", RDF_T, OWL + "ObjectProperty"),
+        ("bnode:ax1", RDF_T, OWL + "Axiom"),
+        ("bnode:ax1", OWL + "annotatedSource", so[1]),
+        ("bnode:ax1", OWL + "annotatedProperty", sco),
+        ("bnode:ax1", OWL + "annotatedTarget", so[0]),
+        (so[4], sco, "bnode:u"),
+        ("bnode:u", RDF_T, OWL + "Class"),
+        ("bnode:u", OWL + "unionOf", "bnode:l0"),
+        ("bnode:l0", rdf + "first", so[1]), ("bnode:l0", rdf + "rest", "bnode:l1"),
+        ("bnode:l1", rdf + "first", so[2]), ("bnode:l1", rdf + "rest", "bnode:l2"),
+        ("bnode:l2", rdf + "first", so[3]), ("bnode:l2", rdf + "rest", rdf + "nil"),
+    ]
+    lit = [
+        (so[0], rdfs + "label", "first class"),
+        (so[1], rdfs + "label", "second class"),
+        ("bnode:ax1", xref, "ref:1"),
+        (so[0], xref, "ref:2"),
+    ]
+    return spark.createDataFrame(
+        [(s, p, o, False, None, None) for s, p, o in uri]
+        + [(s, p, o, True, None, None) for s, p, o in lit],
+        "s string, p string, o string, o_is_literal boolean, "
+        "o_lang string, o_datatype string",
+    )
+
+
+@pytest.fixture(params=["reference", "in_memory"])
+def any_ontology(request):
+    return request.getfixturevalue(
+        "ontology" if request.param == "reference" else "small_ontology"
+    )
+
+
+def test_load_relation_maps(spark, ref_dir):
     inv, labels = load_relation_maps(
         spark, f"{REF}/INVERSE_RELATIONS.txt", f"{REF}/RELATIONS_LABELS.txt"
     )
@@ -146,28 +198,30 @@ def test_merge_ontologies_set_semantics(spark):
     assert merge_ontologies([a, a, a]).count() == 1
 
 
-def test_post_closure_build(spark, tmp_path, ontology):
+def test_post_closure_build(spark, tmp_path, any_ontology):
     # PostClosureBuild: reasoner-closed graph in, no edge construction
     from pheknowlator_spark.plans.full_build import post_closure_build
 
     store = StageStore(spark, str(tmp_path / "pc"))
     out = post_closure_build(
-        spark, store, ontology, date_full="04/02/2020 21:22:56"
+        spark, store, any_ontology, date_full="04/02/2020 21:22:56"
     )
     assert out["constructed_edges"].count() == 0
     assert out["full_graph"].count() > 0
     assert out["owlnets"].count() > 0
 
 
-def test_partial_build_contract(spark, tmp_path, ontology):
+def test_partial_build_contract(spark, tmp_path, any_ontology):
     """PartialBuild output contract (reference
     tests/test_knowledge_graph_partial.py:124-137): logic-with-edges,
     annotations-only, and merged partial graph stages exist; annotation
-    merge/metadata/header/decode are DEFERRED for the external reasoner."""
+    merge/metadata/header/decode are DEFERRED for the external reasoner.
+    The stages it shares with FullBuild hold the same rows."""
     from pyspark.sql import functions as F2
 
     from pheknowlator_spark.plans.full_build import partial_build
 
+    ontology = any_ontology
     classes = [
         r.node for r in
         ontology.filter((F.col("p") == RDF_T) & (F.col("o") == OWL + "Class"))
@@ -229,6 +283,16 @@ def test_partial_build_contract(spark, tmp_path, ontology):
         .distinct().count()
     )
     assert pg.count() == merged_ct
+
+    full = full_build(
+        spark, StageStore(spark, str(tmp_path / "full")), [ontology], edges,
+        approach="subclass", decode_owl=False,
+    )
+    for stage in ("merged_ontology", "metadata", "annotation_subset",
+                  "constructed_edges", "logic_subset"):
+        assert sorted(map(repr, out[stage].collect())) == sorted(
+            map(repr, full[stage].collect())
+        ), stage
 
 
 def test_full_build_output_file_contract(spark, tmp_path, ontology):

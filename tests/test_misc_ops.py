@@ -1,6 +1,6 @@
 """Coverage for remaining SURVEY §2 operators: pkt-namespace decode (J9),
 property-graph export (S12), ontology header (G7), whitespace-delimited
-scan (S6 variant), bnode namespacing, incremental streaming triples."""
+scan (S6 variant), bnode namespacing, logic/annotation split."""
 
 import hashlib
 
@@ -202,37 +202,15 @@ def test_filter_owl_semantics_rules(spark):
     assert not any(o == "lit" for _, _, o in got)
 
 
-def test_incremental_streaming_triples(spark, tmp_path):
-    from pheknowlator_spark.sources.pages import entity_dictionary, generate_pages
-    from pheknowlator_spark.streaming.events import incremental_triples
-
-    pages_dir = str(tmp_path / "pages")
-    generate_pages(spark, 40).write.parquet(pages_dir)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(pages_dir).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(pages_dir)
-    )
-    out_path = str(tmp_path / "triples_out")
-    q = incremental_triples(
-        stream,
-        entity_dictionary(spark),
-        out_path,
-        str(tmp_path / "ckpt"),
-        min_pages=1,
-    ).start()
-    q.awaitTermination(180)
-    got = spark.read.parquet(out_path)
-    assert got.count() > 0
-    assert "batch_id" in got.columns
-
-
 def test_split_logic_annotation_cases(spark):
     # N12 splits_knowledge_graph parity (kg_utils.py:600-640): case A (full
     # reification keeps skeleton logical, payload annotated), case B (entity
     # with direct annotation; inbound core refs stay with their axiom),
     # case C (axiom with literal target: everything annotated)
-    from pheknowlator_spark.operators.owl_filters import split_logic_annotation
+    from pheknowlator_spark.operators.owl_filters import (
+        annotation_assertions,
+        graph_difference,
+    )
 
     owl = "http://www.w3.org/2002/07/owl#"
     rdf_t = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -263,7 +241,8 @@ def test_split_logic_annotation_cases(spark):
         "s string, p string, o string, o_is_literal boolean, "
         "o_lang string, o_datatype string",
     )
-    logic, annot = split_logic_annotation(g)
+    annot = annotation_assertions(g)
+    logic = graph_difference(g, annot)
     got_annot = {(r.s, r.p, r.o) for r in annot.collect()}
     expected_annot = {
         (x1, dc, "x"),

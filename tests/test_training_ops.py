@@ -15,7 +15,6 @@ from pheknowlator_spark.functions.text import (
 )
 from pheknowlator_spark.operators.dedup import (
     dedup_exact,
-    exact_duplicates,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
@@ -111,9 +110,6 @@ def docs_with_dups(spark):
 
 
 def test_exact_duplicates(spark, docs_with_dups):
-    groups = exact_duplicates(docs_with_dups).collect()
-    assert len(groups) == 1
-    assert groups[0].doc_ids == [1, 2]
     kept = dedup_exact(docs_with_dups)
     assert kept.count() == 4
     assert {r.doc_id for r in kept.collect()} == {1, 3, 4, 5}
