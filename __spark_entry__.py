@@ -1180,13 +1180,9 @@ def q_minhash_near_dup(spark, sf_dir):
     return minhash_near_duplicates(docs, threshold=0.2).select("a", "b")
 
 
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup over the corpus plus 50 synthesized twins
-    (vec_id+10000, element 0 nudged) — LSH-bucketed candidates + exact
-    cosine verify must recover exactly the twin pairs (threshold 0.9 sits
-    far above the corpus's max natural cosine of 0.52)."""
-    from pheknowlator_spark.operators.dedup import embedding_near_duplicates
-
+def _twin_corpus(spark, sf_dir):
+    """The embeddings (as doubles) plus 50 synthesized twins: vec_id+10000
+    with element 0 nudged, every other element copied."""
     emb = _read(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id",
@@ -1202,7 +1198,17 @@ def q_embedding_near_dup(spark, sf_dir):
             ),
         ).alias("embedding"),
     )
-    corpus = base.unionByName(twins)
+    return base.unionByName(twins)
+
+
+def q_embedding_near_dup(spark, sf_dir):
+    """Embedding-cosine near-dup over the corpus plus 50 synthesized twins
+    (vec_id+10000, element 0 nudged) — LSH-bucketed candidates + exact
+    cosine verify must recover exactly the twin pairs (threshold 0.9 sits
+    far above the corpus's max natural cosine of 0.52)."""
+    from pheknowlator_spark.operators.dedup import embedding_near_duplicates
+
+    corpus = _twin_corpus(spark, sf_dir)
     pairs = embedding_near_duplicates(corpus, threshold=0.9, dim=64)
     return pairs.select("a", "b")
 
@@ -1471,22 +1477,7 @@ def q_semantic_dedup(spark, sf_dir):
     pytest-asserted in test_training_ops.)"""
     from pheknowlator_spark.operators.similarity import semantic_dedup
 
-    emb = _read(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    el0 = F.element_at("embedding", 1).cast("double") * 0.9 + 0.05
-    twins = emb.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 10000).alias("vec_id"),
-        F.concat(
-            F.array(el0),
-            F.transform(
-                F.slice("embedding", 2, 63), lambda x: x.cast("double")
-            ),
-        ).alias("embedding"),
-    )
-    corpus = base.unionByName(twins)
+    corpus = _twin_corpus(spark, sf_dir)
     return semantic_dedup(corpus, threshold=0.9, n_centroids=8)
 
 
@@ -2578,7 +2569,8 @@ _WINNOW_FPS_CTE = r"""w AS (
 
 
 # DuckDB replay of _link_pages (the synthetic anchor-bearing crawl html) —
-# shared by the anchor_topk / robots_allowed oracles
+# shared by the extract_links / host_degrees / anchor_topk / robots_allowed
+# oracles
 _LINK_PAGES_SQL = """
               SELECT
                 'https://h' || CAST(doc_id % 97 AS VARCHAR) || '.example/d'
@@ -3229,32 +3221,8 @@ def oracle_sql() -> dict[str, str]:
         # anchor extraction + href resolution replayed rule-for-rule:
         # fragment strip, absolute / protocol-relative / root-relative /
         # path-relative classes, non-http schemes and empties dropped
-        "extract_links": """
-            WITH pages AS (
-              SELECT
-                'https://h' || CAST(doc_id % 97 AS VARCHAR) || '.example/d'
-                  || CAST(doc_id % 5 AS VARCHAR) || '/p'
-                  || CAST(doc_id AS VARCHAR) AS url,
-                '<html><body>intro <a href="/x/'
-                || CAST((doc_id * 7) % 1000 AS VARCHAR) || '">r</a> mid'
-                || (CASE WHEN doc_id % 2 = 0
-                     THEN ' <a class="n" href="sub/'
-                          || CAST(doc_id % 13 AS VARCHAR) || '">rel</a>'
-                     ELSE '' END)
-                || (CASE WHEN doc_id % 3 = 0
-                     THEN ' <a href="https://ext'
-                          || CAST(doc_id % 11 AS VARCHAR)
-                          || '.example/abs#sec">a</a>'
-                     ELSE '' END)
-                || (CASE WHEN doc_id % 5 = 0
-                     THEN ' <a href="//cdn.example/lib">c</a>' ELSE '' END)
-                || (CASE WHEN doc_id % 7 = 0
-                     THEN ' <a href="javascript:void(0)">j</a>' ELSE '' END)
-                || (CASE WHEN doc_id % 4 = 0
-                     THEN ' <a href="#top">t</a>' ELSE '' END)
-                || ' outro</body></html>' AS html
-              FROM documents
-            ),
+        "extract_links": f"""
+            WITH pages AS ({_LINK_PAGES_SQL}),
             exploded AS (
               SELECT url,
                 unnest(regexp_extract_all(html,
@@ -3277,7 +3245,7 @@ def oracle_sql() -> dict[str, str]:
             resolved AS (
               SELECT url, href,
                 CASE
-                  WHEN regexp_matches(raw, '^https?://') THEN raw
+                  WHEN regexp_matches(raw, '^https?://', 'i') THEN raw
                   WHEN raw LIKE '//%' THEN scheme || ':' || raw
                   WHEN raw LIKE '/%' THEN scheme || '://' || host || raw
                   WHEN NOT regexp_matches(raw,
@@ -3293,32 +3261,8 @@ def oracle_sql() -> dict[str, str]:
             FROM resolved WHERE link_url IS NOT NULL
         """,
         # same link universe, aggregated to host pairs
-        "host_degrees": """
-            WITH pages AS (
-              SELECT
-                'https://h' || CAST(doc_id % 97 AS VARCHAR) || '.example/d'
-                  || CAST(doc_id % 5 AS VARCHAR) || '/p'
-                  || CAST(doc_id AS VARCHAR) AS url,
-                '<html><body>intro <a href="/x/'
-                || CAST((doc_id * 7) % 1000 AS VARCHAR) || '">r</a> mid'
-                || (CASE WHEN doc_id % 2 = 0
-                     THEN ' <a class="n" href="sub/'
-                          || CAST(doc_id % 13 AS VARCHAR) || '">rel</a>'
-                     ELSE '' END)
-                || (CASE WHEN doc_id % 3 = 0
-                     THEN ' <a href="https://ext'
-                          || CAST(doc_id % 11 AS VARCHAR)
-                          || '.example/abs#sec">a</a>'
-                     ELSE '' END)
-                || (CASE WHEN doc_id % 5 = 0
-                     THEN ' <a href="//cdn.example/lib">c</a>' ELSE '' END)
-                || (CASE WHEN doc_id % 7 = 0
-                     THEN ' <a href="javascript:void(0)">j</a>' ELSE '' END)
-                || (CASE WHEN doc_id % 4 = 0
-                     THEN ' <a href="#top">t</a>' ELSE '' END)
-                || ' outro</body></html>' AS html
-              FROM documents
-            ),
+        "host_degrees": f"""
+            WITH pages AS ({_LINK_PAGES_SQL}),
             exploded AS (
               SELECT url,
                 unnest(regexp_extract_all(html,
@@ -3341,7 +3285,7 @@ def oracle_sql() -> dict[str, str]:
             links AS (
               SELECT url,
                 CASE
-                  WHEN regexp_matches(raw, '^https?://') THEN raw
+                  WHEN regexp_matches(raw, '^https?://', 'i') THEN raw
                   WHEN raw LIKE '//%' THEN scheme || ':' || raw
                   WHEN raw LIKE '/%' THEN scheme || '://' || host || raw
                   WHEN NOT regexp_matches(raw,

@@ -501,8 +501,6 @@ def embedding_near_duplicates(
     dim: int | None = None,
     bits: int = 8,
     tables: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: [a, b, cosine].
 
@@ -519,27 +517,14 @@ def embedding_near_duplicates(
     proportionally larger bucketing fan-out.
     """
     from pheknowlator_spark.operators.similarity import (
-        _bucket_structs,
+        _lsh_buckets,
+        _vector_dim,
         cosine,
     )
 
-    if dim is None:
-        meta = dict(vectors.schema[vec_col].metadata or {})
-        dim = meta.get("dim")
-    if dim is None:
-        raise ValueError("embedding_near_duplicates needs dim= (or column metadata)")
-
-    v = vectors.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-    # single-scan bucketing: all tables' buckets in one projection +
-    # explode (a per-table union would rescan the corpus ``tables`` times)
-    buckets = v.select(
-        "__id",
-        "__v",
-        F.explode(_bucket_structs("__v", tables, bits, dim)).alias("tb"),
-    ).select(
-        "__id",
-        F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"),
-    )
+    dim = _vector_dim(vectors, dim)
+    v = vectors.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
+    buckets = _lsh_buckets(v, tables, bits, dim)
 
     # candidate generation moves IDS only: the (table, bucket) self-join
     # and the pair dedup shuffle two id columns, not two dim-length

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over ``[vec_id, embedding]`` vector tables and
+``[query_id, embedding]`` query tables (embedding: array<float>).
 
 * ``brute_force_topk``  — exact cosine top-k: query-set × corpus join with
   the dot product as ``F.aggregate``/``zip_with`` column math (JVM-side),
@@ -14,7 +15,12 @@
 * ``kmeans_centroids``  — distributed spherical Lloyd k-means trainer for
   the IVF cells (broadcast assign + per-dimension mean per iteration;
   driver holds only the k×dim centroid table, like Spark MLlib k-means).
-"""
+
+Each vector step has one implementation, the one place a vectorized
+kernel swaps in: ``cosine`` scores, ``_lsh_buckets`` hashes (also for
+``dedup.embedding_near_duplicates``), ``_nearest_centroid`` assigns
+cells, ``_top_k`` ranks, ``_vector_dim`` resolves the dimensionality.
+``brute_force_topk``, the exact reference, keeps its own scoring."""
 
 from __future__ import annotations
 
@@ -43,25 +49,20 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k per query: [query_id, vec_id, score, rank]."""
-    c = corpus.select(F.col(id_col), F.col(vec_col).alias("__cv"))
+    c = corpus.select(F.col("vec_id"), F.col("embedding").alias("__cv"))
     q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qv")
+        F.col("query_id"), F.col("embedding").alias("__qv")
     )
     scored = q.crossJoin(c).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         cosine(F.col("__qv"), F.col("__cv")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -116,6 +117,65 @@ def _bucket_structs(vec_col: str, tables: int, bits: int, dim: int) -> Column:
     return F.expr("array(" + ", ".join(structs) + ")")
 
 
+def _lsh_buckets(df: DataFrame, tables: int, bits: int, dim: int) -> DataFrame:
+    """``(id, table, bucket)`` rows of an ``[id, vector]`` frame, all tables
+    in one projection + explode. Ids only: callers re-attach vectors after
+    the bucket join, so no vector crosses the bucket exchange."""
+    id_col, vec_col = df.columns
+    return df.select(
+        id_col,
+        vec_col,
+        F.explode(_bucket_structs(vec_col, tables, bits, dim)).alias("tb"),
+    ).select(
+        id_col,
+        F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"),
+    )
+
+
+def _vector_dim(df: DataFrame, dim: int | None) -> int:
+    """``dim``, else the ``embedding`` column's ``{'dim': n}`` metadata (a
+    driver-side ``first()`` probe would cost an extra job)."""
+    if dim is None:
+        dim = dict(df.schema["embedding"].metadata or {}).get("dim")
+    if dim is None:
+        raise ValueError(
+            "the embedding dimensionality is unknown: pass dim= or attach "
+            "{'dim': n} metadata to the embedding column"
+        )
+    return dim
+
+
+def _top_k(scored: DataFrame, key: str, tie: str, k: int) -> DataFrame:
+    """The ``k`` highest-``score`` rows per ``key`` (ties to the smaller
+    ``tie``), ranked 1..k in a ``rank`` column."""
+    w = Window.partitionBy(key).orderBy(F.col("score").desc(), F.col(tie).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _nearest_centroid(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """``[vec_id, centroid_id, __cv]``: each vector's max-cosine centroid
+    (ties to the smaller id) by one ``min_by`` hash aggregation over the
+    broadcast centroids — one row per vector per partition crosses the
+    shuffle, where a row_number window sorted k rows per vector."""
+    c = vectors.select(F.col("vec_id"), F.col("embedding").alias("__cv"))
+    sim = cosine(F.col("__cv"), F.col("__cent"))
+    return (
+        c.crossJoin(F.broadcast(centroids))
+        .groupBy("vec_id")
+        .agg(
+            F.min_by(
+                F.struct(F.col("centroid_id").alias("centroid_id"),
+                         F.col("__cv").alias("__cv")),
+                F.struct((-sim).alias("d"), F.col("centroid_id")),
+            ).alias("__w")
+        )
+        .select("vec_id", F.col("__w.centroid_id").alias("centroid_id"),
+                F.col("__w.__cv").alias("__cv"))
+    )
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -123,66 +183,32 @@ def lsh_topk(
     dim: int | None = None,
     bits: int = 8,
     tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Approximate cosine top-k via random-hyperplane LSH + exact re-rank.
-
-    ``dim`` (embedding dimensionality) is resolved plan-side: vector tables
-    carry a fixed dim by contract, so callers pass it (or it is read from
-    column metadata when present). No driver-side ``first()`` probe — the
-    ANN job must be the only job.
-    """
-    if dim is None:
-        meta = dict(corpus.schema[vec_col].metadata or {})
-        dim = meta.get("dim")
-    if dim is None:
-        raise ValueError(
-            "lsh_topk needs the embedding dimensionality: pass dim= or attach "
-            "{'dim': n} metadata to the vector column (a driver-side first() "
-            "probe would launch an extra job before the ANN job)"
-        )
-    c = corpus.select(F.col(id_col), F.col(vec_col).alias("__cv"))
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qv"))
-
-    # single-scan bucketing: every table's bucket computed in one
-    # projection and exploded (a per-table union would rescan the corpus
-    # ``tables`` times)
-    cb = c.select(
-        id_col,
-        "__cv",
-        F.explode(_bucket_structs("__cv", tables, bits, dim)).alias("tb"),
-    ).select(id_col, "__cv", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
-    qb = q.select(
-        query_id_col,
-        "__qv",
-        F.explode(_bucket_structs("__qv", tables, bits, dim)).alias("tb"),
-    ).select(query_id_col, "__qv", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
-
+    """Approximate cosine top-k via random-hyperplane LSH + exact re-rank:
+    candidates are the distinct (query_id, vec_id) pairs that share a
+    bucket in any table, and their vectors re-attach by id for the cosine.
+    ``dim`` defaults to the ``embedding`` column's metadata."""
+    dim = _vector_dim(corpus, dim)
+    c = corpus.select("vec_id", "embedding")
+    q = queries.select("query_id", "embedding")
     cands = (
-        qb.join(cb, ["table", "bucket"])
-        .select(query_id_col, id_col, "__qv", "__cv")
+        _lsh_buckets(q, tables, bits, dim)
+        .join(_lsh_buckets(c, tables, bits, dim), ["table", "bucket"])
+        .select("query_id", "vec_id")
         .distinct()
     )
-    scored = cands.select(
-        query_id_col, id_col, cosine(F.col("__qv"), F.col("__cv")).alias("score")
+    scored = (
+        cands.join(q.withColumnRenamed("embedding", "__qv"), "query_id")
+        .join(c.withColumnRenamed("embedding", "__cv"), "vec_id")
+        .select(
+            "query_id", "vec_id", cosine(F.col("__qv"), F.col("__cv")).alias("score")
+        )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, "query_id", "vec_id", k)
 
 
 def kmeans_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, n_centroids: int = 16, iters: int = 5
 ) -> DataFrame:
     """Distributed spherical Lloyd k-means for IVF coarse quantization.
 
@@ -201,31 +227,17 @@ def kmeans_centroids(
     """
     cents = [
         (str(r[0]), [float(x) for x in r[1]])
-        for r in corpus.orderBy(id_col).limit(n_centroids)
-        .select(id_col, vec_col).collect()
+        for r in corpus.orderBy("vec_id").limit(n_centroids)
+        .select("vec_id", "embedding").collect()
     ]
     spark = corpus.sparkSession
-    c = corpus.select(F.col(id_col), F.col(vec_col).alias("__cv"))
     for _ in range(max(0, iters)):
         cent_df = spark.createDataFrame(
             cents, "centroid_id string, __cent array<double>"
         )
-        sim = cosine(F.col("__cv"), F.col("__cent"))
-        assigned = (
-            c.crossJoin(F.broadcast(cent_df))
-            .groupBy(id_col)
-            .agg(
-                F.min_by(
-                    F.struct(F.col("centroid_id"), F.col("__cv")),
-                    F.struct((-sim).alias("d"), F.col("centroid_id")),
-                ).alias("__w")
-            )
-            .select(F.col("__w.centroid_id"), F.col("__w.__cv"))
-        )
         means = (
-            assigned.select(
-                "centroid_id", F.posexplode("__cv").alias("pos", "val")
-            )
+            _nearest_centroid(corpus, cent_df)
+            .select("centroid_id", F.posexplode("__cv").alias("pos", "val"))
             .groupBy("centroid_id", "pos")
             .agg(F.avg("val").alias("m"))
             .collect()
@@ -253,9 +265,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF coarse quantization: corpus partitioned by nearest centroid,
@@ -264,68 +273,35 @@ def ivf_topk(
     :func:`kmeans_centroids` output for trained cells (tighter cells →
     higher recall at the same nprobe)."""
     cents = centroids if centroids is not None else (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(n_centroids)
         .select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("__cent")
+            F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("__cent")
         )
     )
-    c = corpus.select(F.col(id_col), F.col(vec_col).alias("__cv"))
-    # assign each corpus vector to nearest centroid (broadcast centroids):
-    # min_by hash aggregation — map-side partial combine, one candidate row
-    # per vector per partition crosses the shuffle. The row_number window
-    # this replaces shuffled k rows per vector through a full sort.
-    sim = cosine(F.col("__cv"), F.col("__cent"))
-    corpus_cells = (
-        c.crossJoin(F.broadcast(cents))
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.struct(F.col("__cv").alias("__cv"),
-                         F.col("centroid_id").alias("centroid_id")),
-                F.struct((-sim).alias("d"), F.col("centroid_id")),
-            ).alias("__w")
-        )
-        .select(id_col, F.col("__w.__cv").alias("__cv"),
-                F.col("__w.centroid_id").alias("centroid_id"))
+    q = queries.select(F.col("query_id"), F.col("embedding").alias("__qv"))
+    q_scored = q.crossJoin(F.broadcast(cents)).withColumn(
+        "score", cosine(F.col("__qv"), F.col("__cent"))
     )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qv"))
-    q_assigned = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("sim", cosine(F.col("__qv"), F.col("__cent")))
+    q_cells = _top_k(q_scored, "query_id", "centroid_id", nprobe).select(
+        "query_id", "__qv", "centroid_id"
     )
-    w_probe = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc()
+    scored = q_cells.join(_nearest_centroid(corpus, cents), "centroid_id").select(
+        "query_id", "vec_id", cosine(F.col("__qv"), F.col("__cv")).alias("score")
     )
-    q_cells = (
-        q_assigned.withColumn("__rn", F.row_number().over(w_probe))
-        .filter(F.col("__rn") <= nprobe)
-        .select(query_id_col, "__qv", "centroid_id")
-    )
-    scored = q_cells.join(corpus_cells, "centroid_id").select(
-        query_id_col, id_col, cosine(F.col("__qv"), F.col("__cv")).alias("score")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, "query_id", "vec_id", k)
 
 
 def semantic_dedup(
     vectors: DataFrame,
     threshold: float = 0.9,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster the embedding space, call a
     vector a semantic duplicate if a LOWER-ID vector in the SAME cluster
     has cosine ≥ ``threshold``, keep one representative per duplicate
-    group. Returns ``[<id_col>, centroid_id, keep]`` for every input
+    group. Returns ``[vec_id, centroid_id, keep]`` for every input
     vector — the caller semi-joins ``keep`` back to the corpus (same
     contract shape as :func:`~pheknowlator_spark.operators.dedup.
     dedup_near`).
@@ -344,33 +320,19 @@ def semantic_dedup(
     partitioning.
     """
     cents = centroids if centroids is not None else (
-        vectors.orderBy(id_col)
+        vectors.orderBy("vec_id")
         .limit(n_centroids)
         .select(
-            F.col(id_col).cast("string").alias("centroid_id"),
-            F.col(vec_col).alias("__cent"),
+            F.col("vec_id").cast("string").alias("centroid_id"),
+            F.col("embedding").alias("__cent"),
         )
     )
-    c = vectors.select(F.col(id_col), F.col(vec_col).alias("__cv"))
-    sim = cosine(F.col("__cv"), F.col("__cent"))
-    cells = (
-        c.crossJoin(F.broadcast(cents))
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.struct(F.col("centroid_id").alias("centroid_id"),
-                         F.col("__cv").alias("__cv")),
-                F.struct((-sim).alias("d"), F.col("centroid_id")),
-            ).alias("__w")
-        )
-        .select(id_col, F.col("__w.centroid_id").alias("centroid_id"),
-                F.col("__w.__cv").alias("__cv"))
-    )
+    cells = _nearest_centroid(vectors, cents)
     left = cells.select(
-        "centroid_id", F.col(id_col).alias("a"), F.col("__cv").alias("__va")
+        "centroid_id", F.col("vec_id").alias("a"), F.col("__cv").alias("__va")
     )
     right = cells.select(
-        "centroid_id", F.col(id_col).alias("b"), F.col("__cv").alias("__vb")
+        "centroid_id", F.col("vec_id").alias("b"), F.col("__cv").alias("__vb")
     )
     dups = (
         left.join(right, "centroid_id")
@@ -378,10 +340,10 @@ def semantic_dedup(
             (F.col("a") < F.col("b"))
             & (cosine(F.col("__va"), F.col("__vb")) >= F.lit(threshold))
         )
-        .select(F.col("b").alias(id_col))
+        .select(F.col("b").alias("vec_id"))
         .distinct()
         .withColumn("__dup", F.lit(True))
     )
-    return cells.join(dups, id_col, "left").select(
-        id_col, "centroid_id", F.col("__dup").isNull().alias("keep")
+    return cells.join(dups, "vec_id", "left").select(
+        "vec_id", "centroid_id", F.col("__dup").isNull().alias("keep")
     )

@@ -11,9 +11,11 @@ snapshot-per-stage semantics; swapping ``format('parquet')`` for
 change where an Iceberg catalog exists (the StageStore API is
 format-agnostic).
 
-Lineage: one row per (stage, partition_id) with input/output row counts and
-wall time, written next to the stage data — mirrors SURVEY §3.4's
-``lineage(stage, partition_id, input_rows, output_rows, wall_ms, ts)``.
+Lineage: one row per (stage, partition_id) with the output row count and
+wall time, written next to the stage data — ``LINEAGE_SCHEMA`` is
+``lineage(stage, partition_id, file, output_rows, wall_ms, ts)``. SURVEY
+§3.4 also lists ``input_rows``; it is not recorded, because a stage's
+input row count would cost a second pass over its inputs.
 ``partition_id`` is the stage's sorted-file index (file enumeration order),
 NOT a writer partition id: for stages written with ``partition_by`` the
 files live under key directories, so the index enumerates files across all

@@ -48,7 +48,8 @@ def extract_links(
     * fragment (``#...``) stripped from the href first;
     * empty / ``javascript:`` / ``mailto:`` / ``data:`` / ``tel:`` hrefs
       (and any non-http(s) scheme) are dropped;
-    * absolute ``http(s)://...`` kept as-is;
+    * absolute ``http(s)://...`` kept as-is, the scheme matched
+      case-insensitively (``HTTP://`` is absolute too);
     * protocol-relative ``//host/p`` gets the page's scheme;
     * root-relative ``/p`` gets the page's ``scheme://host``;
     * path-relative ``p`` resolves against the page path's directory
@@ -72,7 +73,7 @@ def extract_links(
     raw = F.regexp_replace(F.col("href"), r"#.*$", "")
     has_scheme = raw.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*:")
     resolved = (
-        F.when(raw.rlike(r"^https?://"), raw)
+        F.when(raw.rlike(r"(?i)^https?://"), raw)
         .when(raw.startswith("//"), F.concat(scheme, F.lit(":"), raw))
         .when(raw.startswith("/"), F.concat(scheme, F.lit("://"), host, raw))
         .when(

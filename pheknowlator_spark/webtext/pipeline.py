@@ -15,7 +15,7 @@ reusing its construction semantics downstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pheknowlator_spark.functions.rdf import OBO
@@ -39,6 +39,21 @@ def curie_namespace(col):
     return F.split(col, "_").getItem(0)
 
 
+def _sorted_pairs(cs: Column) -> Column:
+    """Pairs of a page's sorted entity set: element i with every later
+    one, so ``c1 < c2`` and each pair once per page — a map-side explode
+    where a distinct + self-join cost two shuffles and a persist."""
+    return F.flatten(
+        F.transform(
+            cs,
+            lambda x, i: F.transform(
+                F.slice(cs, i + F.lit(2), F.size(cs)),
+                lambda y: F.struct(x.alias("c1"), y.alias("c2")),
+            ),
+        )
+    )
+
+
 def derive_comention_edges(
     linked: DataFrame,
     edge_type_map: dict[tuple[str, str], tuple[str, str, str | None]] | None = None,
@@ -58,23 +73,9 @@ def derive_comention_edges(
     page_sets = linked.groupBy("url").agg(
         F.sort_array(F.collect_set("curie")).alias("__cs")
     )
-    # unordered pairs from the sorted set: element i with every later
-    # element — c1 < c2 by construction, each pair appears exactly once
-    # per url (replaces the former distinct + self-join: two shuffles and
-    # an eager corpus-scale persist)
-    cs = F.col("__cs")
-    pair_structs = F.flatten(
-        F.transform(
-            cs,
-            lambda x, i: F.transform(
-                F.slice(cs, i + F.lit(2), F.size(cs)),
-                lambda y: F.struct(x.alias("c1"), y.alias("c2")),
-            ),
-        )
-    )
-    pairs = page_sets.select("url", F.explode(pair_structs).alias("__p")).select(
-        "url", F.col("__p.c1").alias("c1"), F.col("__p.c2").alias("c2")
-    )
+    pairs = page_sets.select(
+        "url", F.explode(_sorted_pairs(F.col("__cs"))).alias("__p")
+    ).select("url", F.col("__p.c1").alias("c1"), F.col("__p.c2").alias("c2"))
 
     ns1, ns2 = curie_namespace(F.col("c1")), curie_namespace(F.col("c2"))
     # build the CASE mapping both (ns1,ns2) and (ns2,ns1)
@@ -113,12 +114,38 @@ def derive_comention_edges(
     return scored.filter(F.col("n_pages") >= min_pages)
 
 
-def comention_pmi(
-    linked: DataFrame,
-    min_pages: int = 1,
-    id_col: str = "url",
-    entity_col: str = "curie",
-) -> DataFrame:
+def _page_entities(linked: DataFrame) -> DataFrame:
+    """Distinct (page, entity) rows: an entity counts once per page."""
+    return linked.select(
+        F.col("url").alias("__pg"), F.col("curie").alias("__e")
+    ).distinct()
+
+
+def _pair_counts(pe: DataFrame, min_pages: int) -> DataFrame:
+    """``[c1, c2, n_pages, n1, n2]`` for pairs on ≥ ``min_pages`` pages:
+    per-page pair explode, one pair-count aggregation, entity page
+    marginals broadcast to both sides."""
+    marginals = pe.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))
+    page_sets = pe.groupBy("__pg").agg(
+        F.sort_array(F.collect_set("__e")).alias("__cs")
+    )
+    pair_counts = (
+        page_sets.select(F.explode(_sorted_pairs(F.col("__cs"))).alias("__p"))
+        .select(F.col("__p.c1").alias("c1"), F.col("__p.c2").alias("c2"))
+        .groupBy("c1", "c2")
+        .agg(F.count(F.lit(1)).alias("n_pages"))
+        .filter(F.col("n_pages") >= min_pages)
+    )
+    m1 = F.broadcast(
+        marginals.select(F.col("__e").alias("c1"), F.col("__c").alias("n1"))
+    )
+    m2 = F.broadcast(
+        marginals.select(F.col("__e").alias("c2"), F.col("__c").alias("n2"))
+    )
+    return pair_counts.join(m1, "c1").join(m2, "c2")
+
+
+def comention_pmi(linked: DataFrame, min_pages: int = 1) -> DataFrame:
     """Pointwise mutual information for co-mentioned entity pairs — the
     principled weight for the co-mention edges (raw ``n_pages`` counts
     favor ubiquitous entities; PMI corrects for marginal frequency).
@@ -135,42 +162,12 @@ def comention_pmi(
     corpus-scale shuffles are the (page, entity) distinct and the
     pair-count aggregation, both partially combined map-side.
     """
-    pe = linked.select(
-        F.col(id_col).alias("__pg"), F.col(entity_col).alias("__e")
-    ).distinct()
+    pe = _page_entities(linked)
     n_pages_total = pe.select("__pg").distinct().agg(
         F.count(F.lit(1)).alias("__n")
     )
-    marginals = pe.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))
-    page_sets = pe.groupBy("__pg").agg(
-        F.sort_array(F.collect_set("__e")).alias("__cs")
-    )
-    cs = F.col("__cs")
-    pair_structs = F.flatten(
-        F.transform(
-            cs,
-            lambda x, i: F.transform(
-                F.slice(cs, i + F.lit(2), F.size(cs)),
-                lambda y: F.struct(x.alias("c1"), y.alias("c2")),
-            ),
-        )
-    )
-    pair_counts = (
-        page_sets.select(F.explode(pair_structs).alias("__p"))
-        .select(F.col("__p.c1").alias("c1"), F.col("__p.c2").alias("c2"))
-        .groupBy("c1", "c2")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .filter(F.col("n_pages") >= min_pages)
-    )
-    m1 = F.broadcast(
-        marginals.select(F.col("__e").alias("c1"), F.col("__c").alias("n1"))
-    )
-    m2 = F.broadcast(
-        marginals.select(F.col("__e").alias("c2"), F.col("__c").alias("n2"))
-    )
     return (
-        pair_counts.join(m1, "c1")
-        .join(m2, "c2")
+        _pair_counts(pe, min_pages)
         .crossJoin(F.broadcast(n_pages_total))
         .select(
             "c1",
@@ -187,11 +184,7 @@ def comention_pmi(
 
 
 def comention_wilson(
-    linked: DataFrame,
-    z: float = 1.96,
-    min_pages: int = 1,
-    id_col: str = "url",
-    entity_col: str = "curie",
+    linked: DataFrame, z: float = 1.96, min_pages: int = 1
 ) -> DataFrame:
     """Wilson-score lower bound on co-mention precision — the
     confidence-adjusted edge weight for thresholding corpus-derived
@@ -203,41 +196,9 @@ def comention_wilson(
     get pulled hard toward 0; high-support edges keep their rate.
     Returns ``[c1, c2, n_pages, n_trials, wilson_lb]`` (9 dp).
 
-    Same plan shape as :func:`comention_pmi`: single-pass per-page pair
-    explode, vocabulary-sized marginal dim broadcast to the pair table,
-    two partially-combined corpus shuffles total. The score itself is
-    pure Column math in whole-stage codegen.
+    Counts come from the same :func:`_pair_counts` as
+    :func:`comention_pmi`; the score is pure Column math in codegen.
     """
-    pe = linked.select(
-        F.col(id_col).alias("__pg"), F.col(entity_col).alias("__e")
-    ).distinct()
-    marginals = pe.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))
-    page_sets = pe.groupBy("__pg").agg(
-        F.sort_array(F.collect_set("__e")).alias("__cs")
-    )
-    cs = F.col("__cs")
-    pair_structs = F.flatten(
-        F.transform(
-            cs,
-            lambda x, i: F.transform(
-                F.slice(cs, i + F.lit(2), F.size(cs)),
-                lambda y: F.struct(x.alias("c1"), y.alias("c2")),
-            ),
-        )
-    )
-    pair_counts = (
-        page_sets.select(F.explode(pair_structs).alias("__p"))
-        .select(F.col("__p.c1").alias("c1"), F.col("__p.c2").alias("c2"))
-        .groupBy("c1", "c2")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .filter(F.col("n_pages") >= min_pages)
-    )
-    m1 = F.broadcast(
-        marginals.select(F.col("__e").alias("c1"), F.col("__c").alias("n1"))
-    )
-    m2 = F.broadcast(
-        marginals.select(F.col("__e").alias("c2"), F.col("__c").alias("n2"))
-    )
     n = F.least(F.col("n1"), F.col("n2")).cast("double")
     k = F.col("n_pages").cast("double")
     p = k / n
@@ -248,16 +209,12 @@ def comention_wilson(
         - F.lit(float(z))
         * F.sqrt((p * (F.lit(1.0) - p) + z2 / (F.lit(4.0) * n)) / n)
     ) / (F.lit(1.0) + z2 / n)
-    return (
-        pair_counts.join(m1, "c1")
-        .join(m2, "c2")
-        .select(
-            "c1",
-            "c2",
-            "n_pages",
-            F.least(F.col("n1"), F.col("n2")).alias("n_trials"),
-            F.round(lb, 9).alias("wilson_lb"),
-        )
+    return _pair_counts(_page_entities(linked), min_pages).select(
+        "c1",
+        "c2",
+        "n_pages",
+        F.least(F.col("n1"), F.col("n2")).alias("n_trials"),
+        F.round(lb, 9).alias("wilson_lb"),
     )
 
 

@@ -251,6 +251,98 @@ def test_assign_forests_matches_python_walk(spark, edges, roots):
     assert got == expected
 
 
+_CURIES = ["A_1", "A_2", "A_3", "B_1", "B_2", "C_1"]
+# same-namespace, cross-namespace and reversed (C, B) pair classes
+_EDGE_TYPES = {
+    ("A", "A"): ("aa", "r1", None),
+    ("A", "B"): ("ab", "r2", None),
+    ("C", "B"): ("cb", "r3", "r4"),
+}
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(st.sampled_from(["u0", "u1", "u2", "u3"]),
+                  st.sampled_from(_CURIES)),
+        min_size=0,
+        max_size=16,
+    ),
+    min_pages=st.integers(min_value=1, max_value=2),
+)
+def test_comention_counts_match_page_set_model(spark, rows, min_pages):
+    # the co-mention operators against a dict model: per-page entity
+    # sets, pair page counts, entity page marginals and the page total N
+    import math
+    from itertools import combinations
+
+    from pheknowlator_spark.webtext.pipeline import (
+        comention_pmi,
+        comention_wilson,
+        derive_comention_edges,
+    )
+
+    linked = spark.createDataFrame(rows, "url string, curie string")
+    pages: dict[str, set[str]] = {}
+    for url, curie in rows:
+        pages.setdefault(url, set()).add(curie)
+    n_total = len(pages)
+    marg: dict[str, int] = {}
+    pair: dict[tuple[str, str], int] = {}
+    for ents in pages.values():
+        for e in ents:
+            marg[e] = marg.get(e, 0) + 1
+        for a, b in combinations(sorted(ents), 2):
+            pair[(a, b)] = pair.get((a, b), 0) + 1
+    kept = {ab: n for ab, n in pair.items() if n >= min_pages}
+
+    edges = {}
+    for (a, b), n in kept.items():
+        na, nb = a.split("_")[0], b.split("_")[0]
+        if (na, nb) in _EDGE_TYPES:
+            edges[(_EDGE_TYPES[(na, nb)][0], a, b)] = n
+        elif (nb, na) in _EDGE_TYPES:
+            edges[(_EDGE_TYPES[(nb, na)][0], b, a)] = n
+    got_edges = {
+        (r.edge_type, r.sub_id, r.obj_id): r.n_pages
+        for r in derive_comention_edges(
+            linked, edge_type_map=_EDGE_TYPES, min_pages=min_pages
+        ).collect()
+    }
+    assert got_edges == edges
+
+    got_pmi = {
+        (r.c1, r.c2): (r.n_pages, r.n1, r.n2, r.pmi)
+        for r in comention_pmi(linked, min_pages=min_pages).collect()
+    }
+    assert set(got_pmi) == set(kept)
+    for (a, b), n in kept.items():
+        assert got_pmi[(a, b)][:3] == (n, marg[a], marg[b])
+        assert got_pmi[(a, b)][3] == pytest.approx(
+            math.log(n * n_total / (marg[a] * marg[b])), abs=1e-12
+        )
+
+    z = 1.96
+    got_wilson = {
+        (r.c1, r.c2): (r.n_trials, r.wilson_lb)
+        for r in comention_wilson(linked, z=z, min_pages=min_pages).collect()
+    }
+    assert set(got_wilson) == set(kept)
+    for (a, b), k in kept.items():
+        n = min(marg[a], marg[b])
+        p = k / n
+        lb = (
+            p + z * z / (2 * n)
+            - z * math.sqrt((p * (1 - p) + z * z / (4 * n)) / n)
+        ) / (1 + z * z / n)
+        assert got_wilson[(a, b)][0] == n
+        assert got_wilson[(a, b)][1] == pytest.approx(lb, abs=2e-9)
+
+
 class TestPartitionInvariance:
     """Determinism evidence for the north rule's resume/rerun claims:
     the same query must emit the IDENTICAL multiset of rows regardless of

@@ -323,6 +323,20 @@ class TestExtractLinks:
             ("//cdn.example/l", "https://cdn.example/l"),
         }
 
+    def test_scheme_matches_case_insensitively(self, spark):
+        # RFC 3986 schemes are case-insensitive: an upper- or mixed-case
+        # http(s) href is absolute, not an "other scheme" to drop
+        got = self._links(
+            spark,
+            "https://h.example/dir/page",
+            '<a href="HTTP://up.example/a">u</a>'
+            ' <a href="Https://mixed.example/b#x">m</a>',
+        )
+        assert got == {
+            ("HTTP://up.example/a", "HTTP://up.example/a"),
+            ("Https://mixed.example/b#x", "Https://mixed.example/b"),
+        }
+
     def test_binary_html_and_rootless_base(self, spark):
         # binary payload decodes JVM-side; base url with no path resolves
         # path-relative hrefs against '/'
