@@ -524,7 +524,9 @@ def embedding_near_duplicates(
 
     dim = _vector_dim(vectors, dim)
     v = vectors.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
-    buckets = _lsh_buckets(v, tables, bits, dim)
+    buckets = _lsh_buckets(v, "__v", tables, bits, dim).select(
+        "__id", "table", "bucket"
+    )
 
     # candidate generation moves IDS only: the (table, bucket) self-join
     # and the pair dedup shuffle two id columns, not two dim-length

@@ -117,17 +117,16 @@ def _bucket_structs(vec_col: str, tables: int, bits: int, dim: int) -> Column:
     return F.expr("array(" + ", ".join(structs) + ")")
 
 
-def _lsh_buckets(df: DataFrame, tables: int, bits: int, dim: int) -> DataFrame:
-    """``(id, table, bucket)`` rows of an ``[id, vector]`` frame, all tables
-    in one projection + explode. Ids only: callers re-attach vectors after
-    the bucket join, so no vector crosses the bucket exchange."""
-    id_col, vec_col = df.columns
+def _lsh_buckets(
+    df: DataFrame, vec_col: str, tables: int, bits: int, dim: int
+) -> DataFrame:
+    """``df``'s columns plus ``table`` and ``bucket``: one row per hash
+    table, every table's bucket of ``vec_col`` in one projection +
+    explode."""
     return df.select(
-        id_col,
-        vec_col,
-        F.explode(_bucket_structs(vec_col, tables, bits, dim)).alias("tb"),
+        "*", F.explode(_bucket_structs(vec_col, tables, bits, dim)).alias("tb")
     ).select(
-        id_col,
+        *df.columns,
         F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"),
     )
 
@@ -184,25 +183,20 @@ def lsh_topk(
     bits: int = 8,
     tables: int = 4,
 ) -> DataFrame:
-    """Approximate cosine top-k via random-hyperplane LSH + exact re-rank:
-    candidates are the distinct (query_id, vec_id) pairs that share a
-    bucket in any table, and their vectors re-attach by id for the cosine.
-    ``dim`` defaults to the ``embedding`` column's metadata."""
+    """Approximate cosine top-k via random-hyperplane LSH + exact re-rank
+    of the distinct (query, vector) pairs that share a bucket in any
+    table. ``dim`` defaults to the ``embedding`` column's metadata."""
     dim = _vector_dim(corpus, dim)
-    c = corpus.select("vec_id", "embedding")
-    q = queries.select("query_id", "embedding")
+    c = corpus.select(F.col("vec_id"), F.col("embedding").alias("__cv"))
+    q = queries.select(F.col("query_id"), F.col("embedding").alias("__qv"))
     cands = (
-        _lsh_buckets(q, tables, bits, dim)
-        .join(_lsh_buckets(c, tables, bits, dim), ["table", "bucket"])
-        .select("query_id", "vec_id")
+        _lsh_buckets(q, "__qv", tables, bits, dim)
+        .join(_lsh_buckets(c, "__cv", tables, bits, dim), ["table", "bucket"])
+        .select("query_id", "vec_id", "__qv", "__cv")
         .distinct()
     )
-    scored = (
-        cands.join(q.withColumnRenamed("embedding", "__qv"), "query_id")
-        .join(c.withColumnRenamed("embedding", "__cv"), "vec_id")
-        .select(
-            "query_id", "vec_id", cosine(F.col("__qv"), F.col("__cv")).alias("score")
-        )
+    scored = cands.select(
+        "query_id", "vec_id", cosine(F.col("__qv"), F.col("__cv")).alias("score")
     )
     return _top_k(scored, "query_id", "vec_id", k)
 

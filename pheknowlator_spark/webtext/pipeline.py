@@ -114,17 +114,19 @@ def derive_comention_edges(
     return scored.filter(F.col("n_pages") >= min_pages)
 
 
-def _page_entities(linked: DataFrame) -> DataFrame:
-    """Distinct (page, entity) rows: an entity counts once per page."""
-    return linked.select(
+def _pair_counts(
+    linked: DataFrame, min_pages: int
+) -> tuple[DataFrame, DataFrame]:
+    """``[c1, c2, n_pages, n1, n2]`` for pairs on ≥ ``min_pages`` pages
+    (distinct (page, entity) rows, per-page pair explode, one pair-count
+    aggregation, entity page marginals broadcast to both sides), and the
+    one-row ``[__n]`` count of pages with a linked mention."""
+    pe = linked.select(
         F.col("url").alias("__pg"), F.col("curie").alias("__e")
     ).distinct()
-
-
-def _pair_counts(pe: DataFrame, min_pages: int) -> DataFrame:
-    """``[c1, c2, n_pages, n1, n2]`` for pairs on ≥ ``min_pages`` pages:
-    per-page pair explode, one pair-count aggregation, entity page
-    marginals broadcast to both sides."""
+    n_pages_total = pe.select("__pg").distinct().agg(
+        F.count(F.lit(1)).alias("__n")
+    )
     marginals = pe.groupBy("__e").agg(F.count(F.lit(1)).alias("__c"))
     page_sets = pe.groupBy("__pg").agg(
         F.sort_array(F.collect_set("__e")).alias("__cs")
@@ -142,7 +144,7 @@ def _pair_counts(pe: DataFrame, min_pages: int) -> DataFrame:
     m2 = F.broadcast(
         marginals.select(F.col("__e").alias("c2"), F.col("__c").alias("n2"))
     )
-    return pair_counts.join(m1, "c1").join(m2, "c2")
+    return pair_counts.join(m1, "c1").join(m2, "c2"), n_pages_total
 
 
 def comention_pmi(linked: DataFrame, min_pages: int = 1) -> DataFrame:
@@ -162,13 +164,9 @@ def comention_pmi(linked: DataFrame, min_pages: int = 1) -> DataFrame:
     corpus-scale shuffles are the (page, entity) distinct and the
     pair-count aggregation, both partially combined map-side.
     """
-    pe = _page_entities(linked)
-    n_pages_total = pe.select("__pg").distinct().agg(
-        F.count(F.lit(1)).alias("__n")
-    )
+    counts, n_pages_total = _pair_counts(linked, min_pages)
     return (
-        _pair_counts(pe, min_pages)
-        .crossJoin(F.broadcast(n_pages_total))
+        counts.crossJoin(F.broadcast(n_pages_total))
         .select(
             "c1",
             "c2",
@@ -209,7 +207,8 @@ def comention_wilson(
         - F.lit(float(z))
         * F.sqrt((p * (F.lit(1.0) - p) + z2 / (F.lit(4.0) * n)) / n)
     ) / (F.lit(1.0) + z2 / n)
-    return _pair_counts(_page_entities(linked), min_pages).select(
+    counts, _ = _pair_counts(linked, min_pages)
+    return counts.select(
         "c1",
         "c2",
         "n_pages",

@@ -26,15 +26,15 @@ NON_TEST = SOURCES + sorted(ROOT.glob("bench*.py")) + [
 # with the reason to keep it. Calls made from inside a listed function do not count
 # as non-test use of the functions they call.
 TEST_REACHED = {
+    "StageStore.compact": "small-file rewrite for stages that incremental commits accrete",
+    "StageStore.invalidate": "drops a commit so the next run recomputes the stage",
+    "StageStore.lineage": "reads the per-file lineage rows every commit writes",
     "brute_force_topk": "exact top-k the ANN tests check lsh_topk/ivf_topk against",
-    "compact": "StageStore small-file rewrite for stages that incremental commits accrete",
     "decode_pkt_namespace": "J9 pkt-namespace decode, a reference build step",
     "dedup_near": "keeps one member per near-dup cluster; near_dup_clusters' consumer",
     "frame_sample_plan": "metadata-only video frame plan; multimodal surface",
     "incremental_build": "resumable streaming KG rebuild through StageStore commits",
     "incremental_result": "reads back what incremental_build committed",
-    "invalidate": "StageStore: drops a commit so the next run recomputes the stage",
-    "lineage": "StageStore: reads the per-file lineage rows every commit writes",
     "metadata_gate": "P10 node-metadata edge gate, a reference build step",
     "read_warc": "WARC page reader; crawl input format",
     "read_wet": "WET text reader; crawl input format",
@@ -60,22 +60,31 @@ def test_compiles_with_warnings_as_errors(path):
         compile(source, str(path), "exec")
 
 
-def _units(path: pathlib.Path) -> list[ast.stmt]:
-    """A module's top-level statements, with each class's body statements
-    (its methods) standing in for the class."""
+FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _units(path: pathlib.Path) -> list[tuple[str | None, ast.AST]]:
+    """``(name, node)`` for a module's top-level statements. A class
+    yields each method as ``Class.method`` and, under the class name, its
+    bases, keywords, decorators and other body statements."""
     units = []
     for top in ast.parse(path.read_text(encoding="utf-8")).body:
-        units.extend(top.body if isinstance(top, ast.ClassDef) else [top])
+        if not isinstance(top, ast.ClassDef):
+            units.append((getattr(top, "name", None), top))
+            continue
+        for node in top.bases + top.keywords + top.decorator_list + top.body:
+            name = f"{top.name}.{node.name}" if isinstance(node, FUNCS) else top.name
+            units.append((name, node))
     return units
 
 
 def _public_functions() -> set[str]:
+    """Public functions, and public methods as ``Class.method``."""
     return {
-        node.name
+        name
         for path in PACKAGE
-        for node in _units(path)
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-        and not node.name.startswith("_")
+        for name, node in _units(path)
+        if isinstance(node, FUNCS) and not node.name.startswith("_")
     }
 
 
@@ -84,9 +93,8 @@ def _names_used_outside_tests() -> set[str]:
     strings do not count, nor a function's use of its own name."""
     used: set[str] = set()
     for path in NON_TEST:
-        for top in _units(path):
-            own = getattr(top, "name", None)
-            if path in PACKAGE and own in TEST_REACHED:
+        for name, top in _units(path):
+            if path in PACKAGE and name in TEST_REACHED:
                 continue
             names = set()
             for node in ast.walk(top):
@@ -96,13 +104,17 @@ def _names_used_outside_tests() -> set[str]:
                     names.add(node.attr)
                 elif isinstance(node, ast.alias):
                     names.add(node.name.rsplit(".", 1)[-1])
+            own = name.rsplit(".", 1)[-1] if name else None
             used |= names - {own}
     return used
 
 
 def test_public_functions_have_non_test_callers():
-    public = _public_functions()
     used = _names_used_outside_tests()
-    assert sorted(public - used - set(TEST_REACHED)) == []
+    # a method counts as called wherever its bare name is used
+    unused = {
+        name for name in _public_functions() if name.rsplit(".", 1)[-1] not in used
+    }
+    assert sorted(unused - set(TEST_REACHED)) == []
     # an entry whose function gained a caller, or is gone, is stale
-    assert sorted(set(TEST_REACHED) - (public - used)) == []
+    assert sorted(set(TEST_REACHED) - unused) == []
