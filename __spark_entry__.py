@@ -759,7 +759,7 @@ def _robots_tables(spark, sf_dir):
 def q_robots_allowed(spark, sf_dir):
     """REP url filtering: parse per-host robots.txt (rule→agent-group
     attachment via one per-host window), resolve the agent group
-    (specific beats '*'), longest-prefix match with allow-wins ties —
+    (specific beats '*'), longest-rule match with allow-wins ties —
     pages surviving for agent 'pktbot'."""
     from pheknowlator_spark.webtext.robots import parse_robots, robots_filter
 
@@ -3426,7 +3426,8 @@ def oracle_sql() -> dict[str, str]:
               SELECT href, anchor, n_anchor,
                 row_number() OVER (PARTITION BY href
                   ORDER BY n_anchor DESC, anchor) AS rn,
-                sum(n_anchor) OVER (PARTITION BY href) AS n_total
+                CAST(sum(n_anchor) OVER (PARTITION BY href) AS BIGINT)
+                  AS n_total
               FROM counts
             )
             SELECT href, anchor AS top_anchor, n_anchor, n_total
@@ -3484,10 +3485,19 @@ def oracle_sql() -> dict[str, str]:
             spec AS (SELECT DISTINCT host FROM rules
                      WHERE agent = 'pktbot'),
             eff AS (
-              SELECT r.host, r.allow, r.prefix
-              FROM rules r LEFT JOIN spec s ON r.host = s.host
-              WHERE CASE WHEN s.host IS NOT NULL
-                      THEN r.agent = 'pktbot' ELSE r.agent = '*' END
+              SELECT host, allow, prefix,
+                CASE WHEN ends_with(esc, '$')
+                  THEN left(esc, length(esc) - 1) ELSE esc || '%' END
+                  AS pat
+              FROM (
+                SELECT r.host, r.allow, r.prefix,
+                  replace(replace(replace(replace(r.prefix,
+                    '\\', '\\\\'), '%', '\\%'), '_', '\\_'), '*', '%')
+                    AS esc
+                FROM rules r LEFT JOIN spec s ON r.host = s.host
+                WHERE CASE WHEN s.host IS NOT NULL
+                        THEN r.agent = 'pktbot' ELSE r.agent = '*' END
+              )
             ),
             pages AS ({_LINK_PAGES_SQL}),
             keyed AS (
@@ -3495,13 +3505,11 @@ def oracle_sql() -> dict[str, str]:
                 regexp_extract(lower(regexp_extract(url,
                   '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)),
                   '^([^:]*)', 1) AS robots_host,
-                CASE WHEN regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) = ''
-                  THEN '/'
-                  ELSE regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1)
-                  END AS path
-              FROM pages
+                CASE WHEN starts_with(pq, '/') THEN pq ELSE '/' || pq END
+                  AS path
+              FROM (SELECT url, regexp_extract(url,
+                      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS pq
+                    FROM pages)
             ),
             verdicts AS (
               SELECT url, allow FROM (
@@ -3510,7 +3518,7 @@ def oracle_sql() -> dict[str, str]:
                     ORDER BY length(e.prefix) DESC, e.allow DESC) AS rn
                 FROM keyed k JOIN eff e
                   ON k.robots_host = e.host
-                 AND starts_with(k.path, e.prefix)
+                 AND k.path LIKE e.pat ESCAPE '\\'
               ) WHERE rn = 1
             )
             SELECT k.url, k.robots_host

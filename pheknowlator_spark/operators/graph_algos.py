@@ -4,7 +4,7 @@
   min-label propagation plus label-pointer jumping; used for same-as
   canonicalization (north rule).
 * ``transitive_closure`` — J10/N11 ancestor closure
-  (kg_utils.py:373-399 recursive walk) as iterative self-join to fixpoint.
+  (kg_utils.py:373-399 recursive walk) as a doubling self-join.
 * ``assign_integer_ids`` — S13/W2 dense id assignment
   (kg_utils.py:653-699) without a single-partition window.
 * ``pagerank`` — power-iteration node importance over the built KG.
@@ -255,11 +255,17 @@ def transitive_closure(
 ) -> DataFrame:
     """All (descendant, ancestor) pairs over a DAG edge set.
 
-    Doubling closure: paths ← paths ∪ (paths ⋈ paths) each round, so depth-d
-    hierarchies converge in ⌈log2 d⌉ rounds; rounds run until the path
-    count, read off each round's cut, stops growing. Intended for the
-    *ontology* subgraph (≤10^7 edges — SURVEY §7.4 risk 3 bounds the
-    explosion); never run on the full web-derived triple set.
+    Doubling closure: paths ← paths ∪ (paths ⋈ paths) each round, keeping
+    each pair's shortest hop count ``d``. After round k the state holds
+    exactly the pairs within 2^k hops, at their true distances; a subpath
+    of a shortest path is itself shortest, so once no pair is 2^k hops
+    apart no longer one exists. Rounds therefore stop when the longest
+    distance (read off the round's cut with the path count) falls short of
+    twice the previous round's, or when the path count stops growing: a
+    depth-d hierarchy closes in ⌈log₂ d⌉ rounds, plus one only when d is a
+    power of two. Intended for the *ontology* subgraph (≤10^7 edges —
+    SURVEY §7.4 risk 3 bounds the explosion); never run on the full
+    web-derived triple set.
 
     Returns ``[child, parent]`` distinct pairs (excluding reflexive pairs).
     """
@@ -267,21 +273,31 @@ def transitive_closure(
         edges.select(F.col(src).alias("child"), F.col(dst).alias("parent"))
         .filter(F.col("child") != F.col("parent"))
         .distinct()
+        .withColumn("d", F.lit(1))
     )
 
     def step(paths):
         hops = (
             paths.alias("x")
             .join(paths.alias("y"), F.col("x.parent") == F.col("y.child"))
-            .select(F.col("x.child").alias("child"), F.col("y.parent").alias("parent"))
+            .select(
+                F.col("x.child").alias("child"),
+                F.col("y.parent").alias("parent"),
+                (F.col("x.d") + F.col("y.d")).alias("d"),
+            )
             .filter(F.col("child") != F.col("parent"))
         )
-        return paths.unionByName(hops).distinct()
+        return paths.unionByName(hops).groupBy("child", "parent").agg(
+            F.min("d").alias("d")
+        )
+
+    def done(prev, cur):
+        return cur["rows"] == prev["rows"] or cur["max_d"] < 2 * prev["max_d"]
 
     return _iterate(
-        paths, step, {"rows": F.count(F.lit(1))}, lambda prev, cur: cur == prev,
+        paths, step, {"rows": F.count(F.lit(1)), "max_d": F.max("d")}, done,
         prefix="transitive_closure",
-    )
+    ).select("child", "parent")
 
 
 def assign_integer_ids(triples: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -147,8 +147,9 @@ def assign_forests(triples: DataFrame, roots: DataFrame) -> DataFrame:
     including the root's own out-edges. The anonymous nodes below each
     anonymous node come from one doubling :func:`transitive_closure` over
     the anonymous→anonymous edges, so a chain of depth d (an RDF list of d
-    members) takes ⌈log₂ d⌉ + 1 rounds and a long ``owl:unionOf`` list is
-    walked to its end in a few Spark jobs. Each root's anonymous objects
+    members) takes ⌈log₂ d⌉ rounds, plus one only when d is a power of
+    two, and a long ``owl:unionOf`` list is walked to its end in a few
+    Spark jobs. Each root's anonymous objects
     join that closure once, and the reached nodes join the triples once.
     The closure holds every (anonymous node, anonymous descendant) pair,
     so an L-member list contributes L(L−1)/2 pairs (1 128 at 48 members).

@@ -254,6 +254,19 @@ def funnel_counts(
     return out
 
 
+# cohort granularity → (unit of the offset difference, units per period)
+_COHORT_PERIODS = {
+    "second": ("second", 1),
+    "minute": ("second", 60),
+    "hour": ("second", 3600),
+    "day": ("day", 1),
+    "week": ("day", 7),
+    "month": ("month", 1),
+    "quarter": ("month", 3),
+    "year": ("month", 12),
+}
+
+
 def cohort_retention(
     events: DataFrame,
     user_col: str = "user_id",
@@ -269,11 +282,18 @@ def cohort_retention(
     user), one distinct over (user, period), one join keyed on user, one
     final partially-combined aggregation — every shuffle is on the user
     key or the small (cohort, offset) result key; no window, no driver
-    state. ``granularity`` is any ``date_trunc`` unit (day/week/month).
+    state. ``granularity`` is a ``date_trunc`` unit from second to year,
+    and ``period_offset`` counts whole periods of it (weeks for ``week``,
+    calendar months for ``month``).
     """
+    if granularity not in _COHORT_PERIODS:
+        raise ValueError(
+            f"granularity {granularity!r} not in {sorted(_COHORT_PERIODS)}"
+        )
+    unit, n = _COHORT_PERIODS[granularity]
     # cast to date so the grain matches ANSI date_trunc('day') (DATE,
     # not midnight TIMESTAMP); sub-day granularities keep the timestamp
-    cast_to = "date" if granularity in ("day", "week", "month", "year") else "timestamp"
+    cast_to = "timestamp" if unit == "second" else "date"
     first = events.groupBy(F.col(user_col).alias("__u")).agg(
         F.date_trunc(granularity, F.min(F.col(ts_col)))
         .cast(cast_to)
@@ -283,14 +303,19 @@ def cohort_retention(
         F.col(user_col).alias("__u"),
         F.date_trunc(granularity, F.col(ts_col)).cast(cast_to).alias("__d"),
     ).distinct()
+    # both ends are truncated to the grain, so each difference is a whole
+    # multiple of the period
+    if unit == "month":
+        offset = F.months_between(F.col("__d"), F.col("cohort"))
+    elif unit == "day":
+        offset = F.datediff(F.col("__d"), F.col("cohort"))
+    else:
+        offset = F.unix_timestamp(F.col("__d")) - F.unix_timestamp(F.col("cohort"))
+    if n != 1:
+        offset = offset / n
     return (
         act.join(first, "__u")
-        .groupBy(
-            "cohort",
-            F.datediff(F.col("__d"), F.col("cohort"))
-            .cast("long")
-            .alias("period_offset"),
-        )
+        .groupBy("cohort", offset.cast("long").alias("period_offset"))
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
 

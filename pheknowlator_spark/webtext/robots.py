@@ -13,7 +13,10 @@ Semantics implemented (documented subset of RFC 9309):
   group headers are the one RFC feature out of scope),
 * agent resolution: if the host has any group for the specific agent,
   only those rules apply; otherwise the ``*`` group applies,
-* longest-path-prefix match wins; on a tie ``Allow`` wins,
+* a rule's path matches from the start of the url's path and query;
+  ``*`` matches any run of characters and a trailing ``$`` anchors the
+  rule at the end of the url (other characters match themselves),
+* the longest matching rule wins; on a tie ``Allow`` wins,
 * an empty ``Disallow:`` value matches nothing (spec: allow all),
 * no matching rule → allowed.
 
@@ -33,7 +36,8 @@ from pyspark.sql import functions as F
 __all__ = ["parse_robots", "robots_filter"]
 
 _HOSTPORT_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
-_PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
+# path and query: robots rules such as ``/*?sid=`` match the query too
+_PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)"
 
 
 def parse_robots(
@@ -89,6 +93,17 @@ def parse_robots(
     )
 
 
+def _like_pattern(rule: str):
+    """RFC 9309 rule path → ``LIKE`` pattern (escape character ``\\``)."""
+    p = F.col(rule)
+    for ch in ("\\", "%", "_"):
+        p = F.replace(p, F.lit(ch), F.lit("\\" + ch))
+    p = F.replace(p, F.lit("*"), F.lit("%"))
+    return F.when(p.endswith("$"), F.regexp_replace(p, r"\$$", "")).otherwise(
+        F.concat(p, F.lit("%"))
+    )
+
+
 def robots_filter(
     pages: DataFrame,
     rules: DataFrame,
@@ -104,7 +119,10 @@ def robots_filter(
     pages; the longest-match verdict is then pure per-row array math
     (``filter`` + ``array_max`` over (prefix_len, allow) structs) — no
     row explosion, no re-aggregation, the page table keeps its
-    partitioning end to end."""
+    partitioning end to end. Each rule is matched as a SQL ``LIKE``
+    pattern, built once per rule on the dim side: ``\\``, ``%`` and ``_``
+    are escaped, ``*`` becomes ``%``, and a ``%`` is appended unless the
+    rule ends in ``$``."""
     agent = agent.lower()
     # agent-group resolution: specific group if present, else '*'
     host_has_specific = rules.filter(F.col("agent") == agent).select(
@@ -120,7 +138,9 @@ def robots_filter(
         )
         .groupBy("host")
         .agg(
-            F.collect_list(F.struct("prefix", "allow")).alias("__rules")
+            F.collect_list(
+                F.struct("prefix", "allow", _like_pattern("prefix").alias("like"))
+            ).alias("__rules")
         )
     )
     host = F.regexp_extract(
@@ -129,13 +149,15 @@ def robots_filter(
         1,
     )
     path_raw = F.regexp_extract(F.col(url_col), _PATH_RE, 1)
-    path = F.when(path_raw == "", F.lit("/")).otherwise(path_raw)
+    path = F.when(
+        path_raw.startswith("/"), path_raw
+    ).otherwise(F.concat(F.lit("/"), path_raw))
     keyed = pages.withColumn("robots_host", host).withColumn("__path", path)
     matches = F.filter(
         F.col("__rules"),
-        lambda r: F.startswith(F.col("__path"), r["prefix"]),
+        lambda r: F.like(F.col("__path"), r["like"]),
     )
-    # longest prefix wins; tie → allow (true sorts above false)
+    # longest rule wins; tie → allow (true sorts above false)
     verdict = F.array_max(
         F.transform(
             matches,

@@ -149,6 +149,46 @@ class TestCohortRetention:
         }
         assert got == {(1, 0): 2, (1, 2): 1, (3, 0): 1}
 
+    def test_weekly_offsets_count_weeks(self, spark):
+        """Offsets are whole weeks, not the days between week starts."""
+        d = dt.datetime
+        rows = [
+            # A first seen in the week of Mon 2024-01-01, back 1 and 3 weeks on
+            ("A", d(2024, 1, 3, 9)), ("A", d(2024, 1, 10, 9)), ("A", d(2024, 1, 25, 9)),
+            # B first seen in the week of Mon 2024-01-08, back 2 weeks on
+            ("B", d(2024, 1, 14, 23)), ("B", d(2024, 1, 22, 1)),
+        ]
+        ev = spark.createDataFrame(rows, ["user_id", "ts"])
+        from pheknowlator_spark.operators.temporal import cohort_retention
+
+        got = {
+            (str(r["cohort"]), r["period_offset"]): r["n_users"]
+            for r in cohort_retention(ev, granularity="week").collect()
+        }
+        assert got == {
+            ("2024-01-01", 0): 1, ("2024-01-01", 1): 1, ("2024-01-01", 3): 1,
+            ("2024-01-08", 0): 1, ("2024-01-08", 2): 1,
+        }
+
+    def test_monthly_offsets_count_calendar_months(self, spark):
+        """Offsets are calendar months, across month lengths and a year end."""
+        d = dt.datetime
+        rows = [
+            ("A", d(2023, 11, 30, 9)), ("A", d(2024, 1, 1, 0)), ("A", d(2024, 3, 31, 9)),
+            ("B", d(2024, 2, 29, 9)), ("B", d(2024, 3, 1, 9)),
+        ]
+        ev = spark.createDataFrame(rows, ["user_id", "ts"])
+        from pheknowlator_spark.operators.temporal import cohort_retention
+
+        got = {
+            (str(r["cohort"]), r["period_offset"]): r["n_users"]
+            for r in cohort_retention(ev, granularity="month").collect()
+        }
+        assert got == {
+            ("2023-11-01", 0): 1, ("2023-11-01", 2): 1, ("2023-11-01", 4): 1,
+            ("2024-02-01", 0): 1, ("2024-02-01", 1): 1,
+        }
+
 
 class TestFunnelCounts:
     def test_strict_sequence(self, spark):

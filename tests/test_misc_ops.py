@@ -342,7 +342,8 @@ def test_iterative_operators_identical_under_reliable_checkpoints(
 def test_iterate_logs_one_record_per_round(spark, caplog):
     """Each round logs its observed probe at DEBUG, and the loop logs the
     rounds run: an 8-edge chain closes in 3 growing rounds (15, 26, 36
-    paths) and 1 confirming round."""
+    paths) and keeps 1 confirming round, because its longest path, 8, is a
+    power of two — round 2's longest distance doubled round 1's."""
     import logging
 
     from pheknowlator_spark.operators.graph_algos import transitive_closure
@@ -354,12 +355,62 @@ def test_iterate_logs_one_record_per_round(spark, caplog):
         assert transitive_closure(chain).count() == 36
     msgs = [r.getMessage() for r in caplog.records if r.name == "pheknowlator_spark"]
     assert msgs == [
-        "transitive_closure round 0: {'rows': 15}",
-        "transitive_closure round 1: {'rows': 26}",
-        "transitive_closure round 2: {'rows': 36}",
-        "transitive_closure round 3: {'rows': 36}",
+        "transitive_closure round 0: {'rows': 15, 'max_d': 2}",
+        "transitive_closure round 1: {'rows': 26, 'max_d': 4}",
+        "transitive_closure round 2: {'rows': 36, 'max_d': 8}",
+        "transitive_closure round 3: {'rows': 36, 'max_d': 8}",
         "transitive_closure: 4 rounds",
     ]
+
+
+def _closure_rounds(caplog, df) -> tuple[list, int]:
+    import logging
+
+    from pheknowlator_spark.operators.graph_algos import transitive_closure
+
+    caplog.clear()
+    with caplog.at_level(logging.DEBUG, logger="pheknowlator_spark"):
+        rows = sorted(tuple(r) for r in transitive_closure(df).collect())
+    (last,) = [
+        r.getMessage() for r in caplog.records
+        if r.getMessage().startswith("transitive_closure: ")
+    ]
+    return rows, int(last.split()[1])
+
+
+def test_closure_stops_without_confirming_round(spark, caplog):
+    """A 7-edge chain's longest path (7) is not a power of two, so round 2
+    reaches max_d 7 < 2 * 4 and the closure stops after 3 rounds, without
+    the round that only confirms the path count stopped growing."""
+    chain = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(7)], "child string, parent string"
+    )
+    rows, rounds = _closure_rounds(caplog, chain)
+    assert rounds == 3
+    assert rows == sorted(
+        (f"n{i}", f"n{j}") for i in range(8) for j in range(i + 1, 8)
+    )
+
+
+def test_closure_matches_bfs_on_cycle_with_tail(spark, caplog):
+    """A 3-cycle a→b→c→a with a tail c→t→u→v: the doubling closure equals
+    a pure-Python BFS closure (reflexive pairs excluded), although cycle
+    members reach each other by several walks of different lengths."""
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "t"), ("t", "u"),
+             ("u", "v")]
+    adj = {}
+    for s, o in pairs:
+        adj.setdefault(s, set()).add(o)
+    want = set()
+    for start in {n for p in pairs for n in p}:
+        seen, frontier = set(), [start]
+        while frontier:
+            frontier = [o for n in frontier for o in adj.get(n, ()) if o not in seen]
+            seen.update(frontier)
+        want |= {(start, o) for o in seen if o != start}
+    df = spark.createDataFrame(pairs, "child string, parent string")
+    rows, _ = _closure_rounds(caplog, df)
+    assert rows == sorted(want)
 
 
 def test_connected_components_kill_resume(spark, tmp_path):

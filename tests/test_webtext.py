@@ -494,6 +494,45 @@ class TestRobots:
             "https://c.example/anything",
         ]
 
+    def test_filter_wildcards(self, spark):
+        """``*`` matches any run of characters (query included), a trailing
+        ``$`` anchors at the url's end, the longest matching rule wins, and
+        ``%``/``_`` in a rule match only themselves."""
+        from pheknowlator_spark.webtext.robots import parse_robots, robots_filter
+
+        robots = spark.createDataFrame(
+            [(
+                "w.example",
+                "User-agent: *\nDisallow: /*?sid=\nDisallow: /*.pdf$\n"
+                "Allow: /pub/*.pdf$\nDisallow: /a_b%\n",
+            )],
+            "host string, robots_txt string",
+        )
+        pages = spark.createDataFrame(
+            [
+                ("https://w.example/shop?sid=42",),  # /*?sid= → disallowed
+                ("https://w.example/shop?id=42",),
+                ("https://w.example/docs/x.pdf",),  # /*.pdf$ → disallowed
+                ("https://w.example/docs/x.pdf?v=1",),  # $ anchors: not a match
+                ("https://w.example/docs/x.pdfs",),
+                ("https://w.example/pub/x.pdf",),  # longer Allow wins
+                ("https://w.example/a_b%/c",),  # literal _ and % → disallowed
+                ("https://w.example/axb1",),  # _ and % are not wildcards
+                ("https://w.example?sid=1",),  # empty path → "/?sid=1"
+            ],
+            "url string",
+        )
+        got = sorted(
+            r.url for r in robots_filter(pages, parse_robots(robots)).collect()
+        )
+        assert got == [
+            "https://w.example/axb1",
+            "https://w.example/docs/x.pdf?v=1",
+            "https://w.example/docs/x.pdfs",
+            "https://w.example/pub/x.pdf",
+            "https://w.example/shop?id=42",
+        ]
+
 
 class TestAnchors:
     def test_extract_and_top(self, spark):
