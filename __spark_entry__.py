@@ -1148,7 +1148,7 @@ def q_comention_wilson(spark, sf_dir):
 
 def q_events_windowed(spark, sf_dir):
     events = _read(spark, sf_dir, "events")
-    # tumbling 1-hour window — the same agg runs under readStream unchanged
+    # tumbling 1-hour window
     return (
         events.groupBy(
             F.window("ts", "1 hour").alias("w"), "event_type"
@@ -1159,10 +1159,9 @@ def q_events_windowed(spark, sf_dir):
 
 
 def q_events_sessionized(spark, sf_dir):
-    """Session windows (30-min gap) per user over the events table — the
-    same aggregation runs under readStream with a watermark; the batch
+    """Session windows (30-min gap) per user over the events table; the
     result is pinned by a gaps-and-islands SQL oracle."""
-    from pheknowlator_spark.streaming.events import sessionized_event_counts
+    from pheknowlator_spark.operators.temporal import sessionized_event_counts
 
     events = _read(spark, sf_dir, "events")
     return sessionized_event_counts(events, gap="30 minutes")

@@ -8,8 +8,7 @@ for tests, clearly marked.
 
 Pattern at scale: ``mapInPandas`` so each Arrow batch amortizes codec
 setup; media tables partitioned by (modality, bucket(content_id)) so decode
-fan-out is even; metadata-only queries never touch the binary column
-(columnar pruning — verified in tests via the scan's ReadSchema).
+fan-out is even.
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "content_id string, modality string, media binary, "
@@ -83,26 +81,6 @@ def extract_features(
 
     return media_df.select("content_id", "modality", "media").mapInPandas(
         run, FEATURE_SCHEMA
-    )
-
-
-def frame_sample_plan(
-    media_df: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Video frame-sampling plan: one row per (content_id, frame_ts_ms)
-    derived from metadata only — the binary column is never read (check the
-    scan's ReadSchema). The actual frame grab would run in extract_features.
-    """
-    n_frames = F.greatest(
-        (F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)
-    )
-    return media_df.filter(F.col("modality") == "video").select(
-        "content_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), n_frames - 1), lambda i: i * every_ms
-            )
-        ).alias("frame_ts_ms"),
     )
 
 

@@ -29,6 +29,7 @@ __all__ = [
     "cohort_retention",
     "funnel_counts",
     "interval_join",
+    "sessionized_event_counts",
 ]
 
 
@@ -361,4 +362,22 @@ def coalesce_intervals(
             F.count(F.lit(1)).alias("n_merged"),
         )
         .drop("__island")
+    )
+
+
+def sessionized_event_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+    """Session-window counts per ``user_id`` over ``ts``: consecutive events
+    of one user closer than ``gap`` merge into one session (the dynamic-gap
+    analog of the reference's per-entity grouping). Equals the SQL
+    gaps-and-islands derivation (see the ``events_sessionized`` oracle).
+
+    One shuffle on the user: Spark merges overlapping session windows
+    inside the aggregation."""
+    # session_window needs TIMESTAMP (not NTZ/string); the session zone is
+    # pinned UTC, so the cast is value-preserving
+    return (
+        events.withColumn("ts", F.col("ts").cast("timestamp"))
+        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
     )

@@ -5,7 +5,7 @@ resumes idempotently").
 
 The sandbox has no Iceberg catalog jar, so the checkpoint store is
 parquet-directory-per-stage with an atomic ``_SUCCESS``-gated commit
-protocol (write to ``<stage>/_tmp_<token>``, rename into place) — the same
+protocol (write to ``<stage>.tmp``, rename into place) — the same
 snapshot-per-stage semantics; swapping ``format('parquet')`` for
 ``format('iceberg')`` + ``writeTo(...).createOrReplace()`` is a one-line
 change where an Iceberg catalog exists (the StageStore API is
@@ -183,67 +183,22 @@ class StageStore:
         with open(os.path.join(ldir, "_SUCCESS"), "w"):
             pass
 
-    def compact(
-        self,
-        stage: str,
-        target_file_bytes: int = 128 << 20,
-        shuffle: bool = False,
-        partition_by: list[str] | None = None,
-    ) -> DataFrame:
-        """Small-file compaction: rewrite a committed stage into
-        ``ceil(total_bytes / target_file_bytes)`` files (the checkpoint
-        analog of Iceberg's ``rewrite_data_files``). Incremental commits
-        (one ``incremental_build`` stage per crawl drop) accrete many
-        small files; at 100 TB the resulting per-file task overhead and
-        footer-listing cost dominate downstream scans, so compaction is a
-        first-class maintenance op, not an afterthought.
-
-        ``shuffle=False`` (default) uses ``coalesce`` — NO shuffle, each
-        output task concatenates whole input files; ``shuffle=True`` uses
-        ``repartition`` for evenly-sized output when the inputs are
-        skewed. Same write-then-swap commit as ``run``: a crash never
-        loses the previous snapshot. Returns the compacted stage; no-ops
-        (returning the committed data unchanged) when the stage already
-        meets the target file count.
-        """
-        import math
-
-        if not self.is_committed(stage):
-            raise ValueError(f"stage {stage!r} is not committed")
-        final = self._dir(stage)
-        files = [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(final)
-            for f in fs
-            if not f.startswith((".", "_"))
-        ]
-        total = sum(os.path.getsize(f) for f in files)
-        n = max(1, math.ceil(total / target_file_bytes))
-        if n >= len(files):
-            return self.spark.read.format(self.format).load(final)
-        df = self.spark.read.format(self.format).load(final)
-        out = df.repartition(n) if shuffle else df.coalesce(n)
-        return self.run(stage, lambda: out, partition_by=partition_by,
-                        force=True)
-
     def lineage(self) -> DataFrame:
         path = os.path.join(self.root, "_lineage")
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
             os.path.join(path, "*")
         )
 
-    def invalidate(self, stage: str) -> None:
-        """Drop a stage's commit so the next run recomputes it (and anything
-        downstream the caller also invalidates)."""
-        shutil.rmtree(self._dir(stage), ignore_errors=True)
-        shutil.rmtree(self._lineage_dir(stage), ignore_errors=True)
-
     def manifest(self) -> dict:
+        # a crash inside run's commit window leaves <stage>.tmp (complete,
+        # _SUCCESS included) or <stage>.trash behind; neither is a stage
         return {
             "root": self.root,
             "stages": sorted(
                 d for d in os.listdir(self.root)
-                if not d.startswith("_") and self.is_committed(d)
+                if not d.startswith("_")
+                and not d.endswith((".tmp", ".trash"))
+                and self.is_committed(d)
             ),
         }
 

@@ -147,22 +147,3 @@ def write_node_labels(metadata: DataFrame, id_map: DataFrame, path: str) -> None
             "synonym",
         ).alias("value")
     ).write.mode("overwrite").text(path)
-
-
-def write_bucketed_triples(
-    triples: DataFrame, table: str, buckets: int = 16, bucket_col: str = "s"
-) -> None:
-    """Persist the triple table bucketed (hash-clustered + sorted) on the
-    subject — repeated subject-keyed self-joins / ancestor walks over the
-    saved table are then co-located: both sides read pre-partitioned
-    buckets and the join plans WITHOUT a shuffle exchange (asserted in
-    test_plan_audit). The managed-table analog of Iceberg's
-    ``bucket(N, s)`` partition transform for the 100 TB layout.
-    """
-    (
-        triples.write.mode("overwrite")
-        .bucketBy(buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table)
-    )

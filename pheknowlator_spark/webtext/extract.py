@@ -57,12 +57,3 @@ def with_extracted_text(pages: DataFrame, html_col: str = "html",
     """Add/replace the extracted-text column via a vectorized pandas UDF."""
     extract_udf = F.pandas_udf(_extract_series, StringType())
     return pages.withColumn(out_col, extract_udf(F.col(html_col)))
-
-
-def verify_extraction(pages: DataFrame) -> DataFrame:
-    """Rows violating the byte-identical-text-per-url invariant:
-    re-extract from html and compare against the stored text column."""
-    extract_udf = F.pandas_udf(_extract_series, StringType())
-    return pages.withColumn("__re", extract_udf(F.col("html"))).filter(
-        F.col("__re") != F.col("text")
-    )

@@ -8,9 +8,10 @@ import os
 
 import pytest
 
+REF = "/root/reference/tests/data"
 pytestmark = pytest.mark.skipif(
-    not os.path.exists("/root/reference/tests/data/Master_Edge_List_Dict.json"),
-    reason="reference fixtures not present",
+    not os.path.exists(f"{REF}/Master_Edge_List_Dict.json"),
+    reason=f"reference fixtures not present in {REF}",
 )
 
 

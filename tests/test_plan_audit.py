@@ -1,8 +1,7 @@
 """Physical-plan audits: the properties that make the engine scale must be
 visible in the executed plan, not just asserted in prose — filters reach
 the parquet scan, projections prune columns, dimension joins broadcast,
-relational paths stay in whole-stage codegen, and metadata-only multimodal
-plans never read the binary column."""
+and relational paths stay in whole-stage codegen."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -63,18 +62,6 @@ def test_construct_edges_broadcasts_subclass_map(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_multimodal_metadata_plan_prunes_binary(spark):
-    from pheknowlator_spark.operators.multimodal import (
-        frame_sample_plan,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 12)
-    plan = plan_of(frame_sample_plan(media))
-    # the binary media column must not be materialized by the plan
-    assert "media" not in plan.split("Project")[0] or "media#" not in plan
-
-
 def test_comention_pipeline_single_shuffle(spark):
     # pair derivation = collect_set groupBy; no extra distinct/self-join
     # shuffles, no persist (InMemoryRelation) anywhere in the plan
@@ -88,36 +75,6 @@ def test_comention_pipeline_single_shuffle(spark):
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
     # exactly two aggregate shuffles: groupBy(url) and the scoring groupBy
     assert plan.count("Exchange hashpartitioning") <= 2
-
-
-def test_bucketed_self_join_avoids_shuffle(spark, tmp_path):
-    # subject-bucketed storage → co-located self-join: no Exchange on
-    # either side of the SortMergeJoin
-    from pheknowlator_spark.sources.sinks import write_bucketed_triples
-
-    triples = spark.range(0, 1000).select(
-        F.concat(F.lit("n"), (F.col("id") % 97)).alias("s"),
-        F.lit("p").alias("p"),
-        F.concat(F.lit("n"), ((F.col("id") + 1) % 97)).alias("o"),
-    )
-    import shutil
-    spark.sql("DROP TABLE IF EXISTS bucketed_triples_test")
-    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    shutil.rmtree(f"{wh}/bucketed_triples_test", ignore_errors=True)
-    write_bucketed_triples(triples, "bucketed_triples_test", buckets=8)
-    t = spark.table("bucketed_triples_test")
-    # MERGE hint pins a sort-merge join (AQE would broadcast at this size);
-    # bucketing means SMJ needs NO shuffle exchange on either side
-    joined = (
-        t.alias("l").hint("merge")
-        .join(t.alias("r"), "s")
-        .filter(F.col("l.o") != F.col("r.o"))
-    )
-    joined.collect()
-    plan = plan_of(joined)
-    assert "Exchange hashpartitioning" not in plan
-    assert "SortMergeJoin" in plan
-    spark.sql("DROP TABLE IF EXISTS bucketed_triples_test")
 
 
 def test_partitioned_triples_partition_pruning(spark, tmp_path):

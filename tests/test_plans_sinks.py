@@ -1,5 +1,4 @@
-"""StageStore checkpoint/resume, sinks round-trips, metadata operators,
-and the streaming surface."""
+"""StageStore checkpoint/resume, sinks round-trips and metadata operators."""
 
 import os
 
@@ -13,10 +12,6 @@ from pheknowlator_spark.sources.sinks import (
     write_integer_triples,
     write_node_labels,
     write_ntriples,
-)
-from pheknowlator_spark.streaming.events import (
-    stream_events_from_parquet,
-    windowed_event_counts,
 )
 
 TRIPLES = [
@@ -46,9 +41,8 @@ def test_stage_store_resume_and_lineage(spark, tmp_path):
     lineage = store.lineage()
     assert lineage.filter(F.col("stage") == "triples").count() >= 1
     assert store.manifest()["stages"] == ["triples"]
-    # invalidate forces recompute
-    store.invalidate("triples")
-    store.run("triples", stage_fn)
+    # force recomputes
+    store.run("triples", stage_fn, force=True)
     assert calls == [1, 1]
 
 
@@ -117,31 +111,6 @@ def test_metadata_gate_and_triples(spark, tmp_path):
     assert any("Entity One" in r.value for r in lines)
 
 
-def test_windowed_counts_batch_equals_stream(spark, tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    batch = windowed_event_counts(events)
-    batch_rows = {(str(r.hour), r.event_type, r.cnt) for r in batch.collect()}
-
-    # the file stream source needs a directory
-    events_dir = str(tmp_path / "events_dir")
-    events.write.mode("overwrite").parquet(events_dir)
-    stream = stream_events_from_parquet(spark, events_dir)
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    stream_rows = {
-        (str(r.hour), r.event_type, r.cnt)
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    assert stream_rows == batch_rows
-
-
 def test_stage_store_format_routing(spark, tmp_path):
     # the "one-line Iceberg swap" claim, executable: a non-parquet format
     # string routes both the stage writer and the resume reader (orc is a
@@ -158,121 +127,3 @@ def test_stage_store_format_routing(spark, tmp_path):
     resumed = store.run("s1", lambda: (_ for _ in ()).throw(AssertionError))
     assert resumed.count() == 10
     assert {r.v for r in resumed.collect()} == {2 * i for i in range(10)}
-
-
-def test_stage_store_compact(spark, tmp_path):
-    # 16 tiny files → 1 after compaction; rows identical; lineage rewritten
-    # to the new file layout; previous snapshot survives (swap protocol)
-    import glob
-
-    store = StageStore(spark, str(tmp_path / "stages"))
-    df = spark.range(1000).withColumn("v", F.col("id") % 7)
-    store.run("s1", lambda: df.repartition(16))
-    pre = glob.glob(str(tmp_path / "stages" / "s1" / "*.parquet"))
-    assert len(pre) == 16
-
-    out = store.compact("s1", target_file_bytes=1 << 30)
-    post = glob.glob(str(tmp_path / "stages" / "s1" / "*.parquet"))
-    assert len(post) == 1
-    assert out.count() == 1000
-    assert {r.v for r in out.groupBy("v").count().collect()} == set(range(7))
-    # lineage reflects the compacted layout: one file row for s1
-    lin = store.lineage().filter(F.col("stage") == "s1").collect()
-    assert len(lin) == 1 and lin[0].output_rows == 1000
-    # second compact is a no-op (already at target)
-    again = store.compact("s1", target_file_bytes=1 << 30)
-    assert again.count() == 1000
-    assert len(glob.glob(str(tmp_path / "stages" / "s1" / "*.parquet"))) == 1
-
-
-def test_warc_round_trip(spark, tmp_path):
-    # spec-shaped WARC fixture (plain + per-file gzip) → pages table;
-    # response records only, HTTP envelope stripped, tz-naive timestamps
-    from pheknowlator_spark.sources.warc import read_warc, write_warc
-
-    rows1 = [
-        ("https://a.example/1", "2024-01-01T12:00:00Z", b"<html>one</html>"),
-        ("https://a.example/2", "2024-01-02T13:30:00Z", b"<html>two</html>"),
-    ]
-    rows2 = [
-        ("https://b.example/3", "2024-02-01T00:00:00Z", b"<html>three</html>"),
-    ]
-    d = tmp_path / "warcs"
-    d.mkdir()
-    write_warc(rows1, str(d / "seg-0.warc"))
-    write_warc(rows2, str(d / "seg-1.warc.gz"), gzip_out=True)
-
-    out = read_warc(spark, str(d)).collect()
-    got = {
-        (r.url, str(r.warc_ts), bytes(r.html), r.source_file.split("/")[-1])
-        for r in out
-    }
-    assert got == {
-        ("https://a.example/1", "2024-01-01 12:00:00", b"<html>one</html>", "seg-0.warc"),
-        ("https://a.example/2", "2024-01-02 13:30:00", b"<html>two</html>", "seg-0.warc"),
-        ("https://b.example/3", "2024-02-01 00:00:00", b"<html>three</html>", "seg-1.warc.gz"),
-    }
-    assert all(r.record_id.startswith("<urn:uuid:rec-") for r in out)
-
-
-def test_warc_parser_skips_non_response_and_corrupt_tail(spark):
-    # request records are skipped; a desynced tail stops cleanly
-    from pheknowlator_spark.sources.warc import _parse_warc_bytes
-
-    rec = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: request\r\n"
-        b"WARC-Target-URI: https://x.example/\r\n"
-        b"Content-Length: 4\r\n"
-        b"\r\n"
-        b"GET \r\n\r\n"
-        b"WARC/1.0\r\n"
-        b"WARC-Type: response\r\n"
-        b"WARC-Target-URI: https://y.example/\r\n"
-        b"WARC-Date: 2024-03-01T00:00:00Z\r\n"
-        b"Content-Length: 27\r\n"
-        b"\r\n"
-        b"HTTP/1.1 200 OK\r\n\r\n<b>z</b>\r\n\r\n"
-        b"garbage-not-a-warc-header\r\n"
-    )
-    out = _parse_warc_bytes(rec, "t")
-    assert len(out) == 1
-    url, ts, body, rid, src = out[0]
-    assert url == "https://y.example/"
-    assert body == b"<b>z</b>"
-
-
-def test_wet_round_trip(spark, tmp_path):
-    # pages → WET conversion records (distributed text sink) → read back:
-    # url/ts/text identical, including multi-line and non-ASCII payloads
-    # (Content-Length is byte length) and null text (empty record)
-    from pheknowlator_spark.sources.warc import read_wet, write_wet
-
-    pages = spark.createDataFrame(
-        [
-            ("https://w/1", "2024-04-01 10:00:00", "plain text"),
-            ("https://w/2", "2024-04-02 11:30:00", "line one\nline two\n"),
-            ("https://w/3", "2024-04-03 12:00:00", "naïve — ünïcode ✓"),
-            ("https://w/4", "2024-04-04 13:00:00", None),
-        ],
-        "url string, warc_ts string, text string",
-    ).selectExpr("url", "cast(warc_ts as timestamp) warc_ts", "text")
-    out = str(tmp_path / "wet")
-    write_wet(pages, out)
-    back = read_wet(spark, out, glob="part-*")
-    got = {
-        (r.url, str(r.warc_ts), r.text) for r in back.collect()
-    }
-    assert got == {
-        ("https://w/1", "2024-04-01 10:00:00", "plain text"),
-        ("https://w/2", "2024-04-02 11:30:00", "line one\nline two\n"),
-        ("https://w/3", "2024-04-03 12:00:00", "naïve — ünïcode ✓"),
-        ("https://w/4", "2024-04-04 13:00:00", ""),
-    }
-    # deterministic record ids (md5 urn of the url): idempotent re-write
-    rid = {r.url: r.record_id for r in back.collect()}
-    import hashlib
-
-    assert rid["https://w/1"] == (
-        "<urn:md5:" + hashlib.md5(b"https://w/1").hexdigest() + ">"
-    )

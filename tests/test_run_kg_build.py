@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.join(
 REF = "/root/reference/tests/data"
 pytestmark = pytest.mark.skipif(
     not os.path.exists(f"{REF}/Master_Edge_List_Dict.json"),
-    reason="reference fixtures not present",
+    reason=f"reference fixtures not present in {REF}",
 )
 
 OBO = "http://purl.obolibrary.org/obo/"

@@ -1,59 +1,11 @@
-"""Stateful-streaming + checkpoint-resilience tests (§2.11 + north rule's
-"resumable from checkpoint with per-partition lineage")."""
+"""StageStore checkpoint-resilience tests (north rule's "resumable from
+checkpoint with per-partition lineage") and the batch event-window
+aggregation."""
 
-import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_streaming_dedup_matches_batch(spark, tmp_path):
-    # duplicates spread ACROSS micro-batches must still dedup (state store),
-    # and the surviving set equals the batch dedup_exact result
-    from pheknowlator_spark.operators.dedup import dedup_exact
-    from pheknowlator_spark.streaming.events import streaming_dedup
-
-    rows1 = [("d1", "alpha beta"), ("d2", "gamma"), ("d3", "alpha beta")]
-    rows2 = [("d4", "alpha beta"), ("d5", "delta"), ("d6", "gamma")]
-    src = str(tmp_path / "docs")
-    os.makedirs(src)
-    spark.createDataFrame(rows1, "doc_id string, text string").coalesce(1)\
-        .write.parquet(src + "/b1")
-    spark.createDataFrame(rows2, "doc_id string, text string").coalesce(1)\
-        .write.parquet(src + "/b2")
-    # one directory of parquet files, one file per micro-batch
-    import glob, shutil, time
-    merged = str(tmp_path / "stream_in")
-    os.makedirs(merged)
-    base = time.time() - 1000
-    for i, f in enumerate(sorted(glob.glob(src + "/b*/part-*.parquet"))):
-        dst = f"{merged}/{i:03d}.parquet"
-        shutil.copy(f, dst)
-        # the file stream source orders batches by modification time —
-        # pin strictly increasing mtimes so batch order is deterministic
-        os.utime(dst, (base + 60 * i, base + 60 * i))
-
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(merged)
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        streaming_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-
-    batch = spark.createDataFrame(rows1 + rows2, "doc_id string, text string")
-    expected = {r.doc_id for r in dedup_exact(batch).collect()}
-    assert got == expected
-    assert got == {"d1", "d2", "d5"}
 
 
 def test_stagestore_swap_preserves_previous_snapshot(spark, tmp_path):
@@ -92,136 +44,42 @@ def test_stagestore_lineage_partitioned_write(spark, tmp_path):
     assert all(r.wall_ms >= 0 for r in rows)
 
 
-def test_watermark_drops_late_events(spark, tmp_path):
-    # events later than the watermark horizon must not re-open closed
-    # windows in append mode — run TWO sequential availableNow queries over
-    # a shared checkpoint so the watermark (persisted in the checkpoint)
-    # genuinely precedes the late arrival (late-data semantics, §2.11)
-    import glob, os, shutil
-    from pheknowlator_spark.streaming.events import windowed_event_counts
+def test_manifest_skips_crash_leftovers_and_cc_resumes(spark, tmp_path):
+    # a kill inside run's commit window leaves <stage>.tmp (with _SUCCESS)
+    # or, between the two renames, <stage>.trash; neither is a committed
+    # stage, and a connected-components resume must step past both
+    from pheknowlator_spark.operators.graph_algos import connected_components
+    from pheknowlator_spark.plans.checkpoint import StageStore
 
-    src = str(tmp_path / "ev")
-    merged = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    os.makedirs(src)
-    os.makedirs(merged)
-    on_time = [("2024-01-01 00:10:00", "click"), ("2024-01-01 03:00:00", "view")]
-    late = [("2024-01-01 00:20:00", "click")]  # 2h40m late vs max ts
-    spark.createDataFrame(on_time, "ts string, event_type string")\
-        .coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(late, "ts string, event_type string")\
-        .coalesce(1).write.parquet(src + "/b2")
+    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(11)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    fresh = {(r.node, r.component) for r in connected_components(edges).collect()}
 
-    def run_once():
-        stream = (
-            spark.readStream.schema("ts string, event_type string")
-            .parquet(merged)
-        )
-        q = (
-            windowed_event_counts(stream, window="1 hour", watermark="1 hour")
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
+    store = StageStore(spark, str(tmp_path / "cc_state"))
 
-    shutil.copy(glob.glob(src + "/b1/part-*.parquet")[0], merged + "/a.parquet")
-    run_once()  # watermark advances to 02:00 (03:00 - 1h), 00:00 win closes
-    shutil.copy(glob.glob(src + "/b2/part-*.parquet")[0], merged + "/b.parquet")
-    run_once()  # the 00:20 event is behind the persisted watermark → dropped
+    class Boom(RuntimeError):
+        pass
 
-    rows = {(str(r.hour), r.event_type, r.cnt)
-            for r in spark.read.parquet(out_dir).collect()}
-    assert ("2024-01-01 00:00:00", "click", 1) in rows
-    assert not any(c > 1 for _, _, c in rows)
+    def killer(it, _df):
+        if it == 0:
+            raise Boom("simulated driver loss after round 0 commit")
 
+    with pytest.raises(Boom):
+        connected_components(edges, state_store=store, on_round=killer)
+    root = tmp_path / "cc_state"
+    shutil.copytree(root / "cc_round_0000", root / "cc_round_0001.tmp")
+    shutil.copytree(root / "cc_round_0000", root / "cc_round_0000.trash")
+    assert (root / "cc_round_0001.tmp" / "_SUCCESS").exists()
 
-def test_session_windows_stream_matches_batch(spark, tmp_path):
-    # session windows spanning micro-batch boundaries must merge in the
-    # streaming state store and equal the batch session_window result
-    import glob
-    import shutil
-    import time
-
-    from pheknowlator_spark.streaming.events import sessionized_event_counts
-
-    rows1 = [
-        ("u1", "click", "2024-01-01 10:00:00"),
-        ("u1", "view", "2024-01-01 10:10:00"),
-        ("u2", "click", "2024-01-01 09:00:00"),
-    ]
-    rows2 = [
-        ("u1", "click", "2024-01-01 10:25:00"),  # same session as 10:10
-        ("u1", "view", "2024-01-01 12:00:00"),   # gap > 30 min: new session
-        ("u2", "view", "2024-01-01 09:50:00"),   # gap > 30 min: new session
-    ]
-    # append-mode session windows emit only once the watermark passes the
-    # session end: a far-future sentinel in a last micro-batch advances the
-    # watermark (2 h behind max event time) past every real session
-    rows3 = [("zz", "flush", "2024-01-02 00:00:00")]
-
-    def to_df(rows):
-        return spark.createDataFrame(
-            rows, "user_id string, event_type string, ts string"
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    src = str(tmp_path / "sess_src")
-    os.makedirs(src)
-    to_df(rows1).coalesce(1).write.parquet(src + "/b1")
-    to_df(rows2).coalesce(1).write.parquet(src + "/b2")
-    to_df(rows3).coalesce(1).write.parquet(src + "/b3")
-    merged = str(tmp_path / "sess_in")
-    os.makedirs(merged)
-    base = time.time() - 1000
-    for i, f in enumerate(sorted(glob.glob(src + "/b*/part-*.parquet"))):
-        dst = f"{merged}/{i:03d}.parquet"
-        shutil.copy(f, dst)
-        os.utime(dst, (base + 60 * i, base + 60 * i))
-
-    stream = (
-        spark.readStream.schema("user_id string, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(merged)
-    )
-    out_dir = str(tmp_path / "sess_out")
-    q = (
-        sessionized_event_counts(stream, gap="30 minutes")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, str(r.session_start), r.n_events)
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    batch = sessionized_event_counts(to_df(rows1 + rows2), gap="30 minutes")
-    expected = {
-        (r.user_id, str(r.session_start), r.n_events) for r in batch.collect()
-    }
-    # the sentinel's own session stays open in the stream (nothing advances
-    # the watermark past it) — every REAL session must match the batch
-    assert got == expected
-    # u1: one 3-event session 10:00-10:25 plus a singleton at 12:00;
-    # u2: two singletons (09:00, 09:50)
-    assert ("u1", "2024-01-01 10:00:00", 3) in expected
-    assert sum(1 for u, _, _ in expected if u == "u1") == 2
-    assert sum(1 for u, _, _ in expected if u == "u2") == 2
+    assert store.manifest()["stages"] == ["cc_round_0000"]
+    resumed = connected_components(edges, state_store=store)
+    assert {(r.node, r.component) for r in resumed.collect()} == fresh
 
 
 def test_event_windows_accept_string_timestamps(spark):
-    # batch/stream parity for string ts columns: the timestamp cast is
-    # applied unconditionally, so a batch DataFrame with a string ts works
-    # exactly like the equivalent stream input
-    from pheknowlator_spark.streaming.events import (
-        sessionized_event_counts,
-        windowed_event_counts,
-    )
+    # the timestamp cast is applied inside the operator, so a string ts
+    # column sessionizes like a TIMESTAMP one
+    from pheknowlator_spark.operators.temporal import sessionized_event_counts
 
     df = spark.createDataFrame(
         [
@@ -236,71 +94,3 @@ def test_event_windows_accept_string_timestamps(spark):
     assert {(r.user_id, r.n_events) for r in sess} == {
         ("u1", 2), ("u1", 1), ("u2", 1),
     }
-    win = windowed_event_counts(df, window="1 hour").collect()
-    assert {(r.event_type, r.cnt) for r in win} == {("click", 3), ("view", 1)}
-
-
-def test_streaming_capture_dedup_suppresses_in_horizon_recrawls(spark, tmp_path):
-    """Re-crawls of the same canonical url arriving in later micro-batches
-    (within the watermark horizon) must be suppressed; distinct canonical
-    urls must all survive. Url variants that NORMALIZE equal (casing,
-    default port, param order) count as the same capture."""
-    import glob
-    import os
-    import shutil
-    import time
-    import datetime as dt
-
-    from pheknowlator_spark.streaming.events import streaming_capture_dedup
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows1 = [
-        ("HTTP://A.Example:80/p?b=2&a=1", t0, "x1"),
-        ("https://b.example/q", t0, "x2"),
-    ]
-    # batch 2: same canonical urls, different raw spellings + one new url
-    rows2 = [
-        ("http://a.example/p?a=1&b=2#frag", t0 + dt.timedelta(minutes=5), "x3"),
-        ("https://c.example/r", t0 + dt.timedelta(minutes=5), "x4"),
-    ]
-    schema = "url string, warc_ts timestamp, payload string"
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(src + "/b2")
-    merged = str(tmp_path / "in")
-    os.makedirs(merged)
-    base = time.time() - 1000
-    for i, f in enumerate(sorted(glob.glob(src + "/b*/part-*.parquet"))):
-        dst = f"{merged}/{i:03d}.parquet"
-        shutil.copy(f, dst)
-        os.utime(dst, (base + 60 * i, base + 60 * i))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(merged)
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        streaming_capture_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {(r.norm_url, r.payload) for r in spark.read.parquet(out_dir).collect()}
-    assert got == {
-        ("http://a.example/p?a=1&b=2", "x1"),  # first capture kept
-        ("https://b.example/q", "x2"),
-        ("https://c.example/r", "x4"),
-    }
-
-    # batch fallback: same surviving key set on the union
-    batch = spark.createDataFrame(rows1 + rows2, schema)
-    batch_keys = {
-        r.norm_url for r in streaming_capture_dedup(batch).collect()
-    }
-    assert batch_keys == {k for k, _ in got}

@@ -22,7 +22,6 @@ from pheknowlator_spark.operators.dedup import (
 from pheknowlator_spark.operators.multimodal import (
     DecodeUnavailable,
     extract_features,
-    frame_sample_plan,
     real_decode,
     synthetic_media,
 )
@@ -200,14 +199,6 @@ def test_multimodal_features(spark):
 def test_real_decode_is_stubbed():
     with pytest.raises(DecodeUnavailable):
         real_decode(b"x", "image")
-
-
-def test_frame_sample_metadata_only(spark):
-    media = synthetic_media(spark, 9)
-    plan = frame_sample_plan(media, every_ms=1000)
-    assert plan.count() > 0
-    # binary column pruned from the scan
-    assert "media" not in plan.columns
 
 
 def test_simhash_pigeonhole_exactness(spark, documents):
