@@ -31,13 +31,8 @@ def _register_pickle_by_value() -> None:
     cluster --py-files remains the right mechanism; this is a local-mode
     safety net with negligible per-task cost.
     """
-    try:
-        from pyspark import cloudpickle
-    except ImportError:  # pragma: no cover
-        return
-    register = getattr(cloudpickle, "register_pickle_by_value", None)
-    if register is None:  # pragma: no cover
-        return
+    from pyspark.cloudpickle import register_pickle_by_value
+
     import pheknowlator_spark.functions.rdf
     import pheknowlator_spark.functions.text
     import pheknowlator_spark.operators.multimodal
@@ -50,7 +45,7 @@ def _register_pickle_by_value() -> None:
     for name, mod in list(sys.modules.items()):
         if name.startswith("pheknowlator_spark") and mod is not None:
             try:
-                register(mod)
+                register_pickle_by_value(mod)
             except Exception:  # pragma: no cover - best effort
                 pass
 

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
 OWL_NS = "http://www.w3.org/2002/07/owl#"
-XSD_NS = "http://www.w3.org/2001/XMLSchema#"
 OBO = "http://purl.obolibrary.org/obo/"
 OBOINOWL = "http://www.geneontology.org/formats/oboInOwl#"
 PKT = "https://github.com/callahantiff/PheKnowLator/pkt/"
@@ -44,14 +43,7 @@ OWL_OBJECT_PROPERTY = OWL_NS + "ObjectProperty"
 OWL_ANNOTATION_PROPERTY = OWL_NS + "AnnotationProperty"
 OWL_NAMED_INDIVIDUAL = OWL_NS + "NamedIndividual"
 OWL_SOME_VALUES_FROM = OWL_NS + "someValuesFrom"
-OWL_ALL_VALUES_FROM = OWL_NS + "allValuesFrom"
 OWL_ON_PROPERTY = OWL_NS + "onProperty"
-OWL_ON_CLASS = OWL_NS + "onClass"
-OWL_HAS_SELF = OWL_NS + "hasSelf"
-OWL_HAS_VALUE = OWL_NS + "hasValue"
-OWL_UNION_OF = OWL_NS + "unionOf"
-OWL_INTERSECTION_OF = OWL_NS + "intersectionOf"
-OWL_COMPLEMENT_OF = OWL_NS + "complementOf"
 OWL_DISJOINT_WITH = OWL_NS + "disjointWith"
 OWL_AXIOM = OWL_NS + "Axiom"
 OWL_ANNOTATED_SOURCE = OWL_NS + "annotatedSource"
@@ -60,7 +52,6 @@ OWL_ANNOTATED_TARGET = OWL_NS + "annotatedTarget"
 OWL_ONTOLOGY = OWL_NS + "Ontology"
 OWL_DEPRECATED = OWL_NS + "deprecated"
 
-TRIPLE_COLS = ("s", "p", "o")
 FULL_TRIPLE_COLS = ("s", "p", "o", "o_is_literal", "o_lang", "o_datatype")
 
 
@@ -116,11 +107,9 @@ def n3_literal(
 def n3_term(
     o: Column | str,
     o_is_literal: Column | str = "o_is_literal",
-    o_lang: Column | str = "o_lang",
-    o_datatype: Column | str = "o_datatype",
 ) -> Column:
     """Serialize an object term that may be a URI or a literal."""
-    return F.when(_c(o_is_literal), n3_literal(o, o_lang, o_datatype)).otherwise(
+    return F.when(_c(o_is_literal), n3_literal(o, "o_lang", "o_datatype")).otherwise(
         n3_uri(o)
     )
 
@@ -165,24 +154,24 @@ def pkt_instance_hash(n1: Column, rel: Column, n2: Column, role: str) -> Column:
     return F.concat(F.lit(PKT + "N"), F.md5(core.cast("binary")))
 
 
-def add_bnode_namespace(col: Column | str, ns: str = PKT_BNODE) -> Column:
+def add_bnode_namespace(col: Column | str) -> Column:
     """Map anonymous-node ids into the reserved bnode namespace
     (adds_namespace_to_bnodes, kg_utils.py:488-517): ``bnode:x``/``_:x`` →
-    ``<ns>x``; everything else passes through."""
+    ``<PKT_BNODE>x``; everything else passes through."""
     c = _c(col)
     local = F.when(c.startswith("bnode:"), F.substring(c, 7, 1 << 20)).when(
         c.startswith("_:"), F.substring(c, 3, 1 << 20)
     )
-    return F.when(local.isNotNull(), F.concat(F.lit(ns), local)).otherwise(c)
+    return F.when(local.isNotNull(), F.concat(F.lit(PKT_BNODE), local)).otherwise(c)
 
 
-def remove_bnode_namespace(col: Column | str, ns: str = PKT_BNODE) -> Column:
+def remove_bnode_namespace(col: Column | str) -> Column:
     """Inverse of :func:`add_bnode_namespace`
-    (removes_namespace_from_bnodes, kg_utils.py:520-550): ``<ns>x`` →
+    (removes_namespace_from_bnodes, kg_utils.py:520-550): ``<PKT_BNODE>x`` →
     ``bnode:x``."""
     c = _c(col)
     return F.when(
-        c.startswith(ns),
+        c.startswith(PKT_BNODE),
         F.concat(F.lit("bnode:"), F.element_at(F.split(c, "/"), -1)),
     ).otherwise(c)
 
@@ -205,8 +194,6 @@ def literal_triple(
     s: Column,
     p: Column | str,
     o: Column,
-    lang: Column | None = None,
-    datatype: Column | None = None,
 ) -> Column:
     """Struct literal for a triple with a literal object."""
     p_c = F.lit(p) if isinstance(p, str) else p
@@ -215,8 +202,6 @@ def literal_triple(
         p_c.alias("p"),
         o.alias("o"),
         F.lit(True).alias("o_is_literal"),
-        (lang if lang is not None else F.lit(None).cast("string")).alias("o_lang"),
-        (datatype if datatype is not None else F.lit(None).cast("string")).alias(
-            "o_datatype"
-        ),
+        F.lit(None).cast("string").alias("o_lang"),
+        F.lit(None).cast("string").alias("o_datatype"),
     )

@@ -241,13 +241,11 @@ def chunk_documents(
     docs,
     max_tokens: int = 128,
     stride: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """Explode documents into fixed-size whitespace-token windows —
     the chunking step between curation and tokenization in a training
     pipeline (and the indexing unit for retrieval): returns
-    ``[<id_col>, chunk_id, n_tokens, chunk]``.
+    ``[doc_id, chunk_id, n_tokens, chunk]``.
 
     ``stride`` < ``max_tokens`` yields overlapping windows (RAG-style
     context overlap); the default ``stride = max_tokens`` tiles the
@@ -264,7 +262,7 @@ def chunk_documents(
         stride = max_tokens
     if stride <= 0 or max_tokens <= 0:
         raise ValueError("max_tokens and stride must be positive")
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
 
     def build(wds):
         n = F.size(wds)
@@ -285,9 +283,9 @@ def chunk_documents(
     # once per emitted chunk
     chunks = _bind(words, build)
     return (
-        docs.select(F.col(id_col), F.explode(chunks).alias("c"))
+        docs.select(F.col("doc_id"), F.explode(chunks).alias("c"))
         .select(
-            id_col,
+            "doc_id",
             F.col("c.chunk_id").alias("chunk_id"),
             F.size("c.__w").cast("long").alias("n_tokens"),
             F.concat_ws(" ", F.col("c.__w")).alias("chunk"),
@@ -328,8 +326,6 @@ def scrub_pii(col: Column) -> Column:
 def token_length_distribution(
     docs,
     quantiles: list[float] | None = None,
-    lang_col: str = "lang",
-    text_col: str = "text",
 ):
     """Per-language token-length distribution — the dataset-curation stat
     that drives length-filter thresholds in training-data pipelines.
@@ -349,8 +345,8 @@ def token_length_distribution(
         format(Decimal(repr(q)), "f") + "D" for q in quantiles
     )
     d = docs.select(
-        F.col(lang_col).alias("lang"),
-        token_count_ws(F.col(text_col)).alias("__tok"),
+        F.col("lang"),
+        token_count_ws(F.col("text")).alias("__tok"),
     )
     agg = d.groupBy("lang").agg(
         F.expr(f"percentile(__tok, array({qlist}))").alias("__q"),

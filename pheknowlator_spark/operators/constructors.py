@@ -51,19 +51,6 @@ from pheknowlator_spark.functions.rdf import (
     uri_triple,
 )
 
-EDGE_COLS = [
-    "edge_type",
-    "n1_kind",
-    "n2_kind",
-    "sub_id",
-    "obj_id",
-    "uri1",
-    "uri2",
-    "rel",
-    "inv_rel",
-]
-
-
 def _subclass_core_triples(n1: Column, n2: Column, rel: Column, inv: Column) -> Column:
     """Array of 9 (+9 with inverse) triple structs.
 
@@ -193,7 +180,8 @@ def construct_edges(
     """G3/G4 dispatch: expand an edge table into KG triples in ONE pass.
 
     Args:
-        edges: DataFrame with ``EDGE_COLS`` (see module docstring).
+        edges: DataFrame with the edge-row columns of the module
+            docstring.
         subclass_map: ``[entity_id, class_id]`` exploded map (dimension
             table); required when any edge has an entity side.
         approach: ``'subclass'`` or ``'instance'``.

@@ -42,14 +42,10 @@ def contamination_check(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id_col: str = "bench_id",
-    bench_text_col: str = "text",
 ) -> DataFrame:
     """Documents sharing any word ``n``-gram with a benchmark document.
 
-    Returns ``[<id_col>, n_shared_grams, n_bench_docs]`` for contaminated
+    Returns ``[doc_id, n_shared_grams, n_bench_docs]`` for contaminated
     docs only (no row ⇒ clean). ``n_shared_grams`` counts the distinct
     overlapping grams, ``n_bench_docs`` the distinct benchmark docs hit —
     the two numbers a decontamination policy thresholds on (single-gram
@@ -57,23 +53,23 @@ def contamination_check(
     leakage).
 
     The benchmark gram set is broadcast; the corpus side never shuffles
-    gram rows — only the per-doc aggregation keyed by ``id_col`` (hit
+    gram rows — only the per-doc aggregation keyed by ``doc_id`` (hit
     rows only, partially combined map-side).
     """
     dg = docs.select(
-        F.col(id_col),
-        F.explode(shingles(F.col(text_col), n)).alias("gram"),
+        F.col("doc_id"),
+        F.explode(shingles(F.col("text"), n)).alias("gram"),
     )
     bg = (
         benchmark.select(
-            F.col(bench_id_col).alias("__bench_id"),
-            F.explode(shingles(F.col(bench_text_col), n)).alias("gram"),
+            F.col("bench_id").alias("__bench_id"),
+            F.explode(shingles(F.col("text"), n)).alias("gram"),
         )
         .distinct()
     )
     return (
         dg.join(F.broadcast(bg), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count_distinct("gram").alias("n_shared_grams"),
             F.count_distinct("__bench_id").alias("n_bench_docs"),
@@ -134,7 +130,6 @@ def budget_sample(
     budgets: dict,
     weight_col: str,
     default_budget: float = 0.0,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Downsample each stratum to ≈ a target WEIGHT budget (tokens,
     characters, bytes): fraction = min(1, budget / stratum_weight),
@@ -169,7 +164,7 @@ def budget_sample(
     return (
         df.join(F.broadcast(dim), strata_col)
         .filter(
-            sample_bucket(F.col(id_col)).cast("double")
+            sample_bucket(F.col("doc_id")).cast("double")
             < F.col("__frac") * 1048576.0
         )
         .drop("__frac")
@@ -179,15 +174,13 @@ def budget_sample(
 def tfidf_topk(
     docs: DataFrame,
     k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document top-``k`` keywords by smoothed TF-IDF
     (sklearn's formulation: ``idf = ln((1+N)/(1+df)) + 1``) — the keyword
     harvest a corpus pipeline runs to tag documents before mixing, and the
     textual analog of the synonym dictionary the reference builds from
     ontology labels (metadata harvest, SURVEY §2.8). Returns
-    ``[<id_col>, term, tf, df, tfidf, rank]`` with ``rank`` 1..k per
+    ``[doc_id, term, tf, df, tfidf, rank]`` with ``rank`` 1..k per
     document (ties broken by term ascending, fully deterministic).
 
     100 TB path: term frequencies and document frequencies are two
@@ -202,19 +195,19 @@ def tfidf_topk(
     if k < 1:
         raise ValueError("k must be >= 1")
     terms = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
             "term"
         ),
     ).filter(F.col("term") != "")
-    tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("__n"))
     scored = (
         tf.join(df, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             "tf",
             "df",
@@ -229,7 +222,7 @@ def tfidf_topk(
     )
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
     )
     return (
@@ -241,8 +234,6 @@ def tfidf_topk(
 def lm_score(
     docs: DataFrame,
     ref_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """CCNet-style language-model quality scoring (Wenzek et al. 2020):
     train a Laplace-smoothed unigram LM on a trusted reference slice,
@@ -250,7 +241,7 @@ def lm_score(
     fluent reference-like text, high-perplexity ≈ boilerplate/garble.
     ``p(w) = (c_w + 1) / (T + V)`` over reference token count ``T`` and
     vocabulary ``V``; unseen tokens get the unsmoothed-floor
-    ``1 / (T + V)``. Returns ``[<id_col>, n_tokens, avg_logp, ppl]``
+    ``1 / (T + V)``. Returns ``[doc_id, n_tokens, avg_logp, ppl]``
     (``ppl = exp(-avg_logp)``) for every document with ≥1 token.
 
     100 TB path: the LM is vocabulary-sized (it derives from the
@@ -264,9 +255,9 @@ def lm_score(
     """
     def _tokens(df):
         return df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
             ).alias("term"),
         ).filter(F.col("term") != "")
 
@@ -289,14 +280,14 @@ def lm_score(
         .join(F.broadcast(lm), "term", "left")
         .crossJoin(F.broadcast(stats))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(
                 "__logp",
                 F.log(F.lit(1.0) / (F.col("__t") + F.col("__v"))),
             ).alias("__s"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         (F.sum("__s") / F.count(F.lit(1))).alias("avg_logp"),
         F.exp(-(F.sum("__s") / F.count(F.lit(1)))).alias("ppl"),
@@ -305,8 +296,6 @@ def lm_score(
 
 def host_quality_filter(
     pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
     min_mean_quality: float = 0.5,
     min_pages: int = 1,
 ) -> DataFrame:
@@ -329,14 +318,14 @@ def host_quality_filter(
     host = F.regexp_extract(
         F.lower(
             F.regexp_extract(
-                F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1
+                F.col("url"), r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1
             )
         ),
         r"^([^:]*)",
         1,
     )
     scored = pages.withColumn("host", host).withColumn(
-        "__q", quality_score(F.col(text_col))
+        "__q", quality_score(F.col("text"))
     )
     keep = (
         scored.groupBy("host")
@@ -355,10 +344,7 @@ def host_quality_filter(
 def dsir_weights(
     docs: DataFrame,
     is_target,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = 4096,
-    smoothing: float = 1.0,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): fit hashed-unigram
@@ -371,7 +357,7 @@ def dsir_weights(
 
     Token buckets use the md5-derived hash (DuckDB-replayable; swap for
     ``xxhash64 % buckets`` in production for speed). Returns
-    ``[<id_col>, n_tokens, dsir_weight]``.
+    ``[doc_id, n_tokens, dsir_weight]``.
 
     100 TB path: the target flag is evaluated on the DOC row before the
     token explode, so BOTH hashed LMs (each ``buckets``-sized, 4096 rows)
@@ -389,14 +375,14 @@ def dsir_weights(
 
     toks = (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             is_target.cast("boolean").alias("__t"),
             F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
             ).alias("term"),
         )
         .filter(F.col("term") != "")
-        .select(id_col, "__t", bucket)
+        .select("doc_id", "__t", bucket)
     )
     counts = toks.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("__cr"),
@@ -405,7 +391,7 @@ def dsir_weights(
     tots = counts.agg(
         F.sum("__ct").alias("__tt"), F.sum("__cr").alias("__tr")
     )
-    s = F.lit(float(smoothing))
+    s = F.lit(1.0)
     b = F.lit(float(buckets))
     ratio = (
         counts.crossJoin(F.broadcast(tots))
@@ -419,7 +405,7 @@ def dsir_weights(
     )
     return (
         toks.join(F.broadcast(ratio), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("__lr").alias("dsir_weight"),

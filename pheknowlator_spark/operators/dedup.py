@@ -23,8 +23,7 @@ from pyspark.sql import functions as F
 from pheknowlator_spark.functions.text import fingerprint64, shingles
 
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Keep the min-id representative per fingerprint group.
 
     One ``min_by`` hash aggregation (map-side partial combine: a single
@@ -38,10 +37,10 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id",
     """
     row = F.struct(*[F.col(c).alias(c) for c in docs.columns])
     order = F.struct(
-        F.col(id_col).isNull().alias("is_null"), F.col(id_col).alias("id")
+        F.col("doc_id").isNull().alias("is_null"), F.col("doc_id").alias("id")
     )
     return (
-        docs.groupBy(fingerprint64(F.col(text_col)).alias("__fp"))
+        docs.groupBy(fingerprint64(F.col("text")).alias("__fp"))
         .agg(F.min_by(row, order).alias("__w"))
         .select("__w.*")
     )
@@ -49,10 +48,7 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id",
 
 def minhash_signatures(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 64,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Per-doc MinHash signature as an array column — pure column math.
 
@@ -68,7 +64,7 @@ def minhash_signatures(
     ~700-word pages). Here the shingle array is referenced once; the
     per-shingle cost is just the ``num_hashes`` seeded hashes.
     """
-    sh = shingles(F.col(text_col), shingle_k)
+    sh = shingles(F.col("text"), 3)
     sig = F.aggregate(
         sh,
         F.array_repeat(F.lit(9223372036854775807), num_hashes),
@@ -78,12 +74,11 @@ def minhash_signatures(
             lambda a, b: F.least(a, b),
         ),
     )
-    return docs.select(F.col(id_col), sh.alias("shingles"), sig.alias("signature"))
+    return docs.select(F.col("doc_id"), sh.alias("shingles"), sig.alias("signature"))
 
 
 def minhash_lsh_candidates(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     bands: int = 16,
     rows_per_band: int = 4,
 ) -> DataFrame:
@@ -100,7 +95,7 @@ def minhash_lsh_candidates(
     it to a lambda variable guarantees a single evaluation per row.
     """
     banded = signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.flatten(
                 F.transform(
@@ -129,12 +124,12 @@ def minhash_lsh_candidates(
                 )
             )
         ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    ).select("doc_id", "bb.band", "bb.bucket")
     left = banded.select(
-        "band", "bucket", F.col(id_col).alias("a")
+        "band", "bucket", F.col("doc_id").alias("a")
     )
     right = banded.select(
-        "band", "bucket", F.col(id_col).alias("b")
+        "band", "bucket", F.col("doc_id").alias("b")
     )
     return (
         left.join(right, ["band", "bucket"])
@@ -147,13 +142,12 @@ def minhash_lsh_candidates(
 def jaccard_verify(
     candidates: DataFrame,
     signatures: DataFrame,
-    id_col: str = "doc_id",
     threshold: float = 0.7,
 ) -> DataFrame:
     """Exact shingle-Jaccard over the candidate pairs only: [a, b, jaccard]."""
-    sh = signatures.select(F.col(id_col), F.col("shingles"))
-    a = sh.select(F.col(id_col).alias("a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("b"), F.col("shingles").alias("sh_b"))
+    sh = signatures.select(F.col("doc_id"), F.col("shingles"))
+    a = sh.select(F.col("doc_id").alias("a"), F.col("shingles").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("b"), F.col("shingles").alias("sh_b"))
     joined = candidates.join(a, "a").join(b, "b")
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
@@ -167,44 +161,36 @@ def jaccard_verify(
 
 def minhash_near_duplicates(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.7,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline → verified pairs [a, b, jaccard]."""
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k)
-    cands = minhash_lsh_candidates(sigs, id_col, bands, num_hashes // bands)
-    return jaccard_verify(cands, sigs, id_col, threshold)
+    sigs = minhash_signatures(docs, num_hashes=num_hashes)
+    cands = minhash_lsh_candidates(sigs, bands=bands, rows_per_band=num_hashes // bands)
+    return jaccard_verify(cands, sigs, threshold=threshold)
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.7,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Exact n-gram Jaccard via an inverted shingle index (no LSH, exact):
     pairs sharing ≥1 shingle are scored — the brute-force oracle for
     ``minhash_near_duplicates`` at test scale. Shuffle = explode on shingle.
     """
     sh = docs.select(
-        F.col(id_col), shingles(F.col(text_col), shingle_k).alias("shingles")
+        F.col("doc_id"), shingles(F.col("text"), 3).alias("shingles")
     )
-    inv = sh.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+    inv = sh.select(F.col("doc_id"), F.explode("shingles").alias("shingle"))
     pairs = (
         inv.alias("x")
         .join(inv.alias("y"), "shingle")
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(
-            F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b")
-        )
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
         .distinct()
     )
-    return jaccard_verify(pairs, sh, id_col, threshold)
+    return jaccard_verify(pairs, sh, threshold=threshold)
 
 
 def md5_hash64(col):
@@ -229,7 +215,7 @@ def _bit_masks():
     return [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
 
 
-def simhash64(text_col, shingle_k: int = 2, hash_fn=None):
+def simhash64(text_col, hash_fn=None):
     """64-bit SimHash as pure column math: per-shingle 64-bit hash,
     majority vote per bit via ONE sign aggregation over the shingle array
     (accumulator = array of 64 vote counters, merged with zip_with — the
@@ -241,7 +227,7 @@ def simhash64(text_col, shingle_k: int = 2, hash_fn=None):
     hash DuckDB reproduces bit-exactly (the oracle-gated variant)."""
     if hash_fn is None:
         hash_fn = F.xxhash64
-    sh = shingles(text_col, shingle_k)
+    sh = shingles(text_col, 2)
     hashes = F.transform(sh, lambda s: hash_fn(s))
     masks = _bit_masks()
     mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
@@ -272,30 +258,25 @@ def simhash64(text_col, shingle_k: int = 2, hash_fn=None):
 
 def simhash_near_duplicates(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
-    blocks: int | None = None,
     hash_fn=None,
 ) -> DataFrame:
-    """SimHash near-dup: candidates share at least one of ``blocks`` bit
-    blocks (pigeonhole: hamming ≤ blocks-1 guarantees a shared block), then
-    exact hamming filter — so with the default ``blocks = max_hamming + 1``
-    the result is EXACTLY the hamming-ball pair set (no false negatives),
-    while candidate generation stays a (block, key) bucket join.
-    Returns [a, b, hamming]."""
-    if blocks is None:
-        blocks = max_hamming + 1
+    """SimHash near-dup: candidates share at least one of ``max_hamming + 1``
+    bit blocks (pigeonhole: hamming ≤ max_hamming guarantees a shared
+    block), then exact hamming filter — so the result is EXACTLY the
+    hamming-ball pair set (no false negatives), while candidate generation
+    stays a (block, key) bucket join. Returns [a, b, hamming]."""
+    blocks = max_hamming + 1
     if blocks > 64:
-        raise ValueError("blocks must be <= 64 (64-bit simhash)")
+        raise ValueError("max_hamming must be < 64 (64-bit simhash)")
     # block boundaries cover all 64 bits, widths differ by at most one bit
     bounds = [round(i * 64 / blocks) for i in range(blocks + 1)]
     sh = docs.select(
-        F.col(id_col),
-        simhash64(F.col(text_col), hash_fn=hash_fn).alias("sim"),
+        F.col("doc_id"),
+        simhash64(F.col("text"), hash_fn=hash_fn).alias("sim"),
     )
     banded = sh.select(
-        id_col,
+        "doc_id",
         "sim",
         F.explode(
             F.array(
@@ -310,9 +291,9 @@ def simhash_near_duplicates(
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, "sim", "bb.block", "bb.key")
-    a = banded.select("block", "key", F.col(id_col).alias("a"), F.col("sim").alias("sim_a"))
-    b = banded.select("block", "key", F.col(id_col).alias("b"), F.col("sim").alias("sim_b"))
+    ).select("doc_id", "sim", "bb.block", "bb.key")
+    a = banded.select("block", "key", F.col("doc_id").alias("a"), F.col("sim").alias("sim_a"))
+    b = banded.select("block", "key", F.col("doc_id").alias("b"), F.col("sim").alias("sim_b"))
     cands = (
         a.join(b, ["block", "key"])
         .filter(F.col("a") < F.col("b"))
@@ -328,8 +309,6 @@ def simhash_near_duplicates(
 
 def winnow_fingerprints(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_k: int = 3,
     window: int = 4,
     hash_fn=None,
@@ -344,7 +323,7 @@ def winnow_fingerprints(
     Pure Column math (one projection + explode; the only shuffle is the
     caller's). Hashes are masked to 63 bits so the signed ordering equals
     DuckDB's unsigned ordering (oracle parity for :func:`md5_hash64`).
-    Returns ``[<id_col>, fingerprint]`` rows.
+    Returns ``[doc_id, fingerprint]`` rows.
     """
     if hash_fn is None:
         hash_fn = F.xxhash64
@@ -356,8 +335,8 @@ def winnow_fingerprints(
     # the shingle hashes would be re-computed per window slot, turning an
     # O(n·w) selection into O(n²) hash work per document (measured 17 s →
     # 0.6 s on 300 sf0.01 docs).
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    d = docs.select(F.col(id_col), words.alias("__words"))
+    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    d = docs.select(F.col("doc_id"), words.alias("__words"))
     w = F.col("__words")
     n = F.size(w)
     idx = F.sequence(F.lit(0), F.greatest(n - shingle_k, F.lit(0)))
@@ -369,9 +348,9 @@ def winnow_fingerprints(
             idx, lambda i: F.concat_ws(" ", F.slice(w, i + 1, shingle_k))
         )
     )
-    d = d.select(F.col(id_col), sh.alias("__sh"))
+    d = d.select(F.col("doc_id"), sh.alias("__sh"))
     d = d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(
             F.col("__sh"), lambda s: hash_fn(s).bitwiseAND(F.lit(max63))
         ).alias("__h"),
@@ -387,14 +366,12 @@ def winnow_fingerprints(
         )
     )
     return d.select(
-        F.col(id_col), F.explode(fps).alias("fingerprint")
+        F.col("doc_id"), F.explode(fps).alias("fingerprint")
     ).distinct()
 
 
 def winnow_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_k: int = 3,
     window: int = 4,
     min_matches: int = 2,
@@ -417,7 +394,7 @@ def winnow_pairs(
     set it to a small constant (MOSS uses ~10); leaving it None is only
     safe on corpora known to lack ubiquitous runs.
     """
-    fps = winnow_fingerprints(docs, id_col, text_col, shingle_k, window, hash_fn)
+    fps = winnow_fingerprints(docs, shingle_k=shingle_k, window=window, hash_fn=hash_fn)
     if max_df is not None:
         kept = (
             fps.groupBy("fingerprint")
@@ -426,8 +403,8 @@ def winnow_pairs(
             .select("fingerprint")
         )
         fps = fps.join(kept, "fingerprint")
-    a = fps.select("fingerprint", F.col(id_col).alias("a"))
-    b = fps.select("fingerprint", F.col(id_col).alias("b"))
+    a = fps.select("fingerprint", F.col("doc_id").alias("a"))
+    b = fps.select("fingerprint", F.col("doc_id").alias("b"))
     return (
         a.join(b, "fingerprint")
         .filter(F.col("a") < F.col("b"))
@@ -440,10 +417,9 @@ def winnow_pairs(
 def near_dup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
     state_store=None,
 ) -> DataFrame:
-    """Near-duplicate CLUSTERS from a pair table: ``[<id_col>,
+    """Near-duplicate CLUSTERS from a pair table: ``[doc_id,
     cluster_id]`` for every document, where ``cluster_id`` is the min doc
     id of its connected component over the pairs (singletons map to
     themselves).
@@ -469,11 +445,11 @@ def near_dup_clusters(
         stage_prefix="near_dup_cc",
     )
     return (
-        docs.select(F.col(id_col))
-        .join(cc.withColumnRenamed("node", id_col), id_col, "left")
+        docs.select(F.col("doc_id"))
+        .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
+            F.col("doc_id"),
+            F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
         )
     )
 
@@ -481,26 +457,23 @@ def near_dup_clusters(
 def dedup_near(
     docs: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
     state_store=None,
 ) -> DataFrame:
     """Keep one representative (the min-id member) per near-dup cluster —
     the end-to-end near-dedup a training pipeline applies to the corpus.
     The cluster table is doc_id→cluster_id (two longs), so the final
     filter is a semi join on the id, not a wide-row shuffle."""
-    clusters = near_dup_clusters(docs, pairs, id_col, state_store)
-    keep = clusters.filter(F.col(id_col) == F.col("cluster_id")).select(
-        F.col(id_col)
+    clusters = near_dup_clusters(docs, pairs, state_store=state_store)
+    keep = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select(
+        F.col("doc_id")
     )
-    return docs.join(keep, id_col, "left_semi")
+    return docs.join(keep, "doc_id", "left_semi")
 
 
 def embedding_near_duplicates(
     vectors: DataFrame,
     threshold: float = 0.95,
     dim: int | None = None,
-    bits: int = 8,
-    tables: int = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: [a, b, cosine].
 
@@ -508,13 +481,13 @@ def embedding_near_duplicates(
     buckets both copies of the corpus, candidates share a (table, bucket)
     key, and only candidates get the exact cosine — never an all-pairs
     cross join. Pair recall is 1-(1-(1-θ/π)^bits)^tables: at the default
-    bits=8/tables=6 that is ≈0.97 at θ ≈ 18.2° (cos 0.95) — i.e. ~3% of
+    8 bits × 6 tables that is ≈0.97 at θ ≈ 18.2° (cos 0.95) — i.e. ~3% of
     true pairs AT the threshold boundary are expected to miss bucketing
     (the exact-verify step filters false positives, not false negatives).
     Tighter duplicates collide with much higher probability (≈0.999 at
-    cos 0.99; exactly 1.0 for identical vectors). Callers needing ≥0.99
-    recall at cos 0.95 should pass ``tables=10`` (≈0.996) and pay the
-    proportionally larger bucketing fan-out.
+    cos 0.99; exactly 1.0 for identical vectors). ≥0.99 recall at cos 0.95
+    would take 10 tables (≈0.996) and a proportionally larger bucketing
+    fan-out.
     """
     from pheknowlator_spark.operators.similarity import (
         _lsh_buckets,
@@ -524,7 +497,7 @@ def embedding_near_duplicates(
 
     dim = _vector_dim(vectors, dim)
     v = vectors.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
-    buckets = _lsh_buckets(v, "__v", tables, bits, dim).select(
+    buckets = _lsh_buckets(v, "__v", tables=6, bits=8, dim=dim).select(
         "__id", "table", "bucket"
     )
 
@@ -556,12 +529,10 @@ def embedding_near_duplicates(
 
 def segment_occurrences(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     words_per_segment: int = 20,
 ) -> DataFrame:
     """Non-overlapping ``words_per_segment``-word segments with their
-    in-document position: ``[<id_col>, seg_idx, segment]`` — the unit of
+    in-document position: ``[doc_id, seg_idx, segment]`` — the unit of
     span-level exact dedup (:func:`segment_dedup`).
 
     Pure column math: one split + one generated-sequence transform +
@@ -572,7 +543,7 @@ def segment_occurrences(
     it into every per-segment ``slice`` call.
     """
     w = words_per_segment
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     segs = F.flatten(
         F.transform(
             F.array(words),
@@ -586,14 +557,12 @@ def segment_occurrences(
         )
     )
     return docs.select(
-        F.col(id_col), F.posexplode(segs).alias("seg_idx", "segment")
+        F.col("doc_id"), F.posexplode(segs).alias("seg_idx", "segment")
     )
 
 
 def segment_dedup(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     words_per_segment: int = 20,
     min_df: int = 2,
 ) -> DataFrame:
@@ -603,7 +572,7 @@ def segment_dedup(
     frequency is ≥ ``min_df`` keeps only its globally-first occurrence
     (min ``(doc_id, seg_idx)``); all other occurrences are removed and the
     surviving segments are re-concatenated in document order. Returns
-    ``[<id_col>, clean_text, n_segments, n_removed]`` — one row per input
+    ``[doc_id, clean_text, n_segments, n_removed]`` — one row per input
     document (a fully-duplicated document survives with empty
     ``clean_text``, which a downstream length filter then drops).
 
@@ -618,23 +587,23 @@ def segment_dedup(
     single segments, not documents; use two independent hashes if that
     matters).
     """
-    occ = segment_occurrences(docs, id_col, text_col, words_per_segment)
+    occ = segment_occurrences(docs, words_per_segment=words_per_segment)
     occ = occ.withColumn("__h", F.xxhash64("segment"))
     grp = occ.groupBy("__h").agg(
         F.count(F.lit(1)).alias("__df"),
         F.min_by(
-            F.struct(F.col(id_col).alias("i"), F.col("seg_idx").alias("p")),
-            F.struct(F.col(id_col), F.col("seg_idx")),
+            F.struct(F.col("doc_id").alias("i"), F.col("seg_idx").alias("p")),
+            F.struct(F.col("doc_id"), F.col("seg_idx")),
         ).alias("__first"),
     )
     keep = (F.col("__df") < min_df) | (
-        (F.col(id_col) == F.col("__first.i"))
+        (F.col("doc_id") == F.col("__first.i"))
         & (F.col("seg_idx") == F.col("__first.p"))
     )
     flagged = occ.join(grp, "__h").select(
-        F.col(id_col), F.col("seg_idx"), F.col("segment"), keep.alias("__keep")
+        F.col("doc_id"), F.col("seg_idx"), F.col("segment"), keep.alias("__keep")
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.concat_ws(
             " ",
             F.transform(

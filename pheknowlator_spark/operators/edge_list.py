@@ -421,14 +421,13 @@ def explodes_data(
     df: DataFrame,
     lst_cols: list[str],
     splitter: str,
-    fill_value: str = "None",
 ) -> DataFrame:
     """F8: un-nest delimiter-packed cells into rows, one column at a time
     (reference ``explodes_data``, pkt_kg/utils/data_utils.py:293-330).
 
     Reference semantics per column: split the cell on ``splitter``, drop
     empty fragments, emit one row per fragment; rows whose cell splits to
-    nothing (empty/only-delimiters) are KEPT with ``fill_value``. Columns
+    nothing (empty/only-delimiters) are KEPT with the string 'None'. Columns
     explode independently (the recursion in the reference), so two packed
     columns produce the cross product of their fragments per input row —
     identical here because each explode multiplies rows before the next.
@@ -444,7 +443,7 @@ def explodes_data(
             lambda x: x != "",
         )
         out = out.withColumn(c, F.explode_outer(fragments)).withColumn(
-            c, F.coalesce(F.col(c), F.lit(fill_value))
+            c, F.coalesce(F.col(c), F.lit("None"))
         )
     return out
 
@@ -505,7 +504,6 @@ def build_edge_list(
     config: EdgeTypeConfig,
     source_path: str,
     map_frames: dict[str, DataFrame] | None = None,
-    label_criteria: str | None = None,
     map_delimiter: str | None = None,
 ) -> DataFrame:
     """scan → filter → reduce → relabel → map-join → drop 'None' rows.
@@ -519,11 +517,9 @@ def build_edge_list(
     df = filter_data(df, config.filter_criteria, config.evidence_criteria)
     df = data_reducer(df, config.column_idx)
     # the source_labels config field IS the label spec (e.g. ':;MESH_;')
-    effective_labels = (
-        label_criteria if label_criteria is not None else config.source_labels
-    )
-    if effective_labels and effective_labels not in ("None", ";;"):
-        df = label_formatter(df, effective_labels)
+    labels = config.source_labels
+    if labels and labels not in ("None", ";;"):
+        df = label_formatter(df, labels)
     df = apply_identifier_maps(
         df, config.identifier_maps, map_frames or {}, map_delimiter
     )

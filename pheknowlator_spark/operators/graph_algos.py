@@ -340,8 +340,6 @@ def assign_integer_ids(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
     state_store=None,
@@ -385,7 +383,7 @@ def pagerank(
     # edge cut, and the dangling-flag join below each consume it — uncut,
     # every consumer re-ran the upstream edge derivation
     e = _cut_lineage(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
@@ -454,9 +452,7 @@ def pagerank(
     ).select("node", "rank")
 
 
-def triangle_stats(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts and local clustering coefficient over an
     undirected simple graph — the next two entries of the graph-statistics
     family the reference computes with networkx (kg_utils.py:473-481's
@@ -477,8 +473,8 @@ def triangle_stats(
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(
             F.col("a").isNotNull()
@@ -527,8 +523,6 @@ def triangle_stats(
 def bfs_depths(
     edges: DataFrame,
     roots: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Minimum hop count from a root set along directed ``src → dst``
     edges — the "ontology depth below root" statistic (the min-hop
@@ -548,7 +542,7 @@ def bfs_depths(
     collecting state.
     """
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
@@ -583,8 +577,6 @@ def bfs_depths(
 
 def link_prediction_scores(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     min_common: int = 1,
     max_neighbor_degree: int | None = None,
 ) -> DataFrame:
@@ -610,8 +602,8 @@ def link_prediction_scores(
     """
     und = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(
             F.col("a").isNotNull()
@@ -667,8 +659,6 @@ def k_core(
     edges: DataFrame,
     k: int = 2,
     rounds: int | None = None,
-    src: str = "src",
-    dst: str = "dst",
     on_round=None,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling — the standard dense-
@@ -700,7 +690,7 @@ def k_core(
     if rounds is not None and rounds < 1:
         raise ValueError("rounds must be >= 1 or None")
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .filter(F.col("a") != F.col("b"))
     )

@@ -30,9 +30,6 @@ def negative_triples(
     triples: DataFrame,
     k: int = 1,
     pool_size: int = 64,
-    s: str = "s",
-    p: str = "p",
-    o: str = "o",
 ) -> DataFrame:
     """``k`` deterministic object-corrupted negatives per positive triple.
 
@@ -57,7 +54,7 @@ def negative_triples(
     """
     if k < 1 or pool_size < 2:
         raise ValueError("k must be >= 1 and pool_size >= 2")
-    t = triples.select(F.col(s).alias("s"), F.col(p).alias("p"), F.col(o).alias("o"))
+    t = triples.select("s", "p", "o")
     w = Window.partitionBy("p").orderBy(
         F.md5(F.concat_ws("|", F.col("p"), F.col("o"))), F.col("o")
     )
@@ -96,8 +93,6 @@ def random_walks(
     edges: DataFrame,
     length: int = 3,
     num_walks: int = 1,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Deterministic fixed-length walks from every node with out-edges —
     the sequence generator for skip-gram KG embeddings (DeepWalk/node2vec
@@ -120,7 +115,7 @@ def random_walks(
     if length < 1 or num_walks < 1:
         raise ValueError("length and num_walks must be >= 1")
     e = (
-        edges.select(F.col(src).alias("__es"), F.col(dst).alias("__ed"))
+        edges.select(F.col("src").alias("__es"), F.col("dst").alias("__ed"))
         .filter(F.col("__es").isNotNull() & F.col("__ed").isNotNull())
         .distinct()
     )
@@ -164,8 +159,6 @@ def random_walks(
 def khop_neighbors(
     edges: DataFrame,
     fanouts: "tuple[int, ...]" = (2, 2),
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """GraphSAGE-style deterministic neighborhood sampling: for every
     node, expand ``len(fanouts)`` hops keeping at most ``fanouts[h]``
@@ -186,7 +179,7 @@ def khop_neighbors(
     if not fanouts or any(f < 1 for f in fanouts):
         raise ValueError("fanouts must be a non-empty tuple of >= 1 ints")
     e = (
-        edges.select(F.col(src).alias("__es"), F.col(dst).alias("__ed"))
+        edges.select(F.col("src").alias("__es"), F.col("dst").alias("__ed"))
         .filter(F.col("__es").isNotNull() & F.col("__ed").isNotNull())
         .distinct()
     )
@@ -224,11 +217,6 @@ def khop_neighbors(
 def verbalize_triples(
     triples: DataFrame,
     labels: DataFrame,
-    s: str = "s",
-    p: str = "p",
-    o: str = "o",
-    id_col: str = "id",
-    label_col: str = "label",
 ) -> DataFrame:
     """KG→text verbalization: render every triple as a one-sentence
     training document ("<s label> <p label> <o label>."), the standard
@@ -246,7 +234,7 @@ def verbalize_triples(
     whole-stage codegen.
     """
     lab = labels.select(
-        F.col(id_col).alias("__id"), F.col(label_col).alias("__lab")
+        F.col("id").alias("__id"), F.col("label").alias("__lab")
     )
 
     def resolved(col_name, alias):
@@ -255,9 +243,7 @@ def verbalize_triples(
             F.regexp_extract(F.col(col_name), "([^/#]*)$", 1),
         )
 
-    t = triples.select(
-        F.col(s).alias("s"), F.col(p).alias("p"), F.col(o).alias("o")
-    )
+    t = triples.select("s", "p", "o")
     for c in ("s", "p", "o"):
         t = t.join(
             F.broadcast(
@@ -287,13 +273,7 @@ def transe_eval(
     entity_emb: DataFrame,
     relation_emb: DataFrame,
     pool_size: int = 32,
-    hits_at: "tuple[int, ...]" = (1, 10),
     quant: int = 1000,
-    s: str = "s",
-    p: str = "p",
-    o: str = "o",
-    id_col: str = "id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """TransE link-prediction evaluation — the metric loop that consumes
     the S13 integer-triple export plus trained embeddings: per predicate,
@@ -327,12 +307,12 @@ def transe_eval(
         )
 
     ent = entity_emb.select(
-        F.col(id_col).alias("__eid"), qv(F.col(emb_col)).alias("__ev")
+        F.col("id").alias("__eid"), qv(F.col("embedding")).alias("__ev")
     )
     rel = relation_emb.select(
-        F.col(id_col).alias("__rid"), qv(F.col(emb_col)).alias("__rv")
+        F.col("id").alias("__rid"), qv(F.col("embedding")).alias("__rv")
     )
-    t = test.select(F.col(s).alias("s"), F.col(p).alias("p"), F.col(o).alias("o"))
+    t = test.select("s", "p", "o")
 
     w = Window.partitionBy("p").orderBy(
         F.md5(F.concat_ws("|", F.col("p"), F.col("o"))), F.col("o")
@@ -405,10 +385,10 @@ def transe_eval(
         F.count(F.lit(1)).alias("n"),
         F.avg("__rank").alias("mean_rank"),
     ]
-    for k in hits_at:
+    for k in (1, 10):
         aggs.append(
             F.avg(
-                F.when(F.col("__rank") <= int(k), F.lit(1.0)).otherwise(
+                F.when(F.col("__rank") <= k, F.lit(1.0)).otherwise(
                     F.lit(0.0)
                 )
             ).alias(f"hits_{k}")

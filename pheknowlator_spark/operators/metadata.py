@@ -33,9 +33,6 @@ def tidy_text(col):
 def metadata_gate(
     edges: DataFrame,
     metadata: DataFrame,
-    sub_uri: str = "n1_uri",
-    obj_uri: str = "n2_uri",
-    data_type_col: str = "data_type",
 ) -> DataFrame:
     """P10: admit an edge if node metadata exists per the type pattern —
     class-class edges always pass; any entity side requires metadata
@@ -44,20 +41,20 @@ def metadata_gate(
     flagged = (
         edges.join(
             F.broadcast(
-                meta_uris.select(F.col("uri").alias(sub_uri), F.lit(True).alias("__s_m"))
+                meta_uris.select(F.col("uri").alias("n1_uri"), F.lit(True).alias("__s_m"))
             ),
-            sub_uri,
+            "n1_uri",
             "left",
         )
         .join(
             F.broadcast(
-                meta_uris.select(F.col("uri").alias(obj_uri), F.lit(True).alias("__o_m"))
+                meta_uris.select(F.col("uri").alias("n2_uri"), F.lit(True).alias("__o_m"))
             ),
-            obj_uri,
+            "n2_uri",
             "left",
         )
     )
-    parts = F.split(F.col(data_type_col), "-")
+    parts = F.split(F.col("data_type"), "-")
     sub_is_class = parts.getItem(0) == "class"
     obj_is_class = parts.getItem(1) == "class"
     keep = (sub_is_class | F.coalesce("__s_m", F.lit(False))) & (
@@ -183,7 +180,7 @@ BUILTIN_RELATIONS = [
 ]
 
 
-def extract_metadata(graph: DataFrame, include_builtin_relations: bool = True) -> DataFrame:
+def extract_metadata(graph: DataFrame) -> DataFrame:
     """Harvest the metadata table FROM a graph (extract_metadata,
     metadata.py:101-155): labels/definitions/synonyms for every owl:Class /
     owl:NamedIndividual subject (kind='nodes', subjects containing '#'
@@ -246,12 +243,9 @@ def extract_metadata(graph: DataFrame, include_builtin_relations: bool = True) -
         .join(syns, "uri", "left")
         .select("uri", "kind", "label", "description", "synonyms")
     )
-    if include_builtin_relations:
-        spark = graph.sparkSession
-        builtin = spark.createDataFrame(
-            [(u, k, l, d, None) for u, k, l, d in BUILTIN_RELATIONS],
-            "uri string, kind string, label string, description string, "
-            "synonyms array<string>",
-        )
-        out = out.unionByName(builtin)
-    return out
+    builtin = graph.sparkSession.createDataFrame(
+        [(u, k, l, d, None) for u, k, l, d in BUILTIN_RELATIONS],
+        "uri string, kind string, label string, description string, "
+        "synonyms array<string>",
+    )
+    return out.unionByName(builtin)

@@ -43,7 +43,7 @@ def real_decode(media: bytes, modality: str):  # pragma: no cover - stub
     )
 
 
-def fake_decode(media: bytes, modality: str, dim: int = 8) -> list[float]:
+def fake_decode(media: bytes, modality: str) -> list[float]:
     """Deterministic stand-in feature extractor: md5-seeded unit vector.
 
     Used by tests and the bench so the plumbing (batching, schema,
@@ -51,15 +51,13 @@ def fake_decode(media: bytes, modality: str, dim: int = 8) -> list[float]:
     """
     h = hashlib.md5((modality or "").encode() + (media or b"")).digest()
     vals = [
-        int.from_bytes(h[i * 2: i * 2 + 2], "big") / 65535.0 for i in range(dim)
+        int.from_bytes(h[i * 2: i * 2 + 2], "big") / 65535.0 for i in range(8)
     ]
     norm = sum(v * v for v in vals) ** 0.5 or 1.0
     return [v / norm for v in vals]
 
 
-def extract_features(
-    media_df: DataFrame, use_fake: bool = True, dim: int = 8
-) -> DataFrame:
+def extract_features(media_df: DataFrame, use_fake: bool = True) -> DataFrame:
     """Decode/feature-extract media binaries via mapInPandas (Arrow batches)."""
     decode = fake_decode if use_fake else real_decode
 
@@ -68,7 +66,7 @@ def extract_features(
             feats, sizes = [], []
             for media, modality in zip(pdf["media"], pdf["modality"]):
                 raw = bytes(media) if media is not None else b""
-                feats.append(decode(raw, modality, dim) if use_fake else decode(raw, modality))
+                feats.append(decode(raw, modality))
                 sizes.append(len(raw))
             yield pd.DataFrame(
                 {

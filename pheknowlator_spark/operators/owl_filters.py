@@ -191,7 +191,6 @@ def deprecated_classes(triples: DataFrame) -> DataFrame:
 
 
 def checks_classes(edges: DataFrame, ontology_classes: DataFrame,
-                   sub_col: str = "n1_uri", obj_col: str = "n2_uri",
                    sub_is_class=None, obj_is_class=None) -> DataFrame:
     """P9: admit an edge only if its ontology-class endpoints exist in the
     merged-ontology class set (knowledge_graph.py:248-267).
@@ -204,22 +203,22 @@ def checks_classes(edges: DataFrame, ontology_classes: DataFrame,
     out = edges
     if sub_is_class is None:
         out = out.join(
-            F.broadcast(cls.withColumnRenamed("node", sub_col)), sub_col, "left_semi"
+            F.broadcast(cls.withColumnRenamed("node", "n1_uri")), "n1_uri", "left_semi"
         )
     else:
         flagged = out.join(
-            F.broadcast(cls.select(F.col("node").alias(sub_col), F.lit(True).alias("__s_ok"))),
-            sub_col, "left",
+            F.broadcast(cls.select(F.col("node").alias("n1_uri"), F.lit(True).alias("__s_ok"))),
+            "n1_uri", "left",
         )
         out = flagged.filter(F.col("__s_ok") | ~sub_is_class).drop("__s_ok")
     if obj_is_class is None:
         out = out.join(
-            F.broadcast(cls.withColumnRenamed("node", obj_col)), obj_col, "left_semi"
+            F.broadcast(cls.withColumnRenamed("node", "n2_uri")), "n2_uri", "left_semi"
         )
     else:
         flagged = out.join(
-            F.broadcast(cls.select(F.col("node").alias(obj_col), F.lit(True).alias("__o_ok"))),
-            obj_col, "left",
+            F.broadcast(cls.select(F.col("node").alias("n2_uri"), F.lit(True).alias("__o_ok"))),
+            "n2_uri", "left",
         )
         out = flagged.filter(F.col("__o_ok") | ~obj_is_class).drop("__o_ok")
     return out

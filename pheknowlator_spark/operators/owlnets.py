@@ -59,8 +59,6 @@ from pheknowlator_spark.operators.stats import mode_per_group
 RO_0000086 = OBO + "RO_0000086"
 BFO_ROOT = OBO + "BFO_0000001"
 
-DECODED_SCHEMA = "root string, s string, p string, o string"
-STATUS_SCHEMA = "root string, status string, detail string"
 _MIXED_COLS = ("root", "a", "b", "c", "kind")
 
 
@@ -451,9 +449,8 @@ def decode_forests(forests: DataFrame) -> tuple[DataFrame, DataFrame]:
 def make_graph_connected(
     triples: DataFrame,
     approach: str = "subclass",
-    common_ancestor: str = BFO_ROOT,
 ) -> DataFrame:
-    """Attach root concepts to the common ancestor
+    """Attach root concepts to the common ancestor ``BFO_ROOT``
     (makes_graph_connected, owlnets.py:673-713), deterministically.
 
     For every node with no subClassOf-ancestors: its root is itself unless
@@ -493,13 +490,13 @@ def make_graph_connected(
         rootless.join(nbr_mode, "node", "left")
         .select(F.coalesce("root", F.col("node")).alias("root"))
         .distinct()
-        .filter(F.col("root") != common_ancestor)
+        .filter(F.col("root") != BFO_ROOT)
     )
     rel = RDFS_SUBCLASSOF if approach == "subclass" else RDF_TYPE
     new_edges = roots.select(
         F.col("root").alias("s"),
         F.lit(rel).alias("p"),
-        F.lit(common_ancestor).alias("o"),
+        F.lit(BFO_ROOT).alias("o"),
     )
     return triples.select("s", "p", "o").unionByName(new_edges).distinct()
 

@@ -19,7 +19,7 @@ from pheknowlator_spark.functions.rdf import (
 )
 
 
-def graph_statistics(triples: DataFrame, approximate: bool = False) -> DataFrame:
+def graph_statistics(triples: DataFrame) -> DataFrame:
     """A2: triple/node/predicate/class/individual/property counts
     (derives_graph_statistics, kg_utils.py:441-485).
 
@@ -33,25 +33,24 @@ def graph_statistics(triples: DataFrame, approximate: bool = False) -> DataFrame
     sf0.1). Callers passing an expensive UNMATERIALIZED subtree should
     cut lineage first — both passes evaluate the input.
     """
-    cd = F.approx_count_distinct if approximate else F.countDistinct
     typed = triples.filter(
         (F.col("p") == RDF_TYPE)
         & F.col("o").isin([OWL_CLASS, OWL_NAMED_INDIVIDUAL, OWL_OBJECT_PROPERTY])
     )
     small = typed.agg(
-        cd(F.when(F.col("o") == OWL_CLASS, F.col("s"))).alias("n_classes"),
-        cd(F.when(F.col("o") == OWL_NAMED_INDIVIDUAL, F.col("s"))).alias(
+        F.countDistinct(F.when(F.col("o") == OWL_CLASS, F.col("s"))).alias("n_classes"),
+        F.countDistinct(F.when(F.col("o") == OWL_NAMED_INDIVIDUAL, F.col("s"))).alias(
             "n_individuals"
         ),
-        cd(F.when(F.col("o") == OWL_OBJECT_PROPERTY, F.col("s"))).alias(
+        F.countDistinct(F.when(F.col("o") == OWL_OBJECT_PROPERTY, F.col("s"))).alias(
             "n_object_properties"
         ),
     )
     big = triples.agg(
         F.count(F.lit(1)).alias("n_triples"),
-        cd(F.col("s")).alias("n_subjects"),
-        cd(F.col("p")).alias("n_predicates"),
-        cd(F.col("o")).alias("n_objects"),
+        F.countDistinct(F.col("s")).alias("n_subjects"),
+        F.countDistinct(F.col("p")).alias("n_predicates"),
+        F.countDistinct(F.col("o")).alias("n_objects"),
     )
     return big.crossJoin(F.broadcast(small)).select(
         "n_triples",

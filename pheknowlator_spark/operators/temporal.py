@@ -49,18 +49,18 @@ def asof_join(
     right: DataFrame,
     on: list[str] | str,
     left_ts: str = "ts",
-    right_ts: str | None = None,
     right_cols: list[str] | None = None,
     direction: str = "backward",
     suffix: str = "_right",
 ) -> DataFrame:
     """As-of join: for each left row, the single right row with the same
-    key and the greatest ``right_ts`` <= ``left_ts`` (``backward``; ties
-    at equal timestamps match, like DuckDB ``ASOF JOIN ... ON l.ts >=
-    r.ts``) or the least ``right_ts`` >= ``left_ts`` (``forward``).
-    Left rows with no candidate keep NULL right columns (left-outer
-    semantics). Returns all left columns plus ``right_ts + suffix`` and
-    each requested right column renamed ``col + suffix``.
+    key and the greatest right timestamp <= the left one (``backward``;
+    ties at equal timestamps match, like DuckDB ``ASOF JOIN ... ON l.ts >=
+    r.ts``) or the least one >= it (``forward``); both sides name the
+    timestamp ``left_ts``. Left rows with no candidate keep NULL right
+    columns (left-outer semantics). Returns all left columns plus
+    ``left_ts + suffix`` and each requested right column renamed
+    ``col + suffix``.
 
     When several right rows share the chosen (key, timestamp), the
     lexicographically greatest payload struct wins — an explicit
@@ -77,29 +77,28 @@ def asof_join(
     one stage.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    right_ts = right_ts or left_ts
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
     if right_cols is None:
         right_cols = [
-            c for c in right.columns if c not in keys and c != right_ts
+            c for c in right.columns if c not in keys and c != left_ts
         ]
 
     l_dtype = left.schema[left_ts].dataType
-    r_dtype = right.schema[right_ts].dataType
+    r_dtype = right.schema[left_ts].dataType
     sign = F.lit(1) if direction == "backward" else F.lit(-1)
 
     payload = F.struct(
-        F.col(right_ts).alias("__rts"),
+        F.col(left_ts).alias("__rts"),
         *[F.col(c).alias(c) for c in right_cols],
     )
-    # one payload per (key, right_ts): greatest struct wins (deterministic)
+    # one payload per (key, timestamp): greatest struct wins (deterministic)
     r = (
-        right.groupBy(*keys, right_ts)
+        right.groupBy(*keys, left_ts)
         .agg(F.max(payload).alias("__p"))
         .select(
             *keys,
-            (sign * _ord_col(F.col(right_ts), r_dtype)).alias("__ord"),
+            (sign * _ord_col(F.col(left_ts), r_dtype)).alias("__ord"),
             F.lit(0).alias("__tag"),
             F.col("__p"),
         )
@@ -123,7 +122,7 @@ def asof_join(
     )
     matched = u.withColumn("__m", F.last("__p", ignorenulls=True).over(w))
     out_cols = [F.col(c) for c in left.columns]
-    out_cols.append(F.col(f"__m.__rts").alias(right_ts + suffix))
+    out_cols.append(F.col(f"__m.__rts").alias(left_ts + suffix))
     out_cols.extend(F.col(f"__m.{c}").alias(c + suffix) for c in right_cols)
     return matched.filter(F.col("__tag") == 1).select(*out_cols)
 
@@ -214,9 +213,6 @@ def interval_join(
 def funnel_counts(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered-funnel analysis: how many users reached each step of
     ``steps`` IN ORDER (step *i+1* counts only events at-or-after the
@@ -235,8 +231,8 @@ def funnel_counts(
     prev = None
     counts = []
     for i, step in enumerate(steps):
-        ev = events.filter(F.col(type_col) == step).select(
-            F.col(user_col).alias("__u"), F.col(ts_col).alias("__ts")
+        ev = events.filter(F.col("event_type") == step).select(
+            F.col("user_id").alias("__u"), F.col("ts").alias("__ts")
         )
         if prev is not None:
             ev = ev.join(prev, "__u").filter(F.col("__ts") >= F.col("__pt"))
@@ -270,8 +266,6 @@ _COHORT_PERIODS = {
 
 def cohort_retention(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     granularity: str = "day",
 ) -> DataFrame:
     """Cohort retention matrix: users grouped by the period of their
@@ -295,14 +289,14 @@ def cohort_retention(
     # cast to date so the grain matches ANSI date_trunc('day') (DATE,
     # not midnight TIMESTAMP); sub-day granularities keep the timestamp
     cast_to = "timestamp" if unit == "second" else "date"
-    first = events.groupBy(F.col(user_col).alias("__u")).agg(
-        F.date_trunc(granularity, F.min(F.col(ts_col)))
+    first = events.groupBy(F.col("user_id").alias("__u")).agg(
+        F.date_trunc(granularity, F.min(F.col("ts")))
         .cast(cast_to)
         .alias("cohort")
     )
     act = events.select(
-        F.col(user_col).alias("__u"),
-        F.date_trunc(granularity, F.col(ts_col)).cast(cast_to).alias("__d"),
+        F.col("user_id").alias("__u"),
+        F.date_trunc(granularity, F.col("ts")).cast(cast_to).alias("__d"),
     ).distinct()
     # both ends are truncated to the grain, so each difference is a whole
     # multiple of the period
@@ -324,8 +318,6 @@ def cohort_retention(
 def coalesce_intervals(
     df: DataFrame,
     keys: "list[str]",
-    start: str = "start",
-    end: str = "end",
 ) -> DataFrame:
     """Merge overlapping-or-touching validity intervals per key — the
     temporal-KG compaction step: a fact asserted by many overlapping
@@ -343,12 +335,12 @@ def coalesce_intervals(
     """
     if not keys:
         raise ValueError("keys must be non-empty")
-    w = Window.partitionBy(*keys).orderBy(F.col(start), F.col(end))
-    prev_max = F.max(F.col(end)).over(
+    w = Window.partitionBy(*keys).orderBy(F.col("start"), F.col("end"))
+    prev_max = F.max(F.col("end")).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     new_island = F.when(
-        prev_max.isNull() | (F.col(start) > prev_max), F.lit(1)
+        prev_max.isNull() | (F.col("start") > prev_max), F.lit(1)
     ).otherwise(F.lit(0))
     island = F.sum(new_island).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -357,8 +349,8 @@ def coalesce_intervals(
         df.withColumn("__island", island)
         .groupBy(*keys, "__island")
         .agg(
-            F.min(start).alias(start),
-            F.max(end).alias(end),
+            F.min("start").alias("start"),
+            F.max("end").alias("end"),
             F.count(F.lit(1)).alias("n_merged"),
         )
         .drop("__island")

@@ -24,11 +24,6 @@ def domain_range_violations(
     triples: DataFrame,
     constraints: DataFrame,
     types: DataFrame,
-    s: str = "s",
-    p: str = "p",
-    o: str = "o",
-    node_col: str = "node",
-    type_col: str = "type",
 ) -> DataFrame:
     """SHACL-lite domain/range validation: for every triple whose
     predicate carries a constraint, check that the subject has the
@@ -45,15 +40,13 @@ def domain_range_violations(
     node — two node-key shuffles total, no window, no collect.
     """
     c = constraints.select(
-        F.col(p).alias("__cp"),
+        F.col("p").alias("__cp"),
         F.col("domain").alias("__dom"),
         F.col("range").alias("__rng"),
     )
-    t = triples.select(
-        F.col(s).alias("s"), F.col(p).alias("p"), F.col(o).alias("o")
-    ).join(F.broadcast(c), F.col("p") == F.col("__cp"))
+    t = triples.select("s", "p", "o").join(F.broadcast(c), F.col("p") == F.col("__cp"))
     ty = types.select(
-        F.col(node_col).alias("__n"), F.col(type_col).alias("__t")
+        F.col("node").alias("__n"), F.col("type").alias("__t")
     )
 
     def violations(side_col, required, side_name):

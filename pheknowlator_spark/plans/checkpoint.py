@@ -95,11 +95,14 @@ class StageStore:
         # untouched; a crash between the two renames leaves .trash for
         # manual recovery — the new data is already complete at that point)
         writer.save(tmp)
-        self._write_lineage(stage, tmp, (time.time() - t0) * 1000)
+        wall_ms = (time.time() - t0) * 1000
         if os.path.exists(final):
             os.rename(final, trash)
         os.rename(tmp, final)  # atomic commit on one filesystem
         shutil.rmtree(trash, ignore_errors=True)
+        # the lineage describes committed data only: written after the swap,
+        # so a failed recompute leaves the previous snapshot's lineage
+        self._write_lineage(stage, final, wall_ms)
         return self.spark.read.format(self.format).load(final)
 
     def _write_lineage(self, stage: str, data_dir: str, wall_ms: float) -> None:

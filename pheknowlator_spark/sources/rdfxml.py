@@ -164,7 +164,7 @@ class _Parser:
             )
 
 
-def parse_rdfxml(source: str | bytes, base: str | None = None) -> list[Triple]:
+def parse_rdfxml(source: str | bytes) -> list[Triple]:
     """Parse an RDF/XML document (path or bytes) into 6-tuple triples.
 
     Bnodes get deterministic ``bnode:NgenK`` labels in document order
@@ -176,8 +176,7 @@ def parse_rdfxml(source: str | bytes, base: str | None = None) -> list[Triple]:
         if isinstance(source, (bytes, bytearray))
         else ET.parse(source).getroot()
     )
-    doc_base = root.get(_XML_BASE, base)
-    p = _Parser(doc_base)
+    p = _Parser(root.get(_XML_BASE))
     root_lang = root.get(_XML_LANG)
     if root.tag == _RDF_RDF:
         for child in root:
@@ -187,12 +186,9 @@ def parse_rdfxml(source: str | bytes, base: str | None = None) -> list[Triple]:
     return p.triples
 
 
-def read_rdfxml(spark: SparkSession, path: str, base: str | None = None,
-                distinct: bool = True) -> DataFrame:
+def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
     """Driver-side RDF/XML parse → triples DataFrame (TRIPLE_SCHEMA).
 
-    The reference's Graph().parse() dedups by set semantics; ``distinct``
-    mirrors that (pass False to keep the raw statement stream).
+    Deduplicated, like the reference's set-semantics Graph().parse().
     """
-    df = spark.createDataFrame(parse_rdfxml(path, base), TRIPLE_SCHEMA)
-    return df.distinct() if distinct else df
+    return spark.createDataFrame(parse_rdfxml(path), TRIPLE_SCHEMA).distinct()

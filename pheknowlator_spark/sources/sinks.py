@@ -20,9 +20,9 @@ from pheknowlator_spark.functions.rdf import n3_term, n3_uri, nt_line
 from pheknowlator_spark.operators.graph_algos import assign_integer_ids
 
 
-def write_ntriples(triples: DataFrame, path: str, literals: bool = True) -> None:
+def write_ntriples(triples: DataFrame, path: str) -> None:
     """Write the triple table as N-Triples text, one shuffle-dedup first."""
-    if literals and "o_is_literal" in triples.columns:
+    if "o_is_literal" in triples.columns:
         lines = triples.select(
             nt_line("s", "p", "o", o_is_literal="o_is_literal").alias("value")
         )
@@ -60,9 +60,7 @@ def read_ntriples(spark, path: str) -> DataFrame:
     ).filter(F.col("s") != "")
 
 
-def write_integer_triples(
-    triples: DataFrame, out_dir: str, json_map: bool = True
-) -> DataFrame:
+def write_integer_triples(triples: DataFrame, out_dir: str) -> DataFrame:
     """S13: Triples_Integers + Triples_Identifiers + id-map JSON.
 
     Returns the id-map DataFrame. The count-parity assertion from
@@ -79,16 +77,14 @@ def write_integer_triples(
     id_map.write.mode("overwrite").parquet(
         os.path.join(out_dir, "Triples_Integer_Identifier_Map")
     )
-    if json_map:
-        # JSON map is a driver-side artifact for small graphs only; at scale
-        # consumers read the parquet map
-        n = id_map.count()
-        if n <= 5_000_000:
-            mapping = {r.entity: r.id for r in id_map.collect()}
-            with open(
-                os.path.join(out_dir, "Triples_Integer_Identifier_Map.json"), "w"
-            ) as f:
-                json.dump(mapping, f, sort_keys=True)
+    # JSON map is a driver-side artifact for small graphs only; at scale
+    # consumers read the parquet map
+    if id_map.count() <= 5_000_000:
+        mapping = {r.entity: r.id for r in id_map.collect()}
+        with open(
+            os.path.join(out_dir, "Triples_Integer_Identifier_Map.json"), "w"
+        ) as f:
+            json.dump(mapping, f, sort_keys=True)
     return id_map
 
 

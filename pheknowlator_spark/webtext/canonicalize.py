@@ -18,10 +18,10 @@ from pyspark.sql import functions as F
 from pheknowlator_spark.operators.graph_algos import connected_components
 
 
-def build_canonical_map(same_as: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
+def build_canonical_map(same_as: DataFrame) -> DataFrame:
     """same-as pairs → [curie, canonical] where canonical = lexicographic min
     member of each identity cluster (deterministic)."""
-    comps = connected_components(same_as, src=src, dst=dst)
+    comps = connected_components(same_as, src="a", dst="b")
     return comps.select(
         F.col("node").alias("curie"), F.col("component").alias("canonical")
     ).filter(F.col("curie") != F.col("canonical"))

@@ -52,8 +52,7 @@ def _extract_series(html: pd.Series) -> pd.Series:
     return html.map(html_to_text)
 
 
-def with_extracted_text(pages: DataFrame, html_col: str = "html",
-                        out_col: str = "text") -> DataFrame:
+def with_extracted_text(pages: DataFrame, out_col: str = "text") -> DataFrame:
     """Add/replace the extracted-text column via a vectorized pandas UDF."""
     extract_udf = F.pandas_udf(_extract_series, StringType())
-    return pages.withColumn(out_col, extract_udf(F.col(html_col)))
+    return pages.withColumn(out_col, extract_udf(F.col("html")))

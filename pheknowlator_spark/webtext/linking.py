@@ -59,9 +59,6 @@ def score_mentions(mentions: DataFrame, priors: DataFrame | None = None) -> Data
 def link_mentions(
     mentions: DataFrame,
     curie_map: DataFrame,
-    mention_key: str = "curie",
-    map_key: str = "curie",
-    target: str = "canonical",
 ) -> DataFrame:
     """Broadcast-hash join mentions → canonical ids; unmapped keep original.
 
@@ -69,11 +66,11 @@ def link_mentions(
     connected-components output of canonicalize).
     """
     m = curie_map.select(
-        F.col(map_key).alias(mention_key), F.col(target).alias("__canon")
+        "curie", F.col("canonical").alias("__canon")
     )
     return (
-        mentions.join(F.broadcast(m), mention_key, "left")
-        .withColumn(mention_key, F.coalesce("__canon", F.col(mention_key)))
+        mentions.join(F.broadcast(m), "curie", "left")
+        .withColumn("curie", F.coalesce("__canon", F.col("curie")))
         .drop("__canon")
     )
 
@@ -83,7 +80,6 @@ def salted_join(
     dim: DataFrame,
     key: str,
     salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-resistant equi-join: explode ``dim`` over ``salts`` copies and
     spray ``facts`` rows uniformly across them.
@@ -99,5 +95,5 @@ def salted_join(
     d = dim.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salts)]))
     )
-    out = f.join(d, [key, "__salt"], how)
+    out = f.join(d, [key, "__salt"])
     return out.drop("__salt")

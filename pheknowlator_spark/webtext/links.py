@@ -34,12 +34,8 @@ _HOSTPORT_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 
 
-def extract_links(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Explode every ``<a href="...">`` in ``html_col`` into one row per
+def extract_links(df: DataFrame) -> DataFrame:
+    """Explode every ``<a href="...">`` in ``html`` into one row per
     link with the href resolved against the page url: ``(url, href,
     link_url)``.
 
@@ -56,11 +52,11 @@ def extract_links(
       (no ``..`` dot-segment collapse — that needs an iterative pass;
       crawl hygiene normally drops such hrefs anyway).
 
-    ``html_col`` may be ``binary`` (WARC payload) or ``string``; binary is
+    ``html`` may be ``binary`` (WARC payload) or ``string``; binary is
     utf-8 decoded JVM-side via cast.
     """
-    html = F.col(html_col).cast("string")
-    base = F.col(url_col)
+    html = F.col("html").cast("string")
+    base = F.col("url")
     scheme = F.lower(F.regexp_extract(base, _SCHEME_RE, 1))
     host = F.regexp_extract(
         F.lower(F.regexp_extract(base, _HOSTPORT_RE, 1)), r"^([^:]*)", 1
@@ -85,7 +81,7 @@ def extract_links(
     )
     return (
         df.select(
-            base.alias(url_col),
+            base.alias("url"),
             F.explode(F.regexp_extract_all(html, F.lit(_HREF_RE), 1)).alias(
                 "href"
             ),
@@ -100,11 +96,7 @@ def extract_links(
 _ANCHOR_RE = r'<a\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
 
 
-def anchor_texts(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
+def anchor_texts(df: DataFrame) -> DataFrame:
     """Explode every ``<a href="...">text</a>`` into one row per anchor:
     ``(url, href, anchor)`` with the anchor text whitespace-collapsed and
     trimmed; empty anchors (image links, icons) are dropped.
@@ -118,16 +110,16 @@ def anchor_texts(
     in document order, so zipping group 1 with group 2 re-pairs each href
     with its own anchor text.
     """
-    html = F.col(html_col).cast("string")
+    html = F.col("html").cast("string")
     pairs = F.arrays_zip(
         F.regexp_extract_all(html, F.lit(_ANCHOR_RE), 1).alias("href"),
         F.regexp_extract_all(html, F.lit(_ANCHOR_RE), 2).alias("anchor"),
     )
     anchor = F.trim(F.regexp_replace(F.col("pair.anchor"), r"\s+", " "))
     return (
-        df.select(F.col(url_col).alias(url_col), F.explode(pairs).alias("pair"))
+        df.select("url", F.explode(pairs).alias("pair"))
         .select(
-            url_col,
+            "url",
             F.col("pair.href").alias("href"),
             anchor.alias("anchor"),
         )

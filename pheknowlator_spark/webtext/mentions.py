@@ -143,8 +143,6 @@ def _worker_automaton(bc) -> AhoCorasick:
 def detect_mentions(
     pages: DataFrame,
     entity_dictionary: DataFrame,
-    text_col: str = "text",
-    url_col: str = "url",
 ) -> DataFrame:
     """Run the broadcast automaton over pages → exploded mention rows.
 
@@ -159,7 +157,7 @@ def detect_mentions(
     ]
     bc = spark.sparkContext.broadcast(pairs)
 
-    src = pages.select(F.col(url_col).alias("url"), F.col(text_col).alias("text"))
+    src = pages.select("url", "text")
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ac = _worker_automaton(bc)
@@ -182,8 +180,6 @@ def extract_and_detect(
     pages: DataFrame,
     entity_dictionary: DataFrame,
     min_quality: float | None = None,
-    html_col: str = "html",
-    url_col: str = "url",
     resolve_spans: bool = False,
 ) -> DataFrame:
     """Fused extract → quality-gate → mention-scan in ONE Arrow crossing.
@@ -214,7 +210,7 @@ def extract_and_detect(
         for r in entity_dictionary.select("surface", "curie").distinct().collect()
     ]
     bc = spark.sparkContext.broadcast(pairs)
-    src = pages.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
+    src = pages.select("url", "html")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ac = _worker_automaton(bc)

@@ -242,7 +242,6 @@ def run_pipeline(
     same_as: DataFrame | None = None,
     approach: str = "subclass",
     min_pages: int = 1,
-    lang: str = "en",
     re_extract: bool = False,
     quality_threshold: float | None = None,
 ) -> dict[str, DataFrame]:
@@ -260,7 +259,7 @@ def run_pipeline(
     ``plans.StageStore`` (checkpointed parquet), which is the production
     pattern — never an in-memory persist of a corpus-scale table.
     """
-    pages_en = pages.filter(F.col("lang") == lang)
+    pages_en = pages.filter(F.col("lang") == "en")
     if re_extract:
         # fused extract → quality → scan → span-resolve: one Arrow crossing
         # and NO mention-row shuffle (see mentions.extract_and_detect;

@@ -40,11 +40,7 @@ _HOSTPORT_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)"
 
 
-def parse_robots(
-    robots: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
     """``(host, robots_txt)`` → one row per rule: ``(host, agent, allow,
     prefix)`` with ``allow`` boolean and ``prefix`` the rule's path prefix.
 
@@ -53,8 +49,8 @@ def parse_robots(
     and unknown directives are dropped. Empty ``Disallow:`` rows are
     dropped here (they match nothing)."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(txt_col), r"\r?\n")).alias("pos", "line"),
+        "host",
+        F.posexplode(F.split(F.col("robots_txt"), r"\r?\n")).alias("pos", "line"),
     ).select(
         "host",
         "pos",
@@ -108,7 +104,6 @@ def robots_filter(
     pages: DataFrame,
     rules: DataFrame,
     agent: str = "*",
-    url_col: str = "url",
 ) -> DataFrame:
     """Pages allowed for ``agent`` under the per-host rules from
     :func:`parse_robots`. Adds a ``robots_host`` column; rows whose url
@@ -144,11 +139,11 @@ def robots_filter(
         )
     )
     host = F.regexp_extract(
-        F.lower(F.regexp_extract(F.col(url_col), _HOSTPORT_RE, 1)),
+        F.lower(F.regexp_extract(F.col("url"), _HOSTPORT_RE, 1)),
         r"^([^:]*)",
         1,
     )
-    path_raw = F.regexp_extract(F.col(url_col), _PATH_RE, 1)
+    path_raw = F.regexp_extract(F.col("url"), _PATH_RE, 1)
     path = F.when(
         path_raw.startswith("/"), path_raw
     ).otherwise(F.concat(F.lit("/"), path_raw))

@@ -22,12 +22,9 @@ __all__ = [
     "bloom_probe",
 ]
 
-_DEFAULT_PORTS = {"http": "80", "https": "443"}
-
 
 def normalize_urls(
     df: DataFrame,
-    url_col: str = "url",
     strip_www: bool = False,
 ) -> DataFrame:
     """Append ``norm_url`` and ``host`` columns: scheme and host
@@ -43,7 +40,7 @@ def normalize_urls(
     codegen, zero shuffles, zero Python; the query-param sort operates
     on the handful of ``&``-split tokens per row, never the corpus.
     """
-    u = F.col(url_col)
+    u = F.col("url")
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     hostport = F.lower(
         F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
@@ -112,8 +109,6 @@ def latest_capture(
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
-    key_col: str = "norm_url",
-    hash_col: str = "content_hash",
 ) -> DataFrame:
     """Classify urls between two crawl snapshots: ``added`` (new only),
     ``removed`` (old only), ``changed`` (both, different content hash),
@@ -126,10 +121,10 @@ def snapshot_diff(
     column is a codegen'd CASE over the two sides' null-ness.
     """
     o = old.select(
-        F.col(key_col).alias("__k"), F.col(hash_col).alias("__old_h")
+        F.col("norm_url").alias("__k"), F.col("content_hash").alias("__old_h")
     )
     n = new.select(
-        F.col(key_col).alias("__k"), F.col(hash_col).alias("__new_h")
+        F.col("norm_url").alias("__k"), F.col("content_hash").alias("__new_h")
     )
     joined = o.join(n, "__k", "full_outer")
     status = (
@@ -139,7 +134,7 @@ def snapshot_diff(
         .otherwise(F.lit("unchanged"))
     )
     return joined.select(
-        F.col("__k").alias(key_col),
+        F.col("__k").alias("norm_url"),
         status.alias("status"),
         F.col("__old_h").alias("old_hash"),
         F.col("__new_h").alias("new_hash"),
@@ -171,11 +166,10 @@ def _bloom_positions(col, m_bits: int, k: int):
 
 def bloom_build(
     seen: DataFrame,
-    key_col: str = "url",
     m_bits: int = 1 << 16,
     k: int = 4,
 ) -> DataFrame:
-    """Build a Bloom filter over ``key_col`` as a tiny DataFrame of
+    """Build a Bloom filter over ``url`` as a tiny DataFrame of
     32-bit words: ``(word_idx, word)`` with ``word = bit_or`` of the
     members' bits. The crawl-frontier seen-set: no false negatives, a
     measurable deterministic false-positive rate (~``(1-e^{-kn/m})^k``).
@@ -189,7 +183,7 @@ def bloom_build(
     sketch broadcasts; probing (:func:`bloom_probe`) is then map-side.
     Size m for the real corpus (m ≈ 14.4 bits/key for 0.1% FP); the
     sketch stays ≪ executor memory up to 10^11 keys."""
-    pos = F.explode(_bloom_positions(F.col(key_col), m_bits, k)).alias(
+    pos = F.explode(_bloom_positions(F.col("url"), m_bits, k)).alias(
         "pos"
     )
     return (
@@ -206,7 +200,6 @@ def bloom_build(
 def bloom_probe(
     candidates: DataFrame,
     bloom: DataFrame,
-    key_col: str = "url",
     m_bits: int = 1 << 16,
     k: int = 4,
 ) -> DataFrame:
@@ -219,12 +212,12 @@ def bloom_probe(
     partially-combined ``bool_and`` per candidate key — candidates
     shuffle one row each, never per-probe rows."""
     probes = candidates.select(
-        F.col(key_col),
-        F.posexplode(_bloom_positions(F.col(key_col), m_bits, k)).alias(
+        F.col("url"),
+        F.posexplode(_bloom_positions(F.col("url"), m_bits, k)).alias(
             "__j", "pos"
         ),
     ).select(
-        key_col,
+        "url",
         "__j",
         (F.col("pos") / 32).cast("long").alias("word_idx"),
         F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))").alias("bit"),
@@ -232,14 +225,14 @@ def bloom_probe(
     hit = (
         probes.join(F.broadcast(bloom), "word_idx", "left")
         .select(
-            key_col,
+            "url",
             (
                 F.coalesce(F.col("word"), F.lit(0))
                 .bitwiseAND(F.col("bit"))
                 != 0
             ).alias("__hit"),
         )
-        .groupBy(key_col)
+        .groupBy("url")
         .agg(F.bool_and("__hit").alias("maybe_seen"))
     )
-    return candidates.join(hit, key_col)
+    return candidates.join(hit, "url")

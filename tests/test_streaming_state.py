@@ -29,6 +29,28 @@ def test_stagestore_swap_preserves_previous_snapshot(spark, tmp_path):
     assert {(r.id, r.v) for r in back.collect()} == {(1, "a"), (2, "b")}
 
 
+def test_failed_swap_keeps_committed_lineage(spark, tmp_path, monkeypatch):
+    # a force recompute that fails at the swap leaves the previous snapshot
+    # committed, and the lineage must keep describing that snapshot
+    import os
+
+    from pheknowlator_spark.plans.checkpoint import StageStore
+
+    store = StageStore(spark, str(tmp_path / "stages"))
+    store.run("s1", lambda: spark.range(2))
+    five = spark.range(5)
+
+    def no_rename(*_args):
+        raise OSError("rename failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", no_rename)
+        with pytest.raises(OSError):
+            store.run("s1", lambda: five, force=True)
+    assert store.run("s1", lambda: five).count() == 2
+    assert sum(r.output_rows for r in store.lineage().collect()) == 2
+
+
 def test_stagestore_lineage_partitioned_write(spark, tmp_path):
     # per-partition lineage rows exist for a partitioned stage write
     from pheknowlator_spark.plans.checkpoint import StageStore
