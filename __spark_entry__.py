@@ -1490,7 +1490,7 @@ def q_multimodal_features(spark, sf_dir):
         synthetic_media,
     )
 
-    feats = extract_features(synthetic_media(spark, 32), use_fake=True)
+    feats = extract_features(synthetic_media(spark, 32))
     return feats.select(
         "content_id",
         "modality",

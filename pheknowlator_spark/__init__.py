@@ -20,34 +20,27 @@ from pheknowlator_spark.session import get_spark  # noqa: F401
 
 
 def _register_pickle_by_value() -> None:
-    """Ship this package's code inside pickled closures/broadcasts.
+    """Ship the code that runs in Python workers inside pickled closures.
 
     Python workers only import modules referenced BY NAME in pickles; when
     the driver's SparkSession was created without this package on the
     executors' PYTHONPATH (e.g. an external harness importing
-    __spark_entry__ from an arbitrary cwd), broadcast AhoCorasick objects
-    and mapInPandas closures would fail to unpickle. Registering the
-    worker-facing modules by value makes them self-contained. On a real
-    cluster --py-files remains the right mechanism; this is a local-mode
-    safety net with negligible per-task cost.
+    __spark_entry__ from an arbitrary cwd), mapInPandas / applyInArrow /
+    UDF closures would fail to unpickle. Registering the modules whose
+    functions run in workers by value makes those closures self-contained;
+    every other module stays pickled by reference, since no worker needs
+    it. On a real cluster --py-files remains the right mechanism; this is a
+    local-mode safety net.
     """
     from pyspark.cloudpickle import register_pickle_by_value
 
-    import pheknowlator_spark.functions.rdf
-    import pheknowlator_spark.functions.text
-    import pheknowlator_spark.operators.multimodal
-    import pheknowlator_spark.operators.owlnets
-    import pheknowlator_spark.sources.pages
-    import pheknowlator_spark.webtext.extract
-    import pheknowlator_spark.webtext.mentions
-    import sys
+    from pheknowlator_spark.functions import text
+    from pheknowlator_spark.operators import multimodal, owlnets
+    from pheknowlator_spark.sources import pages
+    from pheknowlator_spark.webtext import extract, mentions
 
-    for name, mod in list(sys.modules.items()):
-        if name.startswith("pheknowlator_spark") and mod is not None:
-            try:
-                register_pickle_by_value(mod)
-            except Exception:  # pragma: no cover - best effort
-                pass
+    for module in (text, multimodal, owlnets, pages, extract, mentions):
+        register_pickle_by_value(module)
 
 
 _register_pickle_by_value()

@@ -71,8 +71,8 @@ def n3_uri(col: Column | str) -> Column:
 
 def n3_literal(
     lex: Column | str,
-    lang: Column | str | None = None,
-    datatype: Column | str | None = None,
+    lang: Column | str,
+    datatype: Column | str,
 ) -> Column:
     """RDF 1.1 N-Triples literal serialization with escaping.
 
@@ -86,22 +86,10 @@ def n3_literal(
     esc = F.regexp_replace(esc, "\n", "\\\\n")
     esc = F.regexp_replace(esc, "\r", "\\\\r")
     quoted = F.concat(F.lit('"'), esc, F.lit('"'))
-    if lang is not None and datatype is not None:
-        lang_c, dt_c = _c(lang), _c(datatype)
-        return F.when(lang_c.isNotNull(), F.concat(quoted, F.lit("@"), lang_c)).when(
-            dt_c.isNotNull(), F.concat(quoted, F.lit("^^<"), dt_c, F.lit(">"))
-        ).otherwise(quoted)
-    if lang is not None:
-        lang_c = _c(lang)
-        return F.when(
-            lang_c.isNotNull(), F.concat(quoted, F.lit("@"), lang_c)
-        ).otherwise(quoted)
-    if datatype is not None:
-        dt_c = _c(datatype)
-        return F.when(
-            dt_c.isNotNull(), F.concat(quoted, F.lit("^^<"), dt_c, F.lit(">"))
-        ).otherwise(quoted)
-    return quoted
+    lang_c, dt_c = _c(lang), _c(datatype)
+    return F.when(lang_c.isNotNull(), F.concat(quoted, F.lit("@"), lang_c)).when(
+        dt_c.isNotNull(), F.concat(quoted, F.lit("^^<"), dt_c, F.lit(">"))
+    ).otherwise(quoted)
 
 
 def n3_term(

@@ -22,12 +22,13 @@ a silent cap. The probe is a set of aggregates observed on the cut's own
 job (a ``pyspark.sql.Observation``), so convergence costs no Spark job;
 each round's values are logged at DEBUG on the ``pheknowlator_spark``
 logger.
-``set_reliable_checkpoints(spark, dir)`` switches the cut from
-``localCheckpoint`` (executor-local blocks — fast, but lost with an
-executor in cluster mode) to RELIABLE ``checkpoint`` writes under a
-fault-tolerant directory — required on a real multi-executor cluster,
-where losing one executor mid-iteration would otherwise recompute the
-whole chain. Local mode keeps the default: one JVM, no executor loss.
+The session conf ``spark.pheknowlator.reliableCheckpoints=true`` switches
+the cut from ``localCheckpoint`` (executor-local blocks — fast, but lost
+with an executor in cluster mode) to RELIABLE ``checkpoint`` writes under
+Spark's checkpoint directory (``spark.checkpoint.dir``) — required on a
+real multi-executor cluster, where losing one executor mid-iteration would
+otherwise recompute the whole chain. Local mode keeps the default: one
+JVM, no executor loss.
 """
 
 from __future__ import annotations
@@ -39,40 +40,6 @@ from pyspark.sql import functions as F
 
 _RELIABLE_CONF = "spark.pheknowlator.reliableCheckpoints"
 _log = logging.getLogger("pheknowlator_spark")
-
-
-def set_reliable_checkpoints(spark, checkpoint_dir: str | None) -> None:
-    """Route iteration lineage cuts through reliable checkpoints (HDFS/
-    object-store ``checkpoint_dir``); pass None to revert to
-    localCheckpoint. The toggle is scoped to ``spark``'s session conf —
-    concurrent sessions/threads with their own SparkSession are unaffected
-    (a process-global flag would flip them all, possibly without a
-    checkpoint dir set). Prefer :func:`reliable_checkpoints` for a
-    guaranteed reset."""
-    if checkpoint_dir is None:
-        spark.conf.set(_RELIABLE_CONF, "false")
-        return
-    spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    spark.conf.set(_RELIABLE_CONF, "true")
-
-
-class reliable_checkpoints:
-    """Context manager: ``with reliable_checkpoints(spark, dir): ...`` —
-    enables reliable iteration checkpoints for the session and always
-    restores the previous mode on exit."""
-
-    def __init__(self, spark, checkpoint_dir: str):
-        self._spark = spark
-        self._dir = checkpoint_dir
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get(_RELIABLE_CONF, "false")
-        set_reliable_checkpoints(self._spark, self._dir)
-        return self._spark
-
-    def __exit__(self, *exc):
-        self._spark.conf.set(_RELIABLE_CONF, self._prev)
-        return False
 
 
 def _cut_lineage(df: DataFrame) -> DataFrame:
@@ -365,8 +332,8 @@ def pagerank(
     components, reusing the node partitioning across iterations. The
     dangling mass is a one-row broadcast (crossJoin of an aggregate), not
     a driver collect, so the whole iteration stays in one lazy plan;
-    lineage is cut per round (reliable checkpoints apply, see
-    :func:`set_reliable_checkpoints`).
+    lineage is cut per round (reliable checkpoints apply, see the module
+    docstring).
 
     Restart safety mirrors :func:`connected_components`: pass a
     ``plans.checkpoint.StageStore`` as ``state_store`` and each round's
@@ -536,8 +503,8 @@ def bfs_depths(
     (anti-join against the visited set), so total work is O(edges
     reachable) across all rounds, not O(edges × depth). Both per-round
     shuffles (the frontier join, the min-dedup of new nodes) are keyed on
-    node ids; lineage is cut per round (reliable checkpoints apply,
-    :func:`set_reliable_checkpoints`); the walk ends on the first empty
+    node ids; lineage is cut per round (reliable checkpoints apply, see
+    the module docstring); the walk ends on the first empty
     frontier, whose row count is read off the round's cut, never
     collecting state.
     """
@@ -679,9 +646,9 @@ def k_core(
     100 TB plan: a round is ONE partially-combined degree aggregation
     keyed on the node + TWO left-semi hash joins (src kept, dst kept) —
     all shuffles on the node key, reused across rounds; lineage is cut
-    per round (reliable checkpoints apply, see
-    :func:`set_reliable_checkpoints`). Peel depth is bounded by the
-    degeneracy ordering, typically tens of rounds on power-law graphs.
+    per round (reliable checkpoints apply, see the module docstring).
+    Peel depth is bounded by the degeneracy ordering, typically tens of
+    rounds on power-law graphs.
     ``on_round(it, round_df)`` is a post-cut hook (plan audits / fault
     injection in tests; see :func:`_iterate`).
     """

@@ -1,4 +1,5 @@
-"""Node-metadata operators (J8, P10, G6, G7, F5).
+"""Node-metadata operators (J8, G6, G7, F5; the P10 metadata gate is
+``owl_filters.gate_edges`` over the metadata URIs).
 
 Metadata table contract (FIXTURES.md §9, mirrors the reference's pickled
 node_metadata_dict, metadata.py:43-56)::
@@ -28,39 +29,6 @@ def tidy_text(col):
     return F.trim(
         F.regexp_replace(F.regexp_replace(col, r"[\n\r]", " "), r"\s\s+", " ")
     )
-
-
-def metadata_gate(
-    edges: DataFrame,
-    metadata: DataFrame,
-) -> DataFrame:
-    """P10: admit an edge if node metadata exists per the type pattern —
-    class-class edges always pass; any entity side requires metadata
-    (meta-logic, knowledge_graph.py:336-339)."""
-    meta_uris = metadata.select(F.col("uri")).distinct()
-    flagged = (
-        edges.join(
-            F.broadcast(
-                meta_uris.select(F.col("uri").alias("n1_uri"), F.lit(True).alias("__s_m"))
-            ),
-            "n1_uri",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                meta_uris.select(F.col("uri").alias("n2_uri"), F.lit(True).alias("__o_m"))
-            ),
-            "n2_uri",
-            "left",
-        )
-    )
-    parts = F.split(F.col("data_type"), "-")
-    sub_is_class = parts.getItem(0) == "class"
-    obj_is_class = parts.getItem(1) == "class"
-    keep = (sub_is_class | F.coalesce("__s_m", F.lit(False))) & (
-        obj_is_class | F.coalesce("__o_m", F.lit(False))
-    )
-    return flagged.filter(keep).drop("__s_m", "__o_m")
 
 
 def metadata_triples(nodes: DataFrame, metadata: DataFrame) -> DataFrame:

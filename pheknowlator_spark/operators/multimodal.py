@@ -2,9 +2,9 @@
 
 Media are opaque ``binary`` columns with typed metadata structs. The Spark
 side — schema, partitioning, Arrow batch shape, UDF signatures — is real
-and tested; the actual codec work is stubbed behind ``DecodeUnavailable``
-(the container ships no image/audio libs) with a deterministic fake decoder
-for tests, clearly marked.
+and tested; the decoder is ``fake_decode``, a deterministic md5-seeded
+stand-in, because no image/audio codec library is a dependency. A real
+codec replaces it with the same signature (bytes, modality → features).
 
 Pattern at scale: ``mapInPandas`` so each Arrow batch amortizes codec
 setup; media tables partitioned by (modality, bucket(content_id)) so decode
@@ -27,22 +27,6 @@ MEDIA_SCHEMA = (
 FEATURE_SCHEMA = "content_id string, modality string, feature array<float>, n_bytes int"
 
 
-class DecodeUnavailable(NotImplementedError):
-    """Raised by the real decode path: codec libraries are not installed.
-
-    Wire in PIL/librosa/pyav here when the runtime image has them; the
-    Spark-side contract (batch iterator of pandas DataFrames in,
-    FEATURE_SCHEMA out) stays identical.
-    """
-
-
-def real_decode(media: bytes, modality: str):  # pragma: no cover - stub
-    raise DecodeUnavailable(
-        f"no codec available for modality={modality!r}; install an image/audio "
-        "library and replace multimodal.real_decode"
-    )
-
-
 def fake_decode(media: bytes, modality: str) -> list[float]:
     """Deterministic stand-in feature extractor: md5-seeded unit vector.
 
@@ -57,16 +41,15 @@ def fake_decode(media: bytes, modality: str) -> list[float]:
     return [v / norm for v in vals]
 
 
-def extract_features(media_df: DataFrame, use_fake: bool = True) -> DataFrame:
+def extract_features(media_df: DataFrame) -> DataFrame:
     """Decode/feature-extract media binaries via mapInPandas (Arrow batches)."""
-    decode = fake_decode if use_fake else real_decode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, sizes = [], []
             for media, modality in zip(pdf["media"], pdf["modality"]):
                 raw = bytes(media) if media is not None else b""
-                feats.append(decode(raw, modality))
+                feats.append(fake_decode(raw, modality))
                 sizes.append(len(raw))
             yield pd.DataFrame(
                 {

@@ -190,37 +190,24 @@ def deprecated_classes(triples: DataFrame) -> DataFrame:
     )
 
 
-def checks_classes(edges: DataFrame, ontology_classes: DataFrame,
-                   sub_is_class=None, obj_is_class=None) -> DataFrame:
-    """P9: admit an edge only if its ontology-class endpoints exist in the
-    merged-ontology class set (knowledge_graph.py:248-267).
+def gate_edges(edges: DataFrame, nodes: DataFrame, check_n1, check_n2) -> DataFrame:
+    """Admit an edge only if each endpoint it checks is in ``nodes``. P9
+    checks the class sides against the merged ontology's classes
+    (knowledge_graph.py:248-267); P10 checks the entity sides against the
+    node-metadata URIs (knowledge_graph.py:336-339).
 
-    ``ontology_classes``: one-column DataFrame ``[node]`` (broadcast).
-    ``sub_is_class``/``obj_is_class``: optional boolean Columns gating which
-    side must be checked (entity sides skip the check).
+    ``nodes``: one-column DataFrame of distinct node URIs (broadcast).
+    ``check_n1``/``check_n2``: boolean Columns over ``edges`` saying
+    whether the ``n1_uri``/``n2_uri`` side must be in ``nodes``.
     """
-    cls = ontology_classes.select(F.col(ontology_classes.columns[0]).alias("node"))
+    ids = nodes.select(F.col(nodes.columns[0]).alias("node"))
     out = edges
-    if sub_is_class is None:
-        out = out.join(
-            F.broadcast(cls.withColumnRenamed("node", "n1_uri")), "n1_uri", "left_semi"
-        )
-    else:
+    for side, check, ok in (("n1_uri", check_n1, "__s_ok"), ("n2_uri", check_n2, "__o_ok")):
         flagged = out.join(
-            F.broadcast(cls.select(F.col("node").alias("n1_uri"), F.lit(True).alias("__s_ok"))),
-            "n1_uri", "left",
+            F.broadcast(ids.select(F.col("node").alias(side), F.lit(True).alias(ok))),
+            side, "left",
         )
-        out = flagged.filter(F.col("__s_ok") | ~sub_is_class).drop("__s_ok")
-    if obj_is_class is None:
-        out = out.join(
-            F.broadcast(cls.withColumnRenamed("node", "n2_uri")), "n2_uri", "left_semi"
-        )
-    else:
-        flagged = out.join(
-            F.broadcast(cls.select(F.col("node").alias("n2_uri"), F.lit(True).alias("__o_ok"))),
-            "n2_uri", "left",
-        )
-        out = flagged.filter(F.col("__o_ok") | ~obj_is_class).drop("__o_ok")
+        out = flagged.filter(F.col(ok) | ~check).drop(ok)
     return out
 
 

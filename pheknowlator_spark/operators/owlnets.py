@@ -21,7 +21,8 @@ Re-expresses the reference's OWL-NETS 2.0 algorithm
    right shape.
 4. **Assembly (N9/N12)** — decoded triples union the plain filtered graph
    (owl_filters.filter_owl_semantics), then connectivity repair (N10) and
-   optional purification (N11) via the cached subclass transitive closure.
+   optional purification (N11); each of the two computes its own subclass
+   transitive closure over the graph it is given.
 
 Decode-status rows (negation / complementOf / misc / cardinality) land in a
 lineage-style DataFrame instead of the reference's ``owl_nets_dict``.

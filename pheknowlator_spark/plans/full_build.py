@@ -40,8 +40,8 @@ from pheknowlator_spark.operators.metadata import (
 )
 from pheknowlator_spark.operators.owl_filters import (
     annotation_assertions,
-    checks_classes,
     class_nodes,
+    gate_edges,
     graph_difference,
     remove_self_loops,
 )
@@ -110,11 +110,11 @@ def _construct_gated_edges(
     resolved = e.withColumn(
         "n1_uri", F.concat("uri1", "sub_id")
     ).withColumn("n2_uri", F.concat("uri2", "obj_id"))
-    gated = checks_classes(
+    gated = gate_edges(
         resolved,
         class_nodes(merged),
-        sub_is_class=F.col("n1_kind") == "class",
-        obj_is_class=F.col("n2_kind") == "class",
+        F.col("n1_kind") == "class",
+        F.col("n2_kind") == "class",
     ).drop("n1_uri", "n2_uri")
     triples, _errors = construct_edges(gated, subclass_map, approach)
     return triples.select(

@@ -140,6 +140,46 @@ def _worker_automaton(bc) -> AhoCorasick:
     return ac
 
 
+def _scan(
+    pages: DataFrame,
+    entity_dictionary: DataFrame,
+    column: str,
+    to_text,
+    resolve_spans: bool,
+) -> DataFrame:
+    """Broadcast the dictionary's (surface, curie) pairs and run the
+    worker-side automaton over ``to_text(value)`` of each page's
+    ``column`` in one ``mapInPandas`` pass; a page whose text is empty or
+    None yields nothing. ``resolve_spans`` keeps only each span's first
+    (lexicographically least) CURIE."""
+    pairs = [
+        (r[0], r[1])
+        for r in entity_dictionary.select("surface", "curie").distinct().collect()
+    ]
+    bc = pages.sparkSession.sparkContext.broadcast(pairs)
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ac = _worker_automaton(bc)
+        for pdf in batches:
+            rows: list[tuple[str, str, int, int, str]] = []
+            for url, value in zip(pdf["url"], pdf[column]):
+                text = to_text(value)
+                if not text:
+                    continue
+                for surface, begin, end, curies in ac.find(text):
+                    if resolve_spans:
+                        # curies is sorted → [0] is the score_mentions argmax
+                        rows.append((url, surface, begin, end, curies[0]))
+                    else:
+                        for curie in curies:
+                            rows.append((url, surface, begin, end, curie))
+            yield pd.DataFrame(
+                rows, columns=["url", "surface", "begin", "end", "curie"]
+            )
+
+    return pages.select("url", column).mapInPandas(scan, MENTION_SCHEMA)
+
+
 def detect_mentions(
     pages: DataFrame,
     entity_dictionary: DataFrame,
@@ -150,30 +190,7 @@ def detect_mentions(
     sc.broadcast; at 100 TB page scale the dictionary is still dimension-
     sized because it derives from the ontology, not the corpus).
     """
-    spark = pages.sparkSession
-    pairs = [
-        (r[0], r[1])
-        for r in entity_dictionary.select("surface", "curie").distinct().collect()
-    ]
-    bc = spark.sparkContext.broadcast(pairs)
-
-    src = pages.select("url", "text")
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac = _worker_automaton(bc)
-        for pdf in batches:
-            rows: list[tuple[str, str, int, int, str]] = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for surface, begin, end, curies in ac.find(text):
-                    for curie in curies:
-                        rows.append((url, surface, begin, end, curie))
-            yield pd.DataFrame(
-                rows, columns=["url", "surface", "begin", "end", "curie"]
-            )
-
-    return src.mapInPandas(scan, MENTION_SCHEMA)
+    return _scan(pages, entity_dictionary, "text", lambda text: text, False)
 
 
 def extract_and_detect(
@@ -204,33 +221,10 @@ def extract_and_detect(
     from pheknowlator_spark.functions.text import quality_score_py
     from pheknowlator_spark.webtext.extract import html_to_text
 
-    spark = pages.sparkSession
-    pairs = [
-        (r[0], r[1])
-        for r in entity_dictionary.select("surface", "curie").distinct().collect()
-    ]
-    bc = spark.sparkContext.broadcast(pairs)
-    src = pages.select("url", "html")
+    def to_text(html) -> str | None:
+        text = html_to_text(bytes(html) if html is not None else None)
+        if min_quality is not None and text and quality_score_py(text) < min_quality:
+            return None
+        return text
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac = _worker_automaton(bc)
-        for pdf in batches:
-            rows: list[tuple[str, str, int, int, str]] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = html_to_text(bytes(html) if html is not None else None)
-                if not text:
-                    continue
-                if min_quality is not None and quality_score_py(text) < min_quality:
-                    continue
-                for surface, begin, end, curies in ac.find(text):
-                    if resolve_spans:
-                        # curies is sorted → [0] is the score_mentions argmax
-                        rows.append((url, surface, begin, end, curies[0]))
-                    else:
-                        for curie in curies:
-                            rows.append((url, surface, begin, end, curie))
-            yield pd.DataFrame(
-                rows, columns=["url", "surface", "begin", "end", "curie"]
-            )
-
-    return src.mapInPandas(run, MENTION_SCHEMA)
+    return _scan(pages, entity_dictionary, "html", to_text, resolve_spans)

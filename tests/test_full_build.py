@@ -23,10 +23,11 @@ REF = "/root/reference/tests/data"
 RDF_T = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 OWL = "http://www.w3.org/2002/07/owl#"
 OBO = "http://purl.obolibrary.org/obo/"
-# generated classes a warm post-closure build of small_ontology compiles:
-# 14–34 over 5 runs of this test alone, 0–8 after the file's other tests
-# (278–279 with Spark's default 100-entry cache)
-MAX_WARM_COMPILES = 34
+# generated classes a warm post-closure build of small_ontology compiles
+# with AQE off: 0 in each of 5 runs of this test alone and 2 runs of this
+# file, 335–340 with Spark's default 100-entry cache. With AQE on,
+# run-time re-planning spread the count over 4–48.
+MAX_WARM_COMPILES = 8
 
 
 @pytest.fixture(scope="module")
@@ -220,7 +221,9 @@ def test_repeated_build_reuses_compiled_classes(spark, tmp_path, small_ontology)
     new generated classes: the session's codegen cache holds the build's
     working set, so its plans hit classes the first build compiled. With
     Spark's default cache of 100 entries the second build recompiles
-    nearly all of them."""
+    nearly all of them. Both builds run with AQE off: its run-time
+    re-planning depends on which query stages finish first, so the set of
+    plans it compiles differs from build to build."""
     from pheknowlator_spark.plans.full_build import post_closure_build
 
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
@@ -232,10 +235,16 @@ def test_repeated_build_reuses_compiled_classes(spark, tmp_path, small_ontology)
             date_full="04/02/2020 21:22:56",
         )
 
-    build("first")
-    before = compiles.getCount()
-    build("second")
-    assert compiles.getCount() - before <= MAX_WARM_COMPILES
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        build("first")
+        before = compiles.getCount()
+        build("second")
+        warm = compiles.getCount() - before
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert warm <= MAX_WARM_COMPILES
 
 
 def test_partial_build_contract(spark, tmp_path, any_ontology):

@@ -260,38 +260,6 @@ def test_split_logic_annotation_cases(spark):
     assert len(got_logic) + len(got_annot) == len(rows)
 
 
-def test_reliable_checkpoints_toggle(spark, tmp_path):
-    # connected_components produces identical results with reliable
-    # checkpoint writes (the multi-executor-cluster mode) as with
-    # localCheckpoint (local-mode default)
-    from pheknowlator_spark.operators.graph_algos import (
-        _RELIABLE_CONF,
-        connected_components,
-        reliable_checkpoints,
-        set_reliable_checkpoints,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
-    )
-    base = {(r.node, r.component) for r in connected_components(edges).collect()}
-    set_reliable_checkpoints(spark, str(tmp_path / "ckpt"))
-    try:
-        reliable = {
-            (r.node, r.component) for r in connected_components(edges).collect()
-        }
-    finally:
-        set_reliable_checkpoints(spark, None)
-    assert base == reliable
-    assert base == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
-    # context manager guarantees reset (session-scoped conf, not a global)
-    with reliable_checkpoints(spark, str(tmp_path / "ckpt2")):
-        assert spark.conf.get(_RELIABLE_CONF) == "true"
-        ctx = {(r.node, r.component) for r in connected_components(edges).collect()}
-    assert spark.conf.get(_RELIABLE_CONF) == "false"
-    assert ctx == base
-
-
 def test_iterative_operators_identical_under_reliable_checkpoints(
     spark, tmp_path, caplog
 ):
@@ -301,11 +269,11 @@ def test_iterative_operators_identical_under_reliable_checkpoints(
     import logging
 
     from pheknowlator_spark.operators.graph_algos import (
+        _RELIABLE_CONF,
         _observed_cut,
         bfs_depths,
         connected_components,
         k_core,
-        reliable_checkpoints,
         transitive_closure,
     )
 
@@ -326,12 +294,18 @@ def test_iterative_operators_identical_under_reliable_checkpoints(
         ]
 
     local = run_all()
-    with reliable_checkpoints(spark, str(tmp_path / "ckpt")):
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(_RELIABLE_CONF, "true")
+    try:
         _, probe = _observed_cut(edges, {"rows": F.count(F.lit(1))})
         assert probe == {"rows": len(pairs)}
         with caplog.at_level(logging.DEBUG, logger="pheknowlator_spark"):
             reliable = run_all()
+    finally:
+        spark.conf.set(_RELIABLE_CONF, "false")
     assert reliable == local
+    assert local[0] == [("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"),
+                        ("e", "a"), ("x", "x"), ("y", "x")]
     assert local[3] == [("a", 3), ("b", 2), ("c", 3), ("d", 2)]
     closing = [r.getMessage() for r in caplog.records if "rounds" in r.getMessage()]
     assert [m.split(":")[0] for m in closing] == [

@@ -1,11 +1,13 @@
-"""StageStore checkpoint/resume, sinks round-trips and metadata operators."""
+"""StageStore checkpoint/resume, sinks round-trips, metadata operators and
+the P9/P10 edge gate."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from pheknowlator_spark.operators.metadata import metadata_gate, metadata_triples
+from pheknowlator_spark.operators.metadata import metadata_triples
+from pheknowlator_spark.operators.owl_filters import gate_edges
 from pheknowlator_spark.plans.checkpoint import StageStore
 from pheknowlator_spark.sources.sinks import (
     read_ntriples,
@@ -85,7 +87,14 @@ def test_metadata_gate_and_triples(spark, tmp_path):
          ("http://x/c2", "http://x/c1", "class-class")],
         "n1_uri string, n2_uri string, data_type string",
     )
-    gated = metadata_gate(edges, metadata)
+    # P10: entity sides need metadata, class sides pass unchecked
+    kind = F.split(F.col("data_type"), "-")
+    gated = gate_edges(
+        edges,
+        metadata.select("uri").distinct(),
+        kind.getItem(0) != "class",
+        kind.getItem(1) != "class",
+    )
     kept = {(r.n1_uri, r.data_type) for r in gated.collect()}
     assert ("http://x/e1", "entity-class") in kept  # has metadata
     assert ("http://x/c2", "class-class") in kept  # class-class always passes
@@ -109,6 +118,29 @@ def test_metadata_gate_and_triples(spark, tmp_path):
     write_node_labels(metadata, id_map, path)
     lines = spark.read.text(path).collect()
     assert any("Entity One" in r.value for r in lines)
+
+
+def test_gate_edges_checks_class_sides(spark):
+    # P9: a class side must be in the ontology's classes; an entity side
+    # is never looked up
+    classes = spark.createDataFrame([("http://x/c1",), ("http://x/c2",)], "node string")
+    edges = spark.createDataFrame(
+        [("http://x/c2", "http://x/c1", "class", "class"),
+         ("http://x/c2", "http://x/gone", "class", "class"),
+         ("http://x/gone", "http://x/c1", "class", "class"),
+         ("http://x/e1", "http://x/c1", "entity", "class"),
+         ("http://x/c1", "http://x/e2", "class", "entity")],
+        "n1_uri string, n2_uri string, n1_kind string, n2_kind string",
+    )
+    gated = gate_edges(
+        edges, classes, F.col("n1_kind") == "class", F.col("n2_kind") == "class"
+    )
+    assert sorted(gated.columns) == sorted(edges.columns)
+    assert sorted((r.n1_uri, r.n2_uri) for r in gated.collect()) == [
+        ("http://x/c1", "http://x/e2"),
+        ("http://x/c2", "http://x/c1"),
+        ("http://x/e1", "http://x/c1"),
+    ]
 
 
 def test_stage_store_format_routing(spark, tmp_path):

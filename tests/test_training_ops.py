@@ -19,12 +19,7 @@ from pheknowlator_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_duplicates,
 )
-from pheknowlator_spark.operators.multimodal import (
-    DecodeUnavailable,
-    extract_features,
-    real_decode,
-    synthetic_media,
-)
+from pheknowlator_spark.operators.multimodal import extract_features, synthetic_media
 from pheknowlator_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -187,18 +182,13 @@ def test_ivf_topk_runs(spark, embeddings):
 
 def test_multimodal_features(spark):
     media = synthetic_media(spark, 12)
-    feats = extract_features(media, use_fake=True)
+    feats = extract_features(media)
     rows = feats.collect()
     assert len(rows) == 12
     assert all(len(r.feature) == 8 for r in rows)
     # deterministic
-    again = extract_features(media, use_fake=True).collect()
+    again = extract_features(media).collect()
     assert sorted(r.content_id for r in rows) == sorted(r.content_id for r in again)
-
-
-def test_real_decode_is_stubbed():
-    with pytest.raises(DecodeUnavailable):
-        real_decode(b"x", "image")
 
 
 def test_simhash_pigeonhole_exactness(spark, documents):
