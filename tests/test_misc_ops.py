@@ -260,6 +260,44 @@ def test_split_logic_annotation_cases(spark):
     assert len(got_logic) + len(got_annot) == len(rows)
 
 
+def test_reliable_checkpoints_toggle(spark, tmp_path):
+    """The session conf is the checkpoint-mode switch: off, connected
+    components cut with ``localCheckpoint`` and write nothing to the
+    checkpoint dir; on, its cuts are reliable checkpoints written there.
+    Both modes give the same components, and turning the conf off again
+    goes back to local cuts."""
+    from pheknowlator_spark.operators.graph_algos import (
+        _RELIABLE_CONF,
+        connected_components,
+    )
+
+    def written(d):
+        return sorted(p for p in d.rglob("*") if p.is_file()) if d.exists() else []
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
+    )
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    assert spark.conf.get(_RELIABLE_CONF, "false") == "false"
+    base = {(r.node, r.component) for r in connected_components(edges).collect()}
+    assert written(ckpt) == []
+    spark.conf.set(_RELIABLE_CONF, "true")
+    try:
+        reliable = {
+            (r.node, r.component) for r in connected_components(edges).collect()
+        }
+    finally:
+        spark.conf.set(_RELIABLE_CONF, "false")
+    after_reliable = written(ckpt)
+    assert after_reliable != []
+    assert base == reliable
+    assert base == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+    again = {(r.node, r.component) for r in connected_components(edges).collect()}
+    assert again == base
+    assert written(ckpt) == after_reliable
+
+
 def test_iterative_operators_identical_under_reliable_checkpoints(
     spark, tmp_path, caplog
 ):
