@@ -21,8 +21,10 @@ Re-expresses the reference's OWL-NETS 2.0 algorithm
    right shape.
 4. **Assembly (N9/N12)** — decoded triples union the plain filtered graph
    (owl_filters.filter_owl_semantics), then connectivity repair (N10) and
-   optional purification (N11); each of the two computes its own subclass
-   transitive closure over the graph it is given.
+   optional purification (N11). Purification computes a subclass
+   transitive closure over the graph it is given; connectivity repair
+   computes one only when a node with no subClassOf ancestor has an
+   out-edge, since only such a node reads its neighbors' ancestors.
 
 Decode-status rows (negation / complementOf / misc / cardinality) land in a
 lineage-style DataFrame instead of the reference's ``owl_nets_dict``.
@@ -48,6 +50,7 @@ from pheknowlator_spark.functions.rdf import (
 )
 from pheknowlator_spark.operators.graph_algos import (
     _cut_lineage,
+    _observed_cut,
     transitive_closure,
 )
 from pheknowlator_spark.operators.owl_filters import (
@@ -459,37 +462,62 @@ def make_graph_connected(
     lexicographic tie-break — replaces the reference's random.sample,
     SURVEY §7.4 risk 2). Roots get ``rdfs:subClassOf`` (subclass) or
     ``rdf:type`` (instance) edges to the ancestor.
-    """
-    sub_edges = triples.filter(F.col("p") == RDFS_SUBCLASSOF).select(
-        F.col("s").alias("child"), F.col("o").alias("parent")
-    )
-    closure = transitive_closure(sub_edges)
-    nodes = (
-        triples.select(F.col("s").alias("node"))
-        .unionByName(triples.select(F.col("o").alias("node")))
-        .distinct()
-    )
-    has_anc = closure.select(F.col("child").alias("node")).distinct()
-    rootless = nodes.join(has_anc, "node", "left_anti")
 
-    # neighbors' top ancestors: out-neighbors o of rootless x, take the
-    # topmost ancestor of each neighbor (reference takes ancs[0], the root
-    # end of the ordered ancestor list); approximate with the ancestor set
-    # mode. Deterministic via mode_per_group.
-    neigh = (
-        rootless.join(triples.select(F.col("s").alias("node"), "o"), "node")
-        .select("node", F.col("o").alias("nbr"))
+    One grouped pass flags every node: ``has_anc`` (a subClassOf edge to a
+    different node — exactly the children of the subclass closure) and
+    ``is_subject`` (an out-edge). The rootless nodes are cut, and the cut's
+    own job counts the rootless subjects. Only neighbors' ancestors need
+    the subclass transitive closure, so it runs only when that count is
+    above zero; otherwise every rootless node is its own root.
+    """
+    t = triples.select("s", "p", "o")
+    is_sub_edge = (F.col("p") == RDFS_SUBCLASSOF) & (F.col("s") != F.col("o"))
+    flags = (
+        t.select(
+            F.col("s").alias("node"),
+            F.when(is_sub_edge, True).otherwise(False).alias("has_anc"),
+            F.lit(True).alias("is_subject"),
+        )
+        .unionByName(t.select(
+            F.col("o").alias("node"),
+            F.lit(False).alias("has_anc"),
+            F.lit(False).alias("is_subject"),
+        ))
+        .groupBy("node")
+        .agg(F.max("has_anc").alias("has_anc"), F.max("is_subject").alias("is_subject"))
     )
-    nbr_ancs = neigh.join(
-        closure.select(F.col("child").alias("nbr"), F.col("parent").alias("anc")),
-        "nbr",
-    ).select("node", "anc")
-    nbr_mode = mode_per_group(nbr_ancs, "node", "anc").withColumnRenamed(
-        "anc", "root"
+    rootless, probe = _observed_cut(
+        flags.filter(~F.col("has_anc")).select("node", "is_subject"),
+        {"subjects": F.count(F.when(F.col("is_subject"), 1))},
     )
+
+    root = F.col("node")
+    if probe["subjects"]:
+        # neighbors' top ancestors: out-neighbors o of rootless x, take the
+        # topmost ancestor of each neighbor (reference takes ancs[0], the
+        # root end of the ordered ancestor list); approximate with the
+        # ancestor set mode. Deterministic via mode_per_group.
+        closure = transitive_closure(
+            t.filter(F.col("p") == RDFS_SUBCLASSOF).select(
+                F.col("s").alias("child"), F.col("o").alias("parent")
+            )
+        )
+        neigh = (
+            rootless.filter(F.col("is_subject"))
+            .join(t.select(F.col("s").alias("node"), "o"), "node")
+            .select("node", F.col("o").alias("nbr"))
+        )
+        nbr_ancs = neigh.join(
+            closure.select(F.col("child").alias("nbr"), F.col("parent").alias("anc")),
+            "nbr",
+        ).select("node", "anc")
+        nbr_mode = mode_per_group(nbr_ancs, "node", "anc").withColumnRenamed(
+            "anc", "root"
+        )
+        rootless = rootless.join(nbr_mode, "node", "left")
+        root = F.coalesce("root", F.col("node"))
     roots = (
-        rootless.join(nbr_mode, "node", "left")
-        .select(F.coalesce("root", F.col("node")).alias("root"))
+        rootless.select(root.alias("root"))
         .distinct()
         .filter(F.col("root") != BFO_ROOT)
     )
@@ -499,7 +527,7 @@ def make_graph_connected(
         F.lit(rel).alias("p"),
         F.lit(BFO_ROOT).alias("o"),
     )
-    return triples.select("s", "p", "o").unionByName(new_edges).distinct()
+    return t.unionByName(new_edges).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -558,10 +586,10 @@ def run_owlnets(
     )
     cleaned = clean_decoded_graph(decoded_full).select("s", "p", "o")
     # cut lineage ONCE on the combined graph: make_graph_connected reads
-    # its input from four subtrees (closure base, node set, neighbor set,
-    # final union) — without the cut each consumer re-ran the whole
-    # applyInArrow decode + the plain-triples filter tree (~4× the decode
-    # cost; at cluster scale 4 redundant scans of the decoded graph)
+    # it at least twice (the node-flag pass and the final union; the
+    # closure base and the neighbor set too when it builds the closure) —
+    # without the cut each read re-ran the whole applyInArrow decode + the
+    # plain-triples filter tree
     combined = _cut_lineage(plain.unionByName(cleaned).distinct())
     connected = make_graph_connected(combined, approach or "subclass")
     out = {

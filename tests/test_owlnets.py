@@ -31,6 +31,7 @@ OWL_NS = "http://www.w3.org/2002/07/owl#"
 GO1, GO2, GO3 = OBO + "GO_0000785", OBO + "GO_0110165", OBO + "GO_0005694"
 PART_OF = OBO + "BFO_0000050"
 A, B, X, Y = OBO + "A_1", OBO + "B_1", OBO + "X_1", OBO + "Y_1"
+C, D, E = OBO + "C_1", OBO + "D_1", OBO + "E_1"
 PATO = OBO + "PATO_0000587"
 
 
@@ -222,6 +223,80 @@ def test_make_graph_connected(spark):
     assert (B, RDFS_SUBCLASSOF, BFO_ROOT) in got
     # A has an ancestor (B) → not attached directly
     assert (A, RDFS_SUBCLASSOF, BFO_ROOT) not in got
+
+    # X is rootless with an out-neighbor A whose ancestors B, C, D tie
+    # (one path each): X's root is the lexicographic min, B — attached
+    # though B itself has an ancestor. Y's neighbors A and E (E ⊑ C) count
+    # C twice, so Y's root is C by count, though B sorts first. C's
+    # self-loop gives it no ancestor.
+    rows = [
+        (X, PART_OF, A), (A, RDFS_SUBCLASSOF, B), (A, RDFS_SUBCLASSOF, C),
+        (B, RDFS_SUBCLASSOF, D), (Y, PART_OF, A), (Y, RO_0000086, E),
+        (E, RDFS_SUBCLASSOF, C), (C, RDFS_SUBCLASSOF, C),
+    ]
+    for approach, rel in (("subclass", RDFS_SUBCLASSOF), ("instance", RDF_TYPE)):
+        out = make_graph_connected(
+            spark.createDataFrame(rows, "s string, p string, o string"), approach
+        )
+        got = {(r.s, r.p, r.o) for r in out.collect()}
+        assert got == _connected_model(rows, rel)
+        assert {s for s, p, o in got if o == BFO_ROOT and p == rel} == {B, C, D}
+        assert not any(o == BFO_ROOT and p != rel for s, p, o in got)
+
+
+def _connected_model(rows, rel):
+    """Connectivity repair in plain Python: a node with no subClassOf edge
+    to another node is rootless; its root is the most frequent ancestor
+    over its out-edges' objects (lexicographic min on a tie), else itself."""
+    from collections import Counter
+
+    parents = {}
+    for s, p, o in rows:
+        if p == RDFS_SUBCLASSOF and s != o:
+            parents.setdefault(s, set()).add(o)
+
+    def ancestors(n):
+        seen, todo = set(), [n]
+        while todo:
+            for a in parents.get(todo.pop(), ()):
+                if a not in seen:
+                    seen.add(a)
+                    todo.append(a)
+        return seen - {n}
+
+    roots = set()
+    for x in {n for s, _, o in rows for n in (s, o)} - set(parents):
+        ancs = Counter(a for s, _, o in rows if s == x for a in ancestors(o))
+        roots.add(min(ancs, key=lambda a: (-ancs[a], a)) if ancs else x)
+    return set(rows) | {(r, rel, BFO_ROOT) for r in roots - {BFO_ROOT}}
+
+
+def test_make_graph_connected_builds_closure_only_for_rootless_subjects(
+    spark, caplog
+):
+    """The subclass closure serves only the neighbors of rootless nodes
+    with out-edges: without such a node no closure round runs (its DEBUG
+    lines are absent), with one the closure runs once."""
+    import logging
+
+    def closures(rows):
+        caplog.clear()
+        df = spark.createDataFrame(rows, "s string, p string, o string")
+        with caplog.at_level(logging.DEBUG, logger="pheknowlator_spark"):
+            make_graph_connected(df).collect()
+        return [
+            r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("transitive_closure: ")
+        ]
+
+    # C is the only rootless node and has no out-edge
+    assert closures([
+        (A, RDFS_SUBCLASSOF, B), (B, RDFS_SUBCLASSOF, C), (A, PART_OF, B),
+    ]) == []
+    # X is rootless and has an out-edge
+    assert len(closures([
+        (X, PART_OF, A), (A, RDFS_SUBCLASSOF, B), (A, RDFS_SUBCLASSOF, C),
+    ])) == 1
 
 
 def test_purify_subclass(spark):
