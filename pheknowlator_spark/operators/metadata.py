@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 
 from pheknowlator_spark.functions.rdf import (
     OBOINOWL,
+    OWL_CLASS,
+    OWL_NAMED_INDIVIDUAL,
+    OWL_OBJECT_PROPERTY,
+    OWL_ONTOLOGY,
+    RDF_TYPE,
     RDFS_LABEL,
     is_bnode,
     literal_triple,
@@ -36,27 +41,32 @@ def metadata_triples(nodes: DataFrame, metadata: DataFrame) -> DataFrame:
     (creates_node_metadata, metadata.py:157-196).
 
     ``nodes``: one-column [uri] of nodes present in the graph. Broadcast
-    join + explode of the synonym array.
+    join, then one explode over each node's (predicate, text) pairs.
     """
     m = nodes.select("uri").distinct().join(F.broadcast(metadata), "uri", "inner")
-    label_t = m.filter(F.col("label").isNotNull()).select(
-        literal_triple(F.col("uri"), RDFS_LABEL, tidy_text(F.col("label"))).alias("t")
+
+    def po(p, o):
+        return F.struct(F.lit(p).alias("p"), o.alias("o"))
+
+    pairs = F.concat(
+        F.array(
+            po(RDFS_LABEL, F.col("label")), po(IAO_DEFINITION, F.col("description"))
+        ),
+        F.transform(
+            F.coalesce("synonyms", F.array()), lambda syn: po(HAS_SYNONYM, syn)
+        ),
     )
-    desc_t = m.filter(F.col("description").isNotNull()).select(
-        literal_triple(
-            F.col("uri"), IAO_DEFINITION, tidy_text(F.col("description"))
-        ).alias("t")
-    )
-    syn_t = (
-        m.filter(F.size(F.coalesce("synonyms", F.array())) > 0)
-        .select("uri", F.explode("synonyms").alias("syn"))
+    return (
+        m.select("uri", F.explode(pairs).alias("po"))
+        .filter(F.col("po.o").isNotNull())
         .select(
-            literal_triple(F.col("uri"), HAS_SYNONYM, tidy_text(F.col("syn"))).alias(
-                "t"
-            )
+            literal_triple(
+                F.col("uri"), F.col("po.p"), tidy_text(F.col("po.o"))
+            ).alias("t")
         )
+        .select("t.*")
+        .distinct()
     )
-    return label_t.unionByName(desc_t).unionByName(syn_t).select("t.*").distinct()
 
 
 PKT_AUTHORS = (
@@ -85,12 +95,6 @@ def ontology_header(
     metadata.py:214) so header emission stays deterministic/resumable —
     callers stamp once per build.
     """
-    from pheknowlator_spark.functions.rdf import (
-        OWL_ONTOLOGY,
-        RDF_TYPE,
-        RDFS_LABEL,  # noqa: F401  (module-level consistency)
-    )
-
     owl = "http://www.w3.org/2002/07/owl#"
     rdfs_comment = "http://www.w3.org/2000/01/rdf-schema#comment"
     parsed = "_".join(filename.lower().split("/")[-1].split("_")[2:])
@@ -118,8 +122,6 @@ def adds_ontology_annotations(
     order (metadata.py:221); removing triples of EVERY ontology-typed
     subject is the deterministic equivalent (real builds have exactly one).
     """
-    from pheknowlator_spark.functions.rdf import OWL_ONTOLOGY, RDF_TYPE
-
     ont_nodes = (
         graph.filter((F.col("p") == RDF_TYPE) & (F.col("o") == OWL_ONTOLOGY))
         .select(F.col("s").alias("__ont"))
@@ -160,56 +162,41 @@ def extract_metadata(graph: DataFrame) -> DataFrame:
     The reference takes the FIRST label/description in rdflib iteration
     order (nondeterministic); here the lexicographic minimum is the
     deterministic pick, and synonyms (any predicate containing 'synonym',
-    metadata.py:133) are a sorted distinct array. One aggregation pass per
-    facet, joined on the entity id — no driver loops, ontology-union scale.
+    metadata.py:133) are a sorted distinct array, null when there are
+    none. One ``groupBy`` over the non-anonymous subjects derives every
+    fact with conditional aggregates; a subject that is both a node and a
+    relation gets one row per kind.
     """
-    from pheknowlator_spark.functions.rdf import (
-        OWL_CLASS,
-        OWL_NAMED_INDIVIDUAL,
-        OWL_OBJECT_PROPERTY,
-        RDF_TYPE,
-        RDFS_LABEL,
-    )
-
-    types = graph.filter(F.col("p") == RDF_TYPE)
-    not_bnode = ~is_bnode(F.col("s"))
-    nodes = (
-        types.filter(
-            (F.col("o").contains(OWL_CLASS) | F.col("o").contains(OWL_NAMED_INDIVIDUAL))
-            & (~F.col("s").contains("#"))
-            & not_bnode
-        )
-        .select(F.col("s").alias("uri"), F.lit("nodes").alias("kind"))
-        .distinct()
-    )
-    rels = (
-        types.filter((F.col("o") == OWL_OBJECT_PROPERTY) & not_bnode)
-        .select(F.col("s").alias("uri"), F.lit("relations").alias("kind"))
-        .distinct()
-    )
-    ents = nodes.unionByName(rels)
-
+    p, o = F.col("p"), F.col("o")
     lang_ok = F.col("o_lang").isNull() | (F.col("o_lang") == "en")
-    labels = (
-        graph.filter((F.col("p") == RDFS_LABEL) & lang_ok)
+    is_type = p == RDF_TYPE
+    is_label = (p == RDFS_LABEL) & lang_ok
+    is_desc = (p == IAO_DEFINITION) & lang_ok
+    is_syn = F.lower(p).contains("synonym")
+    facts = (
+        graph.filter(~is_bnode(F.col("s")) & (is_type | is_label | is_desc | is_syn))
         .groupBy(F.col("s").alias("uri"))
-        .agg(F.min("o").alias("label"))
+        .agg(
+            F.max(
+                is_type
+                & (o.contains(OWL_CLASS) | o.contains(OWL_NAMED_INDIVIDUAL))
+                & ~F.col("s").contains("#")
+            ).alias("node"),
+            F.max(is_type & (o == OWL_OBJECT_PROPERTY)).alias("relation"),
+            F.min(F.when(is_label, o)).alias("label"),
+            F.min(F.when(is_desc, o)).alias("description"),
+            F.sort_array(F.collect_set(F.when(is_syn, o))).alias("synonyms"),
+        )
     )
-    descs = (
-        graph.filter((F.col("p") == IAO_DEFINITION) & lang_ok)
-        .groupBy(F.col("s").alias("uri"))
-        .agg(F.min("o").alias("description"))
+    kinds = F.array(
+        F.when(F.col("node"), "nodes"), F.when(F.col("relation"), "relations")
     )
-    syns = (
-        graph.filter(F.lower(F.col("p")).contains("synonym"))
-        .groupBy(F.col("s").alias("uri"))
-        .agg(F.sort_array(F.collect_set("o")).alias("synonyms"))
-    )
-    out = (
-        ents.join(labels, "uri", "inner")  # label required (metadata.py:134)
-        .join(descs, "uri", "left")
-        .join(syns, "uri", "left")
-        .select("uri", "kind", "label", "description", "synonyms")
+    out = facts.filter(F.col("label").isNotNull()).select(
+        "uri",
+        F.explode(F.array_compact(kinds)).alias("kind"),
+        "label",
+        "description",
+        F.when(F.size("synonyms") > 0, F.col("synonyms")).alias("synonyms"),
     )
     builtin = graph.sparkSession.createDataFrame(
         [(u, k, l, d, None) for u, k, l, d in BUILTIN_RELATIONS],

@@ -3,8 +3,9 @@
 Re-expresses reference pkt_kg/owlnets.py:122-225 and
 pkt_kg/utils/kg_utils.py graph-set utilities as joins/filters over the
 triple DataFrame. The reference probes ``graph.triples((x, RDF.type, None))``
-per row (its hottest nested loop, owlnets.py:168-173); here the node-kind
-lookups are two hash joins over the whole table at once.
+per row (its hottest nested loop, owlnets.py:168-173); here one grouped
+pass over the rdf:type rows (:func:`type_flags`) says what every node is,
+and callers join that one dimension where they need it.
 """
 
 from __future__ import annotations
@@ -43,11 +44,23 @@ def remove_disjoint_with(triples: DataFrame) -> DataFrame:
     )
 
 
-def _typed_as(triples: DataFrame, type_uri: str) -> DataFrame:
+def type_flags(triples: DataFrame) -> DataFrame:
+    """What a node's rdf:type rows say about it, one row per typed node:
+    ``[node, is_class, is_cls, is_op]``. ``is_class``: typed owl:Class;
+    ``is_cls``: typed owl:Class or owl:NamedIndividual and no '#' in the
+    node; ``is_op``: typed owl:ObjectProperty. A node with no rdf:type row
+    has no row here."""
+    o = F.col("o")
     return (
-        triples.filter((F.col("p") == RDF_TYPE) & (F.col("o") == type_uri))
-        .select(F.col("s").alias("node"))
-        .distinct()
+        triples.filter(F.col("p") == RDF_TYPE)
+        .groupBy(F.col("s").alias("node"))
+        .agg(
+            F.max(o == OWL_CLASS).alias("is_class"),
+            F.max(
+                o.isin([OWL_CLASS, OWL_NAMED_INDIVIDUAL]) & ~F.col("s").contains("#")
+            ).alias("is_cls"),
+            F.max(o == OWL_OBJECT_PROPERTY).alias("is_op"),
+        )
     )
 
 
@@ -74,8 +87,9 @@ def _exclusion_ok(triples: DataFrame) -> DataFrame:
 
 def filter_owl_semantics(triples: DataFrame) -> DataFrame:
     """P5: the reference's removes_edges_with_owl_semantics
-    (owlnets.py:140-191), re-expressed as broadcast semi/left joins instead
-    of a per-triple ``graph.triples((x, RDF.type, None))`` probe loop.
+    (owlnets.py:140-191), re-expressed as broadcast left joins of one
+    :func:`type_flags` dimension instead of a per-triple
+    ``graph.triples((x, RDF.type, None))`` probe loop.
 
     Keep a URI-URI-URI triple when, after namespace exclusions, either:
     * s and o are typed owl:Class/owl:NamedIndividual (and contain no '#'),
@@ -90,53 +104,23 @@ def filter_owl_semantics(triples: DataFrame) -> DataFrame:
             (~F.col("o_is_literal")) & (~is_bnode(F.col("s"))) & (~is_bnode(F.col("o")))
         )
     )
-    # ONE node-flag dimension from the rdf:type triples (is Class/NI
-    # without '#', is ObjectProperty, has any type) instead of four
-    # separate typed-node dims: one aggregation pass feeds all three
-    # joins, and the identical broadcast subtree is reused across them
-    # (the former shape built four distinct broadcast exchanges)
-    type_flags = (
-        triples.filter(F.col("p") == RDF_TYPE)
-        .groupBy(F.col("s").alias("node"))
-        .agg(
-            F.max(
-                (
-                    F.col("o").isin([OWL_CLASS, OWL_NAMED_INDIVIDUAL])
-                ).cast("int")
-            ).alias("__is_cls_raw"),
-            F.max((F.col("o") == OWL_OBJECT_PROPERTY).cast("int")).alias(
-                "__is_op"
-            ),
-        )
-        .select(
-            "node",
-            (
-                (F.col("__is_cls_raw") == 1) & (~F.col("node").contains("#"))
-            ).alias("__is_cls"),
-            (F.col("__is_op") == 1).alias("__is_op"),
-        )
-    )
-
+    flags = type_flags(triples)
     flagged = (
         uri_triples.join(
             F.broadcast(
-                type_flags.select(
-                    F.col("node").alias("s"), F.col("__is_cls").alias("__s_cls")
-                )
+                flags.select(F.col("node").alias("s"), F.col("is_cls").alias("__s_cls"))
             ),
             "s", "left")
         .join(
             F.broadcast(
-                type_flags.select(
-                    F.col("node").alias("o"), F.col("__is_cls").alias("__o_cls")
-                )
+                flags.select(F.col("node").alias("o"), F.col("is_cls").alias("__o_cls"))
             ),
             "o", "left")
         .join(
             F.broadcast(
-                type_flags.select(
+                flags.select(
                     F.col("node").alias("p"),
-                    F.col("__is_op").alias("__p_obj"),
+                    F.col("is_op").alias("__p_obj"),
                     F.lit(True).alias("__p_typed"),
                 )
             ),
@@ -381,4 +365,4 @@ def resolve_duplicate_predicates(triples: DataFrame) -> DataFrame:
 
 
 def class_nodes(triples: DataFrame) -> DataFrame:
-    return _typed_as(triples, OWL_CLASS)
+    return type_flags(triples).filter("is_class").select("node")

@@ -5,7 +5,7 @@ Re-expresses the reference's OWL-NETS 2.0 algorithm
 
 1. **Root selection (N1)** — decode roots are all non-anonymous owl:Class
    subjects plus qualifying owl:Axiom nodes (annotatedSource/Target typed
-   as Class, owlnets.py:793-799). Pure filters/joins.
+   as Class, owlnets.py:793-799), decided by one grouped pass per subject.
 2. **BNode-forest assignment (J7)** — every anonymous node is attached to
    the root(s) that reach it: one doubling transitive closure over the
    anonymous→anonymous edges (⌈log₂ depth⌉ rounds, so an rdf:List of any
@@ -57,6 +57,7 @@ from pheknowlator_spark.operators.owl_filters import (
     clean_decoded_graph,
     filter_owl_semantics,
     remove_disjoint_with,
+    type_flags,
 )
 from pheknowlator_spark.operators.stats import mode_per_group
 
@@ -75,66 +76,44 @@ def _is_bnode_str(x: str) -> bool:
 # ---------------------------------------------------------------------------
 
 def decode_roots(triples: DataFrame) -> DataFrame:
-    """owl:Class URIs + qualifying owl:Axiom nodes (owlnets.py:793-799)."""
-    classes = (
-        triples.filter(
-            (F.col("p") == RDF_TYPE)
-            & (F.col("o") == OWL_CLASS)
-            & (~is_bnode(F.col("s")))
-        )
-        .select(F.col("s").alias("root"))
-        .distinct()
-    )
-    axioms = (
-        triples.filter((F.col("p") == RDF_TYPE) & (F.col("o") == OWL_AXIOM))
-        .select(F.col("s").alias("axiom"))
-        .distinct()
-    )
-    src = triples.filter(F.col("p") == OWL_ANNOTATED_SOURCE).select(
-        F.col("s").alias("axiom"), F.col("o").alias("src")
-    )
-    tgt = triples.filter(F.col("p") == OWL_ANNOTATED_TARGET).select(
-        F.col("s").alias("axiom"), F.col("o").alias("tgt")
-    )
-    # one aggregated flag dim (node → is-Class, has-any-type) joined on
-    # src and tgt — replaces four separate typed-node dims/joins with two
-    # joins over one shared broadcast subtree
-    type_flags = (
-        triples.filter(F.col("p") == RDF_TYPE)
-        .groupBy(F.col("s").alias("node"))
-        .agg(F.max((F.col("o") == OWL_CLASS).cast("int")).alias("__cls"))
-        .withColumn("__typed", F.lit(True))
-    )
-    ax = (
-        axioms.join(src, "axiom", "left")
-        .join(tgt, "axiom", "left")
-        .join(
-            type_flags.select(
-                F.col("node").alias("src"),
-                (F.col("__cls") == 1).alias("src_cls"),
-                F.col("__typed").alias("src_typed"),
-            ),
-            "src",
-            "left",
-        )
-        .join(
-            type_flags.select(
-                F.col("node").alias("tgt"),
-                (F.col("__cls") == 1).alias("tgt_cls"),
-                F.col("__typed").alias("tgt_typed"),
-            ),
-            "tgt",
-            "left",
+    """owl:Class URIs + qualifying owl:Axiom nodes (owlnets.py:793-799).
+
+    An axiom qualifies when some (annotatedSource, annotatedTarget) pair
+    has both sides typed owl:Class, or one side Class and the other
+    untyped; a missing side counts as untyped. Each case tests one side
+    alone, so "some pair qualifies" is the same test over per-side
+    "some object is a Class" / "some object is untyped" flags, and one
+    ``groupBy(s)`` over the type and annotated rows, with the
+    :func:`type_flags` of their objects, decides every subject.
+    """
+    src, tgt = F.col("p") == OWL_ANNOTATED_SOURCE, F.col("p") == OWL_ANNOTATED_TARGET
+    is_type = F.col("p") == RDF_TYPE
+    flags = type_flags(triples).select(F.col("node").alias("o"), "is_class")
+    # a typed node's is_class is never null: null means no rdf:type row
+    is_class = F.coalesce("is_class", F.lit(False))
+    untyped = F.col("is_class").isNull()
+    facts = (
+        triples.filter(is_type | src | tgt)
+        .join(F.broadcast(flags), "o", "left")
+        .groupBy("s")
+        .agg(
+            F.max(is_type & (F.col("o") == OWL_CLASS)).alias("cls"),
+            F.max(is_type & (F.col("o") == OWL_AXIOM)).alias("ax"),
+            F.max(src).alias("has_src"),
+            F.max(src & is_class).alias("src_cls"),
+            F.max(src & untyped).alias("src_untyped"),
+            F.max(tgt).alias("has_tgt"),
+            F.max(tgt & is_class).alias("tgt_cls"),
+            F.max(tgt & untyped).alias("tgt_untyped"),
         )
     )
-    src_cls = F.coalesce("src_cls", F.lit(False))
-    tgt_cls = F.coalesce("tgt_cls", F.lit(False))
-    src_typed = F.coalesce("src_typed", F.lit(False))
-    tgt_typed = F.coalesce("tgt_typed", F.lit(False))
-    qualifying = ax.filter(
-        (src_cls & tgt_cls) | (src_cls & ~tgt_typed) | (tgt_cls & ~src_typed)
-    ).select(F.col("axiom").alias("root"))
-    return classes.unionByName(qualifying).distinct()
+    src_cls, tgt_cls = F.col("src_cls"), F.col("tgt_cls")
+    src_untyped = F.col("src_untyped") | ~F.col("has_src")
+    tgt_untyped = F.col("tgt_untyped") | ~F.col("has_tgt")
+    axiom_ok = (src_cls & tgt_cls) | (src_cls & tgt_untyped) | (tgt_cls & src_untyped)
+    return facts.filter(
+        (F.col("cls") & ~is_bnode(F.col("s"))) | (F.col("ax") & axiom_ok)
+    ).select(F.col("s").alias("root"))
 
 
 # ---------------------------------------------------------------------------
@@ -364,9 +343,6 @@ def _decode_forest(root: str, rows: list[tuple[str, str, str, bool]]):
             **edge_dict.get(sc, {}),
             **{k: v for k, v in edges.items() if k != "subClassOf"},
         }
-
-    if OWL_AXIOM in root_types and not bnode_dict:
-        pass  # handled above (direct URIRef axiom)
 
     elements = list(edge_dict.keys())
     for element in elements:

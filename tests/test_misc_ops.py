@@ -7,10 +7,14 @@ import hashlib
 from pyspark.sql import functions as F
 
 from pheknowlator_spark.functions.rdf import (
+    OBO,
+    OBOINOWL,
     OWL_CLASS,
+    OWL_NS,
     PKT,
     PKT_BNODE,
     RDF_TYPE,
+    RDFS_LABEL,
     RDFS_SUBCLASSOF,
     add_bnode_namespace,
     remove_bnode_namespace,
@@ -100,47 +104,97 @@ def test_adds_ontology_annotations_replaces_header(spark):
     assert len(rows) == 1 + 7
 
 
+META_ROWS = [
+    ("http://o/C1", RDF_TYPE, OWL_CLASS, False, None, None),
+    ("http://o/C1", RDFS_LABEL, "gene", True, None, None),
+    ("http://o/C1", RDFS_LABEL, "aaa-first", True, None, None),  # min() pick
+    ("http://o/C1", RDFS_LABEL, "zz-german", True, "de", None),  # lang-filtered
+    ("http://o/C1", OBO + "IAO_0000115", "a gene region", True, None, None),
+    ("http://o/C1", OBOINOWL + "hasExactSynonym", "locus", True, None, None),
+    ("http://o/C1", OBOINOWL + "hasExactSynonym", "allele", True, None, None),
+    ("http://o/C2", RDF_TYPE, OWL_CLASS, False, None, None),  # no label
+    ("http://o/R1", RDF_TYPE, OWL_NS + "ObjectProperty", False, None, None),
+    ("http://o/R1", RDFS_LABEL, "part of", True, "en", None),
+    ("http://o/R1", OBO + "IAO_0000115", "Teil von", True, "de", None),
+    ("http://o/has#frag", RDF_TYPE, OWL_CLASS, False, None, None),  # '#'
+    ("http://o/has#frag", RDFS_LABEL, "x", True, None, None),
+    ("http://o/rel#frag", RDF_TYPE, OWL_NS + "ObjectProperty", False, None, None),
+    ("http://o/rel#frag", RDFS_LABEL, "frag rel", True, None, None),
+    ("http://o/CP", RDF_TYPE, OWL_CLASS, False, None, None),  # punned
+    ("http://o/CP", RDF_TYPE, OWL_NS + "ObjectProperty", False, None, None),
+    ("http://o/CP", RDFS_LABEL, "both", True, None, None),
+    ("http://o/NI", RDF_TYPE, OWL_NS + "NamedIndividual", False, None, None),
+    ("http://o/NI", RDFS_LABEL, "an individual", True, None, None),
+    ("bnode:b1", RDF_TYPE, OWL_CLASS, False, None, None),  # anonymous
+    ("bnode:b1", RDFS_LABEL, "blank", True, None, None),
+    # an axiom reification: no metadata, but a decode root
+    ("bnode:ax", RDF_TYPE, OWL_NS + "Axiom", False, None, None),
+    ("bnode:ax", OWL_NS + "annotatedSource", "http://o/C1", False, None, None),
+    ("bnode:ax", OWL_NS + "annotatedTarget", "http://o/CP", False, None, None),
+]
+
+
 def test_extract_metadata_roundtrip(spark):
     # extract_metadata (metadata.py:101-155): label-gated, kind split,
     # synonym aggregation; builtin subClassOf/type relations appended
     from pheknowlator_spark.operators.metadata import extract_metadata
 
-    owl = "http://www.w3.org/2002/07/owl#"
-    rdf_t = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    lbl = "http://www.w3.org/2000/01/rdf-schema#label"
-    iao = "http://purl.obolibrary.org/obo/IAO_0000115"
-    syn = "http://www.geneontology.org/formats/oboInOwl#hasExactSynonym"
-    rows = [
-        ("http://o/C1", rdf_t, owl + "Class", False, None, None),
-        ("http://o/C1", lbl, "gene", True, None, None),
-        ("http://o/C1", lbl, "aaa-first", True, None, None),  # min() pick
-        ("http://o/C1", lbl, "zz-german", True, "de", None),  # lang-filtered
-        ("http://o/C1", iao, "a gene region", True, None, None),
-        ("http://o/C1", syn, "locus", True, None, None),
-        ("http://o/C1", syn, "allele", True, None, None),
-        ("http://o/C2", rdf_t, owl + "Class", False, None, None),  # no label
-        ("http://o/R1", rdf_t, owl + "ObjectProperty", False, None, None),
-        ("http://o/R1", lbl, "part of", True, "en", None),
-        ("http://o/has#frag", rdf_t, owl + "Class", False, None, None),  # '#'
-        ("http://o/has#frag", lbl, "x", True, None, None),
-    ]
-    g = spark.createDataFrame(
-        rows,
-        "s string, p string, o string, o_is_literal boolean, "
-        "o_lang string, o_datatype string",
-    )
-    meta = extract_metadata(g)
-    by_uri = {r.uri: r for r in meta.collect()}
-    assert set(by_uri) == {
-        "http://o/C1", "http://o/R1",
-        "http://www.w3.org/2000/01/rdf-schema#subClassOf",
-        "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
+    meta = extract_metadata(spark.createDataFrame(META_ROWS, TRIPLE_SCHEMA))
+    by_key = {(r.uri, r.kind): r for r in meta.collect()}
+    assert meta.count() == len(by_key)
+    assert set(by_key) == {
+        ("http://o/C1", "nodes"),
+        ("http://o/R1", "relations"),
+        ("http://o/rel#frag", "relations"),  # '#' only excludes nodes
+        ("http://o/CP", "nodes"),
+        ("http://o/CP", "relations"),
+        ("http://o/NI", "nodes"),
+        (RDFS_SUBCLASSOF, "relations"),
+        (RDF_TYPE, "relations"),
     }
-    c1 = by_uri["http://o/C1"]
-    assert c1.kind == "nodes" and c1.label == "aaa-first"
+    c1 = by_key["http://o/C1", "nodes"]
+    assert c1.label == "aaa-first"
     assert c1.description == "a gene region"
     assert c1.synonyms == ["allele", "locus"]
-    assert by_uri["http://o/R1"].kind == "relations"
+    r1 = by_key["http://o/R1", "relations"]
+    assert r1.label == "part of"
+    assert r1.description is None  # German only
+    assert r1.synonyms is None  # none, not []
+    assert by_key["http://o/CP", "relations"].label == "both"
+
+
+# Spark jobs one call issues on META_ROWS, the maximum of 5 runs. Each
+# run read the same count, over 3 sessions; the per-facet aggregate-and-
+# join chains these passes replaced read 9, 9 and 5.
+NODE_FACT_JOBS = {"extract_metadata": 2, "decode_roots": 4, "metadata_triples": 3}
+
+
+def test_node_fact_job_budget(spark):
+    """Job budget of the build's node-fact passes, the first rows of the
+    ROADMAP's job and stage budget table (direction 4): each derives its
+    per-key facts in one grouped pass, so a new per-facet aggregate or
+    join shows up here. Counted from statusTracker over ``collect()`` on
+    checkpointed input."""
+    from pheknowlator_spark.operators.metadata import extract_metadata, metadata_triples
+    from pheknowlator_spark.operators.owlnets import decode_roots
+
+    g = spark.createDataFrame(META_ROWS, TRIPLE_SCHEMA).localCheckpoint(eager=True)
+    meta = extract_metadata(g).localCheckpoint(eager=True)
+    nodes = g.select(F.col("s").alias("uri")).localCheckpoint(eager=True)
+    calls = {
+        "extract_metadata": lambda: extract_metadata(g),
+        "decode_roots": lambda: decode_roots(g),
+        "metadata_triples": lambda: metadata_triples(nodes, meta),
+    }
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(call):
+        before = set(tracker.getJobIdsForGroup())
+        call().collect()
+        return len(set(tracker.getJobIdsForGroup()) - before)
+
+    got = {name: max(jobs(call) for _ in range(5)) for name, call in calls.items()}
+    assert got == NODE_FACT_JOBS
 
 
 def test_whitespace_delimited_scan(spark, tmp_path):

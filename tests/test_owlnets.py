@@ -185,6 +185,73 @@ def test_axiom_direct_decode(spark):
     assert (A, RDFS_SUBCLASSOF, B) in got
 
 
+SRC, TGT = OWL_NS + "annotatedSource", OWL_NS + "annotatedTarget"
+NI, U = OWL_NS + "NamedIndividual", OBO + "U_1"  # U_1: no rdf:type row
+# one axiom per case: (case, its rows, whether it is a decode root)
+AXIOM_CASES = [
+    ("both_sides_class", [(SRC, A), (TGT, B)], True),
+    ("individual_untyped_sources_class_target", [(SRC, C), (SRC, U), (TGT, B)], True),
+    ("class_untyped_sources_untyped_target", [(SRC, A), (SRC, U), (TGT, U)], True),
+    ("class_untyped_sources_individual_target", [(SRC, A), (SRC, U), (TGT, C)], False),
+    ("missing_source_class_target", [(TGT, B)], True),
+    ("missing_source_untyped_target", [(TGT, U)], False),
+    ("missing_target_class_source", [(SRC, A)], True),
+    ("missing_target_individual_source", [(SRC, C)], False),
+    ("target_typed_not_class", [(SRC, A), (TGT, C)], False),
+    ("no_sides", [], False),
+]
+
+
+def _roots_model(rows):
+    """Decode roots by the pair rule: a non-anonymous owl:Class subject, or
+    an owl:Axiom with some (annotatedSource, annotatedTarget) pair where
+    both sides are Classes, or one is and the other is untyped; a missing
+    side is an untyped, non-Class None."""
+    types = {}
+    for s, p, o, *_ in rows:
+        if p == RDF_TYPE:
+            types.setdefault(s, set()).add(o)
+
+    def cls(n):
+        return OWL_CLASS in types.get(n, ())
+
+    def side(ax, p):
+        return [o for s, q, o, *_ in rows if s == ax and q == p] or [None]
+
+    roots = {s for s in types if cls(s) and not s.startswith("bnode:")}
+    for ax in (s for s, ts in types.items() if OWL_AXIOM in ts):
+        if any(
+            (cls(a) and cls(b))
+            or (cls(a) and b not in types)
+            or (cls(b) and a not in types)
+            for a in side(ax, SRC)
+            for b in side(ax, TGT)
+        ):
+            roots.add(ax)
+    return roots
+
+
+def test_decode_roots_axiom_rule(spark):
+    """N1's axiom rule, case by case, against the pair-rule model; a
+    Class-typed blank node and a non-axiom with annotatedSource/Target
+    rows are no roots."""
+    rows = [
+        t(A, RDF_TYPE, OWL_CLASS), t(B, RDF_TYPE, OWL_CLASS),
+        t(C, RDF_TYPE, NI),
+        t("bnode:cls", RDF_TYPE, OWL_CLASS),
+        t("bnode:plain", SRC, A), t("bnode:plain", TGT, B),
+    ]
+    for case, sides, _ in AXIOM_CASES:
+        rows += [t("bnode:" + case, RDF_TYPE, OWL_AXIOM)]
+        rows += [t("bnode:" + case, p, o) for p, o in sides]
+    roots = {r.root for r in decode_roots(make_triples(spark, rows)).collect()}
+    assert roots == _roots_model(rows)
+    assert {case for case, _, _ in AXIOM_CASES if "bnode:" + case in roots} == {
+        case for case, _, is_root in AXIOM_CASES if is_root
+    }
+    assert {A, B} <= roots and not {"bnode:cls", "bnode:plain"} & roots
+
+
 def test_cardinality_captured_not_decoded(spark):
     rows = [
         t(X, RDF_TYPE, OWL_CLASS),
